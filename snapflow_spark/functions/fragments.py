@@ -20,7 +20,9 @@ keep it safe:
   alias the memoized fragment fresh at each use site (``.alias()`` is
   one cheap round trip).
 - Keys must capture EVERY input that shapes the expression (column
-  name, thresholds, stop lists, salts). Helpers that accept a
+  name, thresholds, stop lists, salts). A key is a TUPLE of those
+  inputs, never a delimiter-joined string: a column name or salt
+  containing the delimiter could make two distinct inputs collide. Helpers that accept a
   ``str | Column`` input memoize only the plain-string form — a Column
   argument may close over arbitrary caller state, so it builds fresh.
 - Plans only, never data: the memo stores expression trees. Every
@@ -43,7 +45,7 @@ value-exactness of every fragment consumer.
 from __future__ import annotations
 
 import weakref
-from typing import Callable, TypeVar
+from typing import Callable, Hashable, TypeVar
 
 __all__ = ["memo_fragment"]
 
@@ -53,16 +55,19 @@ _MAX_KEYS = 4096
 T = TypeVar("T")  # a Column, or an immutable container of Columns
 
 
-def memo_fragment(key: str, build: Callable[[], T]) -> T:
+def memo_fragment(key: tuple[Hashable, ...], build: Callable[[], T]) -> T:
     """Return ``build()`` memoized per (active SparkContext, key).
 
-    ``key`` must uniquely determine the expression(s) ``build``
-    produces (include column names and every parameter). The returned
+    ``key`` is a tuple that must uniquely determine the expression(s)
+    ``build`` produces: a namespace string, then the column names and
+    every parameter as separate elements. The returned
     value is shared — callers must not mutate it and must ``.alias()``
     fresh at each use site. With no active SparkContext, builds
     fresh."""
     from pyspark import SparkContext
 
+    if not isinstance(key, tuple):
+        raise TypeError(f"memo_fragment key must be a tuple, got {key!r}")
     sc = SparkContext._active_spark_context
     if sc is None:
         return build()

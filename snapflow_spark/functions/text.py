@@ -71,7 +71,7 @@ def bpe_tokens_expr(col: str | Column) -> Column:
     training-data pipeline budgets by. Pure JVM regex."""
     if isinstance(col, str):
         return memo_fragment(
-            f"text.bpe_tokens|{col}",
+            ("text.bpe_tokens", col),
             lambda: F.regexp_extract_all(F.col(col), F.lit(BPE_RE), 0),
         )
     return F.regexp_extract_all(col, F.lit(BPE_RE), 0)
@@ -113,7 +113,7 @@ def tokens_expr(col: str | Column) -> Column:
     construction."""
     if isinstance(col, str):
         return memo_fragment(
-            f"text.tokens|{col}",
+            ("text.tokens", col),
             lambda: F.regexp_extract_all(F.col(col), F.lit(TOKEN_RE), 0),
         )
     return F.regexp_extract_all(col, F.lit(TOKEN_RE), 0)
@@ -122,7 +122,7 @@ def tokens_expr(col: str | Column) -> Column:
 def token_count_expr(col: str | Column) -> Column:
     if isinstance(col, str):
         return memo_fragment(
-            f"text.token_count|{col}", lambda: F.size(tokens_expr(col))
+            ("text.token_count", col), lambda: F.size(tokens_expr(col))
         )
     return F.size(tokens_expr(col))
 
@@ -146,7 +146,7 @@ def lang_id_expr(col: str | Column) -> Column:
     algebra -> whole-stage codegen, no UDF."""
     if isinstance(col, str):
         return memo_fragment(
-            f"text.lang_id|{col}", lambda: lang_id_expr(F.col(col))
+            ("text.lang_id", col), lambda: lang_id_expr(F.col(col))
         )
     c = col
     toks = F.regexp_extract_all(F.lower(c), F.lit(r"[\p{L}]+"), 0)
@@ -174,7 +174,7 @@ def quality_score_expr(col: str | Column) -> Column:
     pre-training corpus filters), as one codegen expression."""
     if isinstance(col, str):
         return memo_fragment(
-            f"text.quality_score|{col}",
+            ("text.quality_score", col),
             lambda: quality_score_expr(F.col(col)),
         )
     c = col
@@ -257,7 +257,7 @@ def fingerprint_expr(col: str | Column, n_chars: int = 64) -> Column:
     whitespace-normalized lowercased text — the exact-dedup key."""
     if isinstance(col, str):
         return memo_fragment(
-            f"text.fingerprint|{col}|{n_chars}",
+            ("text.fingerprint", col, n_chars),
             lambda: fingerprint_expr(F.col(col), n_chars),
         )
     normalized = F.regexp_replace(F.trim(F.lower(col)), r"\s+", " ")

@@ -78,7 +78,7 @@ def host_expr(url: Column | str) -> Column:
         from snapflow_spark.functions.fragments import memo_fragment
 
         return memo_fragment(
-            f"urls.host|{url}", lambda: host_expr(F.col(url))
+            ("urls.host", url), lambda: host_expr(F.col(url))
         )
     return F.lower(F.regexp_extract(F.trim(url), r"^[^:/?#]+://([^/?#]+)", 1))
 
@@ -101,7 +101,7 @@ def registered_domain_expr(host: Column | str, psl=None) -> Column:
         from snapflow_spark.functions.fragments import memo_fragment
 
         return memo_fragment(
-            f"urls.registered_domain|{host}|{psl}",
+            ("urls.registered_domain", host, psl),
             lambda: registered_domain_expr(F.col(host), psl),
         )
     if psl == "heuristic":
@@ -132,7 +132,7 @@ def normalize_url_expr(url: Column | str) -> Column:
         from snapflow_spark.functions.fragments import memo_fragment
 
         return memo_fragment(
-            f"urls.normalize|{url}", lambda: normalize_url_expr(F.col(url))
+            ("urls.normalize", url), lambda: normalize_url_expr(F.col(url))
         )
     u = F.trim(F.regexp_replace(_c(url), "#.*$", ""))  # 1. fragment, then trim
     scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.-]*)://", 1))

@@ -5,6 +5,13 @@ each ``append`` writes one immutable snapshot dir; readers union any
 subset. Parquet dirs written by executors scale to any size — the
 store itself is only naming + listing, so the metadata cost is O(#
 snapshots), never O(rows).
+
+Each snapshot dir written by the store carries a ``_SCHEMA`` record
+(the Spark schema JSON, written into the temp dir before the commit
+rename), so ``read`` hands Spark the schema instead of paying a
+footer-inference job per read. Dirs without the record (written by
+other producers, or before the record existed) are inferred as
+before.
 """
 
 from __future__ import annotations
@@ -14,6 +21,9 @@ from pathlib import Path
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+_SCHEMA = "_SCHEMA"
 
 
 class SnapshotStore:
@@ -79,7 +89,22 @@ class SnapshotStore:
         if tmp.exists():  # crashed earlier write of this id
             shutil.rmtree(tmp)
         df.write.mode("errorifexists").parquet(str(tmp))
+        (tmp / _SCHEMA).write_text(df.schema.json())
         os.rename(tmp, target)
+
+    def _recorded_schema(self, ids: list[str]) -> StructType | None:
+        """The schema every snapshot in ``ids`` recorded at commit, or
+        None (infer) when any dir lacks the record or two records
+        differ — a mixed set keeps Spark's own first-footer choice."""
+        import json
+
+        try:
+            recs = {(self.path / sid / _SCHEMA).read_text() for sid in ids}
+        except OSError:
+            return None
+        if len(recs) != 1:
+            return None
+        return StructType.fromJson(json.loads(recs.pop()))
 
     def append(self, df: DataFrame) -> str:
         """Write one immutable snapshot; returns its id.
@@ -112,7 +137,8 @@ class SnapshotStore:
         commit protocol as ``_write_snapshot``. Returns None (caller
         falls back to the Spark write) when the source is gone or not
         a committed snapshot. ``_RETIRES`` is deliberately NOT copied:
-        it masks ids in the SOURCE store, meaningless here."""
+        it masks ids in the SOURCE store, meaningless here; the
+        ``_SCHEMA`` record is (the rows are the same)."""
         import shutil
 
         if not (src / "_SUCCESS").exists():
@@ -133,6 +159,8 @@ class SnapshotStore:
                     os.link(p, tmp / p.name)
                 except OSError:
                     shutil.copy2(p, tmp / p.name)
+            if (src / _SCHEMA).exists():
+                shutil.copy2(src / _SCHEMA, tmp / _SCHEMA)
             (tmp / "_SUCCESS").touch()
             os.rename(tmp, self.path / sid)
         except OSError:
@@ -178,6 +206,10 @@ class SnapshotStore:
                 reader = spark.read
                 if merge_schema:
                     reader = reader.option("mergeSchema", "true")
+                else:
+                    schema = self._recorded_schema(cur)
+                    if schema is not None:
+                        reader = reader.schema(schema)
                 df = reader.parquet(*[str(self.path / sid) for sid in cur])
                 if not merge_schema and len(cur) == 1:
                     # Identity-copy marker (round 17, snapflow's A10
@@ -274,6 +306,7 @@ class SnapshotStore:
         if tmp.exists():  # crashed earlier write of this id
             shutil.rmtree(tmp)
         merged.write.mode("errorifexists").parquet(str(tmp))
+        (tmp / _SCHEMA).write_text(merged.schema.json())
         (tmp / "_RETIRES").write_text(json.dumps(retires))
         os.rename(tmp, target)  # atomic: publishes merged + masks old
 

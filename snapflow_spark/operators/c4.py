@@ -165,8 +165,12 @@ def c4_signals(
     # 18, functions/fragments.py — ~200 round trips per construction,
     # rebuilt identically per bench rep); aliasing stays per-use.
     stage_key = (
-        f"c4.stage|{text_col}|{mw}|{default_policy!r}|"
-        f"{sorted((policy_by_lang or {}).items())!r}|{lang_col}"
+        "c4.stage",
+        text_col,
+        mw,
+        repr(default_policy),
+        repr(sorted((policy_by_lang or {}).items())),
+        lang_col,
     )
 
     def _build_stage() -> dict[str, Column]:
@@ -195,8 +199,11 @@ def c4_signals(
         return {"__c4_lines": lines, "__c4_kept": kept}
 
     sig_key = (
-        f"c4.signals|{text_col}|{tuple(badwords)!r}|"
-        f"{sorted((badwords_by_lang or {}).items())!r}|{lang_col}"
+        "c4.signals",
+        text_col,
+        repr(tuple(badwords)),
+        repr(sorted((badwords_by_lang or {}).items())),
+        lang_col,
     )
 
     def _build_signals() -> dict[str, Column]:
@@ -256,7 +263,7 @@ def c4_pass_expr(min_num_sentences: int | None = None) -> Column:
         else min_num_sentences
     )
     return memo_fragment(
-        f"c4.pass|{ms}",
+        ("c4.pass", ms),
         lambda: (
             (F.col("c4_has_lorem_ipsum") == 0)
             & (F.col("c4_has_curly") == 0)

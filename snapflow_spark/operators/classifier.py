@@ -138,7 +138,7 @@ def featurize_docs(
     from snapflow_spark.functions.fragments import memo_fragment
 
     bkts = memo_fragment(
-        f"classifier.bkts|__toks|{salt}|{num_buckets}",
+        ("classifier.bkts", "__toks", salt, num_buckets),
         lambda: F.coalesce(
             F.transform(
                 grams_expr(F.col("__toks")),

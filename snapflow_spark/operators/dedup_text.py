@@ -38,7 +38,7 @@ def _distinct_grams_frag(text_col: str, n: int):
     18, functions/fragments.py: the zip_with n-gram fold costs ~60
     py4j round trips per construction and is rebuilt per bench rep)."""
     return memo_fragment(
-        f"dedup.distinct_grams|{text_col}|{n}",
+        ("dedup.distinct_grams", text_col, n),
         lambda: F.array_distinct(ngram_expr(tokens_expr(text_col), n)),
     )
 from snapflow_spark.operators.buckets import bucketed_pairs
@@ -148,7 +148,7 @@ def simhash_sha_candidates(
     from snapflow_spark.functions.text import simhash_sha_bands_udf
 
     bands_call = memo_fragment(
-        f"dedup.simhash_sha_bands|{text_col}",
+        ("dedup.simhash_sha_bands", text_col),
         lambda: simhash_sha_bands_udf(text_col),
     )
     banded = (
@@ -302,7 +302,7 @@ def minhash_sha_candidates(
     from snapflow_spark.functions.text import minhash_sha_bands_udf
 
     bands_call = memo_fragment(
-        f"dedup.minhash_sha_bands|{text_col}",
+        ("dedup.minhash_sha_bands", text_col),
         lambda: minhash_sha_bands_udf(text_col),
     )
     banded = (
@@ -344,7 +344,7 @@ def mingram_candidates(
     reproducibility for higher recall.
     """
     blk = memo_fragment(
-        "dedup.minblk|grams",
+        ("dedup.minblk", "grams"),
         lambda: F.array_min(F.transform("grams", lambda g: F.sha2(g, 256))),
     )
     blocked = (
@@ -714,14 +714,14 @@ def shared_span_pairs(
     # over, and the one surviving value per pair is re-rendered
     # lower(hex(...)), bit-identical to sha2's hex output.
     gram_h = memo_fragment(
-        f"dedup.gram_hashes_bin|{text_col}|{n}",
+        ("dedup.gram_hashes_bin", text_col, n),
         lambda: F.transform(
             ngram_expr(tokens_expr(text_col), n),
             lambda s: F.unhex(F.sha2(s, 256)),
         ),
     )
     winnow = memo_fragment(
-        f"dedup.winnow|__h|{w}",
+        ("dedup.winnow", "__h", w),
         lambda: winnow_fingerprints_expr(F.col("__h"), w=w),
     )
     staged = ensure_parallelism(df).select(
@@ -895,7 +895,7 @@ def excise_shared_spans(
         tokens_expr(text_col).alias("__toks"),
     ).where(F.size("__toks") >= int(n))
     hashed_grams = memo_fragment(
-        f"dedup.excise_grams|__toks|{n}|{hash_fn}",
+        ("dedup.excise_grams", "__toks", n, hash_fn),
         lambda: F.transform(ngram_expr(F.col("__toks"), n), hasher),
     )
     grams = toks.select(

@@ -358,8 +358,11 @@ def gopher_signals(
     # rebuilt identically per bench rep. Key carries every input that
     # shapes the expressions; aliasing happens fresh per use below.
     frag_key = (
-        f"gopher.base|{text_col}|{stopwords!r}|"
-        f"{sorted((stopwords_by_lang or {}).items())!r}|{lang_col}"
+        "gopher.base",
+        text_col,
+        repr(stopwords),
+        repr(sorted((stopwords_by_lang or {}).items())),
+        lang_col,
     )
 
     def _build_base() -> dict[str, Column]:
@@ -425,7 +428,7 @@ def gopher_signals(
     # and the field reads are memoized like the battery above (the
     # pandas_udf wrapper re-serializes the function per call).
     rep_call = memo_fragment(
-        f"gopher.rep|{text_col}",
+        ("gopher.rep", text_col),
         lambda: _rep_signals_udf(F.col(text_col)),
     )
     with_rep = base.select("*", rep_call.alias("__rep"))
@@ -433,7 +436,7 @@ def gopher_signals(
         "*",
         *[
             memo_fragment(
-                f"gopher.repfield|{f}", lambda f=f: F.col("__rep")[f]
+                ("gopher.repfield", f), lambda f=f: F.col("__rep")[f]
             ).alias(f)
             for f in _REP_FIELDS
         ],
@@ -457,9 +460,7 @@ def gopher_pass_expr(thresholds: dict[str, float] | None = None) -> Column:
             cond = cond & (c >= t[key] if op == ">=" else c <= t[key])
         return F.coalesce(cond, F.lit(False))
 
-    return memo_fragment(
-        f"gopher.pass|{sorted(t.items())!r}", _build
-    )
+    return memo_fragment(("gopher.pass", repr(sorted(t.items()))), _build)
 
 
 def gopher_quality_filter(

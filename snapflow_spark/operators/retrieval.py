@@ -41,7 +41,7 @@ def word_tokens_expr(col: str | Column) -> Column:
         from snapflow_spark.functions.fragments import memo_fragment
 
         return memo_fragment(
-            f"retrieval.word_tokens|{col}",
+            ("retrieval.word_tokens", col),
             lambda: F.regexp_extract_all(
                 F.lower(F.col(col)), F.lit(WORD_RE), 0
             ),

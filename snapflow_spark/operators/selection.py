@@ -90,7 +90,7 @@ def _grams_frag() -> Column:
     that name, memoized per context (round 18: the zip_with fold is
     ~30 py4j round trips per construction)."""
     return memo_fragment(
-        "selection.grams|__toks", lambda: grams_expr(F.col("__toks"))
+        ("selection.grams", "__toks"), lambda: grams_expr(F.col("__toks"))
     )
 
 
@@ -183,7 +183,7 @@ def _occ_with_model(
     runs STANDALONE on a saturated cluster — revisit only with
     cluster-scale evidence."""
     bucket = memo_fragment(
-        f"selection.bucket|__g|{salt}|{num_buckets}",
+        ("selection.bucket", "__g", salt, num_buckets),
         lambda: _hash_bucket(F.col("__g"), salt, num_buckets),
     )
     occ = tagged.select(

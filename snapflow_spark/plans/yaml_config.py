@@ -1445,14 +1445,16 @@ def _merge_delta_node(
     keys: list[str],
     when_matched: str | dict | None = "update",
     when_not_matched: str | None = "insert",
-) -> DataFrame:
+) -> None:
     """core.merge_delta (round 15): apply the input changelog onto a
     Delta table by key (MERGE — the CDC apply shape;
     sources.delta.merge_delta: distributed DV replace-by-key +
     same-commit inserts, touched-file discovery from the source key
-    bounds) and return the post-merge table read so downstream nodes
-    see the upserted state."""
-    from snapflow_spark.sources.delta import merge_delta, read_delta
+    bounds).  A table SINK: returns None, so the node's own store
+    stays empty — the Delta table at ``path`` is the output; read it
+    with ``sources.delta.read_delta`` (or a ``core.scan_delta``
+    node)."""
+    from snapflow_spark.sources.delta import merge_delta
 
     merge_delta(
         spark,
@@ -1462,7 +1464,6 @@ def _merge_delta_node(
         when_matched=when_matched,
         when_not_matched=when_not_matched,
     )
-    return read_delta(spark, path)
 
 
 def _upsert_iceberg_node(
@@ -1470,19 +1471,17 @@ def _upsert_iceberg_node(
     input: DataFrame,  # noqa: A002
     path: str,
     keys: list[str],
-) -> DataFrame:
+) -> None:
     """core.upsert_iceberg (round 15): apply the input changelog onto
     an Iceberg table by key (sources.iceberg.upsert_iceberg — the
     Flink upsert commit: ONE snapshot carrying an equality-delete
     file + the new data at the same sequence, O(keys + rows), no
-    table scan) and return the post-upsert table read."""
-    from snapflow_spark.sources.iceberg import (
-        read_iceberg,
-        upsert_iceberg,
-    )
+    table scan).  A table SINK like core.merge_delta: returns None;
+    read the table with ``sources.iceberg.read_iceberg`` (or a
+    ``core.scan_iceberg`` node)."""
+    from snapflow_spark.sources.iceberg import upsert_iceberg
 
     upsert_iceberg(spark, path, input, keys=list(keys))
-    return read_iceberg(spark, path)
 
 
 def _scan_avro(

@@ -253,9 +253,11 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pure fragments of fixed column names — memoized per context
     # (round 18, functions/fragments.py; the PSL longest-match tower
     # alone is several hundred py4j round trips per construction)
-    synth_url = memo_fragment("northstar.synth_url|doc_id", _build_synth_url)
+    synth_url = memo_fragment(
+        ("northstar.synth_url", "doc_id"), _build_synth_url
+    )
     url_fp = memo_fragment(
-        "northstar.url_fp|url",
+        ("northstar.url_fp", "url"),
         lambda: F.concat(
             registered_domain_expr(host_expr("url")),
             F.lit("|"),
@@ -1216,11 +1218,11 @@ def q_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     gram_h = memo_fragment(
-        "northstar.winnow_gram_hashes|text|3",
+        ("northstar.winnow_gram_hashes", "text", 3),
         lambda: gram_hashes_expr(tokens_expr("text"), n=3),
     )
     winnow_fps = memo_fragment(
-        "northstar.winnow_fps|h|4",
+        ("northstar.winnow_fps", "h", 4),
         lambda: winnow_fingerprints_expr(F.col("h"), w=4),
     )
     staged = d.select("doc_id", gram_h.alias("h")).select(
@@ -2238,7 +2240,7 @@ def q_embed_near_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (_vec_member). Interleaved A/B: 1.69 s -> 0.93 s warm at sf0.1,
     # results value-identical.
     cell_bands = memo_fragment(
-        "northstar.cell_bands|embedding",
+        ("northstar.cell_bands", "embedding"),
         lambda: _cell_bands_udf("embedding"),
     )
     banded = emb.select("vec_id", "embedding").select(

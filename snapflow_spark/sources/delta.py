@@ -1679,9 +1679,8 @@ def delete_from_delta(
     over the table's LOGICAL columns (partition columns included).
     Returns the number of rows newly deleted.
 
-    Plan shape (round 15 — fully distributed): one tiny per-file
-    count aggregate finds the touched files, then the matched
-    (file, pos) pairs shuffle by file and each file's DV sidecar is
+    Plan shape (fully distributed, one job): the matched (file, pos)
+    pairs shuffle by file and each touched file's DV sidecar is
     merged with its old one and written EXECUTOR-side in an
     ``applyInPandas`` stage — the driver holds only one descriptor
     row per touched file at ANY delete breadth (a
@@ -1767,14 +1766,17 @@ def _dv_delete_plan(
     holding both kinds of rows.
 
     Scale shape (round 15 — distributed, the delete_from_iceberg
-    discipline): a tiny per-file count aggregate finds the TOUCHED
-    files (O(#files) driver rows), then the matched (file, pos) pairs
-    shuffle by file and each file's new DV sidecar is merged with its
-    old one and WRITTEN entirely executor-side inside
-    ``applyInPandas`` — the driver only ever holds one descriptor row
-    per touched file, never a row-index list, at any delete breadth.
-    Per-task memory is O(deleted rows in ONE file), the same bound a
-    delta-spark scan task's bitmap build has."""
+    discipline): ONE job — the matched (file, pos) pairs shuffle by
+    file, so only TOUCHED files get a task, and each file's new DV
+    sidecar is merged with its old one and WRITTEN entirely
+    executor-side inside ``applyInPandas`` — the driver only ever
+    holds one descriptor row per touched file, never a row-index
+    list, at any delete breadth.  A task learns its file's physical
+    row count (the whole-file-drop test) from the add's
+    ``numRecords`` stat, or from the file's footer when the add
+    carries no stats.  Per-task memory is O(deleted rows in ONE
+    file), the same bound a delta-spark scan task's bitmap build
+    has."""
     cond = (
         F.expr(condition) if isinstance(condition, str) else condition
     )
@@ -1848,7 +1850,22 @@ def _dv_delete_plan(
     ]
     if not kept:
         return [], 0, 0
-    uri_to_rel = {hadoop_file_uri(p): rel for rel, p, _pv, _st in kept}
+    # per-kept-file metadata the DV tasks need: old descriptors, stat
+    # row counts, footer paths for stat-less adds
+    uri_to_rel: dict[str, str] = {}
+    old_descs: dict[str, dict] = {}
+    file_totals: dict[str, int] = {}
+    footer_paths: dict[str, str] = {}
+    for rel, p, _pv, st in kept:
+        uri = hadoop_file_uri(p)
+        uri_to_rel[uri] = rel
+        if snap.dvs.get(rel):
+            old_descs[uri] = snap.dvs[rel]
+        n = (st or {}).get("numRecords")
+        if n is None:
+            footer_paths[uri] = p
+        else:
+            file_totals[uri] = int(n)
     df = spark.read.schema(data_schema).parquet(
         *[p for _r, p, _pv, _st in kept]
     )
@@ -1910,30 +1927,13 @@ def _dv_delete_plan(
             cond = F.col("__dv_mm").isNull()
         else:
             cond = F.col("__dv_mm").isNotNull()
-    # stage A — tiny JVM-side aggregate: per-file totals + hit counts
-    # (O(#kept files) driver rows; NEVER row indexes)
-    per_file = df.groupBy("__df_file").agg(
-        F.count(F.lit(1)).alias("__total"),
-        F.count(F.when(cond, F.lit(1))).alias("__hits"),
-    ).collect()
-    totals: dict[str, int] = {}
-    for row in per_file:
-        uri = row["__df_file"]
-        if uri not in uri_to_rel:
-            raise RuntimeError(
-                f"{what}: scan reported unknown file {uri!r}"
-            )
-        if int(row["__hits"]):
-            totals[uri] = int(row["__total"])
-    if not totals:
-        return [], 0, 0
-    # stage B — matched (file, pos) pairs shuffle by file; each
-    # file's task merges the old DV and writes the new sidecar
-    # EXECUTOR-side, returning ONE descriptor row.  Closures carry
-    # only O(#touched files) metadata (old descriptors + totals).
+    # matched (file, pos) pairs shuffle by file; each touched file's
+    # task merges the old DV and writes the new sidecar EXECUTOR-side,
+    # returning ONE descriptor row.  The closure carries the
+    # per-kept-file metadata above — O(#kept files), which PySpark
+    # ships as one broadcast once it outgrows the UDF compression
+    # threshold.
     table_root = str(table)
-    old_descs = {uri: snap.dvs.get(uri_to_rel[uri]) for uri in totals}
-    file_totals = dict(totals)
 
     def _build_dv(pdf: "pd.DataFrame") -> "pd.DataFrame":
         from snapflow_spark.sources.deletion_vectors import (
@@ -1963,9 +1963,14 @@ def _dv_delete_plan(
                 }
             )
         new_set = old | matched
+        total = file_totals.get(uri)
+        if total is None:  # add without stats: the footer knows
+            import pyarrow.parquet as pq
+
+            total = pq.ParquetFile(footer_paths[uri]).metadata.num_rows
         desc_json = (
             None  # every physical row dead: drop the file outright
-            if len(new_set) >= file_totals[uri]
+            if len(new_set) >= total
             else json.dumps(
                 write_dv_file(table_root, sorted(new_set)),
                 separators=(",", ":"),
@@ -1998,6 +2003,10 @@ def _dv_delete_plan(
     by_rel = {rel: (pv, st) for rel, _p, pv, st in kept}
     sizes = {rel: sz for rel, _pv, sz, _st in snap.files}
     for row in sorted(desc_rows, key=lambda r: r["file"]):
+        if row["file"] not in uri_to_rel:
+            raise RuntimeError(
+                f"{what}: scan reported unknown file {row['file']!r}"
+            )
         rel = uri_to_rel[row["file"]]
         n_deleted += int(row["n_new"])
         n_deleted_matched += int(row["n_new_m"])
@@ -2528,9 +2537,16 @@ def merge_delta(
     the driver holds only O(#touched files) descriptors +
     O(#staged files) stats — a billion-row changelog never
     materializes rows driver-side.
+    One source aggregate yields the key bounds, the row count and the
+    largest number of rows per key; the multiple-match check runs
+    only when some key repeats, and the new rows (replacements and
+    inserts) stage in ONE write — for ``update`` + ``insert`` that is
+    the projected source itself, no join.
     CDF-enabled tables emit authoritative change rows
     (update_preimage/postimage pairs, insert, delete).  Returns
-    ``{"rows_matched": n, "rows_inserted": m}``.
+    ``{"rows_matched": n, "rows_inserted": m}``: ``n`` target rows
+    replaced or deleted, ``m`` = source rows minus source rows whose
+    key matched a live target row.
 
     Column-mapped tables work (round 15): the scan binds physical
     names / field ids, staging renames to physical, and CDF change
@@ -2607,6 +2623,8 @@ def merge_delta(
 
     source = source.cache()
     try:
+        # ONE source aggregate: the key bounds, the row count and the
+        # largest number of rows per key.
         # touched-file discovery (delta-spark's MERGE file pruning):
         # the source keys' min/max bounds prune the TARGET file list
         # from log stats before any scan — a narrow changelog against
@@ -2614,10 +2632,19 @@ def merge_delta(
         # match.  Safe: a target key outside the source's bounds can
         # never match a source row (plain equality), so dropping its
         # files changes neither the matched set nor the anti-join.
-        bounds = source.agg(
-            *[F.min(F.col(c)).alias(f"__lo_{i}") for i, c in enumerate(on)],
-            *[F.max(F.col(c)).alias(f"__hi_{i}") for i, c in enumerate(on)],
-        ).first()
+        bounds = (
+            source.groupBy(*on)
+            .count()
+            .agg(
+                *[F.min(c).alias(f"__lo_{i}") for i, c in enumerate(on)],
+                *[F.max(c).alias(f"__hi_{i}") for i, c in enumerate(on)],
+                F.sum("count").alias("__rows"),
+                F.max("count").alias("__per_key"),
+            )
+            .first()
+        )
+        n_source = int(bounds["__rows"] or 0)
+        keys_unique = int(bounds["__per_key"] or 0) <= 1
         mmf: dict | None = {}
         for i, c in enumerate(on):
             lo, hi = bounds[f"__lo_{i}"], bounds[f"__hi_{i}"]
@@ -2636,23 +2663,37 @@ def merge_delta(
         target = read_delta(spark, table, min_max_filter=mmf)
         tgt_keys = target.select(*on).dropDuplicates()
         matched_src = source.join(tgt_keys, on, "left_semi")
-        if when_matched is not None:
+        # source rows matching a target row: a key can match more
+        # than once only when it repeats in the source, so the
+        # multiple-match check runs only then — and the same pass
+        # over source ⋉ target keys yields the matched-row count
+        n_src_matched = 0
+        if when_matched is not None and not keys_unique:
             # delta's multiple-source-rows-matched rule: ambiguous
-            # update/delete refuses loudly (one tiny agg, limit 1)
+            # update/delete refuses loudly
             dup = (
                 matched_src.groupBy(*on)
                 .count()
-                .where(F.col("count") > 1)
-                .limit(1)
-                .collect()
+                .agg(
+                    F.sum("count").alias("__rows"),
+                    F.max_by(F.struct(*on), "count").alias("__key"),
+                    F.max("count").alias("__per_key"),
+                )
+                .first()
             )
-            if dup:
-                key = {c: dup[0][c] for c in on}
+            if int(dup["__per_key"] or 0) > 1:
+                key = {c: dup["__key"][c] for c in on}
                 raise ValueError(
                     "merge_delta: multiple source rows match one "
                     f"target row (e.g. key {key}) — deduplicate the "
                     "changelog first (dedupe_keep_latest)"
                 )
+            n_src_matched = int(dup["__rows"] or 0)
+        elif when_not_matched == "insert" and n_source:
+            n_src_matched = matched_src.count()
+        n_inserted = (
+            n_source - n_src_matched if when_not_matched == "insert" else 0
+        )
         actions: list[dict] = []
         n_matched = 0
         n_by_source = 0
@@ -2667,11 +2708,10 @@ def merge_delta(
                 delete_not_matched=del_unmatched,
             )
             n_by_source = n_total - n_matched
-        new_parts: list[tuple[str, DataFrame]] = []
+        # the new rows — replacements and inserts — stage in ONE write
+        updated = inserted = None
         if when_matched == "update":
-            new_parts.append(
-                ("update", _project(matched_src, "when_matched='update'"))
-            )
+            updated = _project(matched_src, "when_matched='update'")
         elif isinstance(when_matched, dict):
             # plain (null-UNSAFE) equality, matching the delete
             # plan's key-marker join: a null-keyed row never matches
@@ -2683,46 +2723,39 @@ def merge_delta(
                 ],
                 "inner",
             )
-            new_parts.append(
-                (
-                    "update",
-                    joined.select(
-                        *[
-                            (
-                                (
-                                    F.expr(when_matched[c])
-                                    if isinstance(when_matched[c], str)
-                                    else when_matched[c]
-                                )
-                                .cast(fields[c].dataType)
-                                .alias(c)
-                                if c in when_matched
-                                else F.col(f"target.{c}").alias(c)
-                            )
-                            for c in out_cols
-                        ]
-                    ),
-                )
+            updated = joined.select(
+                *[
+                    (
+                        (
+                            F.expr(when_matched[c])
+                            if isinstance(when_matched[c], str)
+                            else when_matched[c]
+                        )
+                        .cast(fields[c].dataType)
+                        .alias(c)
+                        if c in when_matched
+                        else F.col(f"target.{c}").alias(c)
+                    )
+                    for c in out_cols
+                ]
             )
-        n_inserted = 0
         if when_not_matched == "insert":
-            new_parts.append(
-                (
-                    "insert",
-                    _project(
-                        source.join(tgt_keys, on, "left_anti"),
-                        "when_not_matched='insert'",
-                    ),
-                )
+            inserted = _project(
+                source.join(tgt_keys, on, "left_anti"),
+                "when_not_matched='insert'",
             )
-        staged: dict[str, list] = {}
-        for kind, df_part in new_parts:
-            _check_constraints(
-                df_part, snap.metadata, f"merge_delta ({kind})"
-            )
-            added = _stage_logical(df_part, table, snap)
-            staged[kind] = added
-            for rel, pv, sz, mtime_ms, st in added:
+        if when_matched == "update" and inserted is not None:
+            # matched ∪ unmatched source rows is the whole source
+            new_rows = _project(source, "when_matched='update'")
+        elif updated is not None and inserted is not None:
+            new_rows = updated.unionByName(inserted)
+        else:
+            new_rows = updated if updated is not None else inserted
+        if new_rows is not None and n_source:
+            _check_constraints(new_rows, snap.metadata, "merge_delta")
+            for rel, pv, sz, mtime_ms, st in _stage_logical(
+                new_rows, table, snap
+            ):
                 add: dict = {
                     "path": rel,
                     "partitionValues": pv,
@@ -2733,8 +2766,6 @@ def merge_delta(
                 if st is not None:
                     add["stats"] = json.dumps(st, separators=(",", ":"))
                 actions.append({"add": add})
-        for rel, _pv, _sz, _mt, st in staged.get("insert", []):
-            n_inserted += int(st["numRecords"]) if st else 0
         if not actions:
             # nothing changed; a txn-stamped no-op still records the
             # high-water mark so replays stay cheap
@@ -2757,18 +2788,12 @@ def merge_delta(
                     else "delete",
                 )
                 changes = pre
-                if when_matched != "delete":
-                    post_src = new_parts[0][1]
+                if updated is not None:
                     changes = changes.unionByName(
-                        _tag(post_src, "update_postimage")
+                        _tag(updated, "update_postimage")
                     )
-            if when_not_matched == "insert" and n_inserted:
-                ins = _tag(
-                    _project(
-                        source.join(tgt_keys, on, "left_anti"), "insert"
-                    ),
-                    "insert",
-                )
+            if inserted is not None and n_inserted:
+                ins = _tag(inserted, "insert")
                 changes = (
                     ins if changes is None else changes.unionByName(ins)
                 )

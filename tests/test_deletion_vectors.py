@@ -805,7 +805,7 @@ def test_dv_writer_driver_holds_only_descriptors(
 ):
     """Round-15 contract: the DV build is EXECUTOR-side.  Every
     driver-side collect during a broad delete returns O(#files) rows
-    (the per-file count rows and the descriptor rows) — never the
+    (one descriptor row per touched file) — never the
     matched row indexes, at any delete breadth."""
     # Spark 4: the runtime class is the CLASSIC subclass, which
     # overrides collect — patch it, not the abstract base
@@ -841,7 +841,7 @@ def test_dv_writer_driver_holds_only_descriptors(
     expected = sum(1 for i in range(n) if i % 7 < 3)
     assert n_del == expected
     assert collected, "the delete never collected (plan changed?)"
-    # 4 data files + slack: descriptor rows and count rows only
+    # 4 data files + slack: descriptor rows only
     assert max(collected) <= 8, (
         f"driver collected {max(collected)} rows during the delete — "
         "row indexes are materializing driver-side again"

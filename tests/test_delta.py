@@ -1547,9 +1547,10 @@ def test_merge_and_update_on_column_mapped_table(spark, tmp_path):
 def test_yaml_merge_and_upsert_builtins(spark, tmp_path):
     """core.merge_delta / core.upsert_iceberg (round 15): a changelog
     node upserts into standing tables through the YAML surface and
-    downstream reads see the post-merge state."""
+    table reads see the post-merge state.  Both nodes are table
+    sinks: they return None, so their own stores stay empty."""
     from snapflow_spark.plans import load_graph
-    from snapflow_spark.sources.iceberg import write_iceberg
+    from snapflow_spark.sources.iceberg import read_iceberg, write_iceberg
 
     dt = tmp_path / "dt"
     it = tmp_path / "it"
@@ -1581,8 +1582,10 @@ def test_yaml_merge_and_upsert_builtins(spark, tmp_path):
     g.pipeline.sources["changes"].append(changelog)
     assert g.produce(spark) == 2
     want = {(0, "a", "en"), (1, "B", "en"), (7, "g", "fr")}
-    assert _rows(g.read(spark, "merged")) == want
-    assert _rows(g.read(spark, "upserted")) == want
+    assert _rows(read_delta(spark, dt)) == want
+    assert _rows(read_iceberg(spark, it)) == want
+    assert g.read(spark, "merged") is None
+    assert g.read(spark, "upserted") is None
 
 
 def test_optimize_on_column_mapped_table(spark, tmp_path):

@@ -9,6 +9,7 @@ cross SparkContexts.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from snapflow_spark.functions import fragments
@@ -29,29 +30,42 @@ def test_memo_hits_and_returns_identical_object(spark):
         calls["n"] += 1
         return F.length(F.col("x"))
 
-    a = memo_fragment("test.frag|x", build)
-    b = memo_fragment("test.frag|x", build)
+    a = memo_fragment(("test.frag", "x"), build)
+    b = memo_fragment(("test.frag", "x"), build)
     assert a is b
     assert calls["n"] == 1
     # a different key builds fresh
-    c = memo_fragment("test.frag|y", lambda: F.length(F.col("y")))
+    c = memo_fragment(("test.frag", "y"), lambda: F.length(F.col("y")))
     assert c is not a
 
 
 def test_memo_is_keyed_by_context_and_bounded(spark):
     sc = spark.sparkContext
+    key = ("test.frag", "ctx")
+    built = memo_fragment(key, lambda: F.lit(2))
     per = fragments._CACHE.get(sc)
-    assert per is not None and "test.frag|x" not in per or True
+    assert per is not None
+    assert per[key] is built  # stored under the ACTIVE context
     # cap: past _MAX_KEYS the memo degrades to build-fresh, never grows
     old_max = fragments._MAX_KEYS
     try:
         fragments._MAX_KEYS = len(fragments._CACHE[sc])
         before = len(fragments._CACHE[sc])
-        out = memo_fragment("test.overflow", lambda: F.lit(1))
+        out = memo_fragment(("test.overflow",), lambda: F.lit(1))
         assert out is not None
         assert len(fragments._CACHE[sc]) == before  # not stored
     finally:
         fragments._MAX_KEYS = old_max
+
+
+def test_memo_keys_are_tuples_and_never_collide(spark):
+    # "a|b" + "c" and "a" + "b|c" joined with "|" would be one key
+    left = memo_fragment(("test.delim", "a|b", "c"), lambda: F.lit("L"))
+    right = memo_fragment(("test.delim", "a", "b|c"), lambda: F.lit("R"))
+    assert left is not right
+    assert "L" in str(left) and "R" in str(right)
+    with pytest.raises(TypeError):
+        memo_fragment("test.delim|a|b", lambda: F.lit(1))
 
 
 def test_reconstructed_query_plans_are_equivalent(spark, tmp_path):

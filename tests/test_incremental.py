@@ -425,3 +425,57 @@ def test_read_merge_schema_evolution(spark, tmp_path):
     assert rows == {1: ("a", None), 2: ("b", 9.5)}
     # default read still returns both rows (schema from one footer)
     assert store.read(spark).count() == 2
+
+
+def test_snapshot_schema_record_skips_inference(spark, tmp_path):
+    """Every snapshot the store commits (append, compact, hard-link
+    copy) records its Spark schema, and ``read`` passes it — no
+    footer-inference job.  A dir without the record, or a set mixing
+    recorded and unrecorded dirs, still infers and reads the same
+    rows."""
+    from snapflow_spark.incremental.store import SnapshotStore
+
+    sc = spark.sparkContext
+    runs = iter(range(1000))
+
+    def jobs_and_rows(store, ids=None):
+        group = f"schema-record-{tmp_path.name}-{next(runs)}"
+        sc.setJobGroup(group, "snapshot read")
+        try:
+            df = store.read(spark, ids)
+        finally:
+            sc.setJobGroup(None, None)
+        n = len(sc.statusTracker().getJobIdsForGroup(group))
+        return n, df.schema, sorted(tuple(r) for r in df.collect())
+
+    store = SnapshotStore(tmp_path / "s")
+    a, b, c = (store.append(df) for df in _chunks(spark))
+    for sid in (a, b, c):
+        assert (store.path / sid / "_SCHEMA").exists()
+    jobs, schema, rows = jobs_and_rows(store)
+    assert jobs == 0 and len(rows) == 5
+
+    # no record: inferred (one job), same schema and rows
+    (store.path / b / "_SCHEMA").unlink()
+    jobs_b, schema_b, rows_b = jobs_and_rows(store, [b])
+    assert jobs_b > 0
+    assert schema_b == schema
+    assert rows_b == sorted(tuple(r) for r in _chunks(spark)[1].collect())
+    jobs_mixed, schema_mixed, rows_mixed = jobs_and_rows(store)
+    assert jobs_mixed > 0
+    assert (schema_mixed, rows_mixed) == (schema, rows)
+
+    # hard-link copy carries the record; a copy of an unrecorded dir
+    # has none and infers
+    dst = SnapshotStore(tmp_path / "d")
+    ca = dst.append(store.read(spark, [a]))
+    cb = dst.append(store.read(spark, [b]))
+    assert (dst.path / ca / "_SCHEMA").exists()
+    assert not (dst.path / cb / "_SCHEMA").exists()
+    assert jobs_and_rows(dst, [ca])[0] == 0
+    assert jobs_and_rows(dst)[1:] == jobs_and_rows(store, [a, b])[1:]
+
+    # compaction records the merged schema
+    sid, _retired = store.compact(spark)
+    assert (store.path / sid / "_SCHEMA").exists()
+    assert jobs_and_rows(store) == (0, schema, rows)

@@ -234,8 +234,8 @@ def test_merge_prunes_target_files_by_source_key_bounds(
     """Touched-file discovery: a narrow changelog prunes the target
     file list from log stats — with 4 single-range files and a
     changelog inside ONE range, every driver collect stays at 1-2
-    rows (stage-A count row + descriptor row for the one touched
-    file; unpruned it would be 4)."""
+    rows (the source-aggregate row, the descriptor row for the one
+    touched file; unpruned it would be 4)."""
     from pyspark.sql.classic.dataframe import DataFrame as _CDF
 
     path = tmp_path / "t"
@@ -346,3 +346,175 @@ def test_merge_by_source_cdf_emits_deletes(spark, tmp_path):
         (2, 99, "update_postimage"),
         (1, 10, "delete"),
     }
+
+
+def test_merge_repeated_source_keys(spark, tmp_path):
+    """The multiple-match check runs only when some source key
+    repeats: a repeated key that matches still raises (alongside
+    clean rows, for update and delete clauses), and repeated keys
+    that match nothing insert every row."""
+    path = tmp_path / "t"
+    write_delta(_tbl(spark, [(1, 1, "a"), (2, 2, "a")]), path)
+    for clause in ("update", "delete", {"val": "source.val"}):
+        with pytest.raises(ValueError, match="multiple source rows"):
+            merge_delta(
+                spark,
+                path,
+                _tbl(spark, [(2, 20, "a"), (5, 5, "b"), (2, 21, "a")]),
+                on=["id"],
+                when_matched=clause,
+            )
+    assert _state(spark, path) == {(1, 1, "a"), (2, 2, "a")}
+    # repeated keys, none matching: both copies insert
+    res = merge_delta(
+        spark,
+        path,
+        _tbl(spark, [(8, 80, "b"), (8, 81, "b"), (2, 22, "a")]),
+        on=["id"],
+    )
+    assert res == {"rows_matched": 1, "rows_inserted": 2}
+    got = sorted(
+        (r.id, r.val, r.grp) for r in read_delta(spark, path).collect()
+    )
+    assert got == [(1, 1, "a"), (2, 22, "a"), (8, 80, "b"), (8, 81, "b")]
+    # insert-only merges never check for multiple matches
+    res = merge_delta(
+        spark,
+        path,
+        _tbl(spark, [(8, 0, "x"), (8, 1, "x"), (9, 9, "b"), (9, 9, "b")]),
+        on=["id"],
+        when_matched=None,
+    )
+    assert res == {"rows_matched": 0, "rows_inserted": 2}
+    assert len(read_delta(spark, path).collect()) == 6
+
+
+def test_merge_counts_exact_with_duplicate_target_keys(spark, tmp_path):
+    """rows_matched counts target rows replaced; rows_inserted counts
+    source rows whose key matches no LIVE target row — exact when the
+    target holds a key twice, and when a key's only target row is
+    already deleted."""
+    from snapflow_spark.sources.delta import delete_from_delta
+
+    path = tmp_path / "t"
+    write_delta(
+        _tbl(spark, [(1, 10, "a"), (1, 11, "a"), (2, 20, "a"), (3, 30, "a")]),
+        path,
+    )
+    assert delete_from_delta(spark, path, "id = 3") == 1
+    res = merge_delta(
+        spark,
+        path,
+        _tbl(spark, [(1, 100, "a"), (3, 300, "b"), (4, 400, "b")]),
+        on=["id"],
+    )
+    assert res == {"rows_matched": 2, "rows_inserted": 2}
+    assert _state(spark, path) == {
+        (1, 100, "a"), (2, 20, "a"), (3, 300, "b"), (4, 400, "b"),
+    }
+    # dict clause over a duplicated target key: each target row is
+    # rewritten, the source row counts as matched (not inserted)
+    path2 = tmp_path / "t2"
+    write_delta(_tbl(spark, [(1, 10, "a"), (1, 11, "a")]), path2)
+    res = merge_delta(
+        spark,
+        path2,
+        _tbl(spark, [(1, 5, "z"), (7, 70, "b")]),
+        on=["id"],
+        when_matched={"val": "source.val + target.val"},
+    )
+    assert res == {"rows_matched": 2, "rows_inserted": 1}
+    assert sorted(
+        (r.id, r.val, r.grp) for r in read_delta(spark, path2).collect()
+    ) == [(1, 15, "a"), (1, 16, "a"), (7, 70, "b")]
+
+
+def _strip_add_stats(path: Path) -> None:
+    """Rewrite every commit without ``add.stats`` — the shape of an
+    external writer that records none."""
+    for f in sorted((path / "_delta_log").glob("*.json")):
+        out = []
+        for ln in f.read_text().splitlines():
+            a = json.loads(ln)
+            if "add" in a:
+                a["add"].pop("stats", None)
+            out.append(json.dumps(a))
+        f.write_text("\n".join(out) + "\n")
+
+
+def test_dv_plan_without_add_stats(spark, tmp_path):
+    """With no ``numRecords`` stat the DV tasks take each file's row
+    count from its footer: partial deletes write DVs, a delete that
+    kills every live row of a file drops it (remove, no re-add), and
+    merges over stat-less files count exactly."""
+    from snapflow_spark.sources.delta import delete_from_delta
+
+    path = tmp_path / "t"
+    write_delta(
+        _tbl(spark, [(i, i, "a") for i in range(4)]).coalesce(1), path
+    )
+    write_delta(
+        _tbl(spark, [(i, i, "b") for i in range(10, 13)]).coalesce(1),
+        path,
+    )
+    _strip_add_stats(path)
+    snap = delta_snapshot(spark, path)
+    assert len(snap.files) == 2
+    assert all(st is None for _r, _pv, _sz, st in snap.files)
+
+    assert delete_from_delta(spark, path, "id = 1") == 1  # DV
+    assert delete_from_delta(spark, path, "id in (0, 2)") == 2  # DV
+    snap = delta_snapshot(spark, path)
+    assert len(snap.files) == 2 and len(snap.dvs) == 1
+    # the last live row of the first file: the whole file drops
+    assert delete_from_delta(spark, path, "id = 3") == 1
+    last = sorted((path / "_delta_log").glob("*.json"))[-1]
+    acts = [json.loads(ln) for ln in last.read_text().splitlines()]
+    removed = [a["remove"]["path"] for a in acts if "remove" in a]
+    assert len(removed) == 1
+    assert not [a for a in acts if "add" in a]
+    snap = delta_snapshot(spark, path)
+    assert [rel for rel, *_ in snap.files] != removed and not snap.dvs
+    assert _state(spark, path) == {(i, i, "b") for i in range(10, 13)}
+
+    res = merge_delta(
+        spark,
+        path,
+        _tbl(spark, [(10, 0, "z"), (11, 0, "z"), (12, 0, "z"), (13, 0, "z")]),
+        on=["id"],
+    )
+    assert res == {"rows_matched": 3, "rows_inserted": 1}
+    # every row of the stat-less file was replaced: it drops too,
+    # leaving only the staged files (which carry stats) and no DV
+    snap = delta_snapshot(spark, path)
+    assert all(st is not None for *_f, st in snap.files) and not snap.dvs
+    assert _state(spark, path) == {(i, 0, "z") for i in range(10, 14)}
+
+
+# Jobs one merge_delta launched when this guard was written: the
+# source aggregate (bounds, row count, rows per key), the matched
+# count over source ⋉ target keys, the DV plan's one applyInPandas
+# pass and the one staged write, each with its AQE stage jobs.
+MERGE_JOBS_UNIQUE_KEYS = 13
+
+
+def test_merge_job_count_guard(spark, tmp_path):
+    """A unique-key changelog skips the multiple-match check and
+    stages its rows in one write; the jobs merge_delta launches must
+    not grow past the count measured for this shape."""
+    path = tmp_path / "t"
+    write_delta(
+        _tbl(spark, [(i, i, "ab"[i % 2]) for i in range(40)]).coalesce(2),
+        path,
+    )
+    src = _tbl(spark, [(i, -i, "ab"[i % 2]) for i in range(30, 50)])
+    sc = spark.sparkContext
+    group = f"merge-guard-{tmp_path.name}"
+    sc.setJobGroup(group, "merge_delta job-count guard")
+    try:
+        res = merge_delta(spark, path, src, on=["id"])
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert res == {"rows_matched": 10, "rows_inserted": 10}
+    assert 0 < jobs <= MERGE_JOBS_UNIQUE_KEYS, jobs
