@@ -15,7 +15,6 @@ from snapflow_spark.functions.sketches import (
 from snapflow_spark.functions.text import (
     lang_id_expr,
     quality_score_expr,
-    simhash_udf,
     token_count_udf,
     tokens_expr,
 )
@@ -106,7 +105,6 @@ __all__ = [
     "robots_sitemaps",
     "url_dedup",
     "quality_score_expr",
-    "simhash_udf",
     "theta_overlap",
     "theta_partials",
     "theta_rollup",

@@ -3,7 +3,7 @@ function over a text column, Arrow-batched, onto the engine's
 ``array<float>`` embedding contract.
 
 The engine's embedding family (``semantic_dedup`` / ``d4_select`` /
-``IVFIndex`` / ``IVFPQIndex`` ingest, ``embedding_near_dup_pairs``,
+``IVFIndex`` / ``IVFPQIndex`` ingest, ``embedding_near_dup_pairs_int``,
 cosine top-k) consumes any ``array<float>`` column; the model-free
 default producer is the hashed char-n-gram lexical embedding
 (functions.text.hashed_embedding_udf).  This module is the bridge to

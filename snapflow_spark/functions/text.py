@@ -264,44 +264,6 @@ def fingerprint_expr(col: str | Column, n_chars: int = 64) -> Column:
     return F.sha2(normalized, 256).substr(1, n_chars)
 
 
-def _simhash_batch(texts: pd.Series) -> pd.Series:
-    """Fully vectorized SimHash: flatten the batch's tokens into one
-    array, hash them all at once (pd.util.hash_array = C-speed siphash
-    with a FIXED key — stable across workers/runs, unlike python
-    hash()), then per-document bit votes via np.add.reduceat. No
-    per-token python loop."""
-    tok_lists = texts.fillna("").str.split()
-    lengths = tok_lists.str.len().to_numpy(dtype=np.int64)
-    out = np.zeros(len(texts), dtype=np.uint64)
-    nonempty_idx = np.flatnonzero(lengths > 0)
-    shifts = np.arange(64, dtype=np.uint64)
-    powers = np.uint64(1) << shifts
-    # chunk so the (n_tokens, 64) bit matrix stays ~tens of MB even for
-    # arrow batches of long documents
-    chunk = 512
-    for lo in range(0, len(nonempty_idx), chunk):
-        idx = nonempty_idx[lo : lo + chunk]
-        flat = np.concatenate([np.asarray(tok_lists.iloc[i], dtype=object) for i in idx])
-        hashes = pd.util.hash_array(flat)  # uint64, deterministic key
-        # per-token bit matrix; votes = 2*sum(bits) - n_tokens
-        bits = ((hashes[:, None] >> shifts) & np.uint64(1)).astype(np.int32)
-        starts = np.zeros(len(idx), dtype=np.int64)
-        np.cumsum(lengths[idx][:-1], out=starts[1:])
-        ones = np.add.reduceat(bits, starts, axis=0)  # (n_docs, 64)
-        doc_votes = 2 * ones - lengths[idx][:, None]
-        out[idx] = ((doc_votes > 0).astype(np.uint64)) @ powers
-    return pd.Series(out.astype(np.int64))
-
-
-def simhash_udf(col: str | Column) -> Column:
-    """64-bit SimHash over whitespace tokens (Charikar): per-token
-    64-bit blake2b hashes vote bitwise, the sign of each bit column
-    becomes the fingerprint bit. Arrow-batched; near-dup candidates
-    then group on hamming-band substrings of this value."""
-    c = F.col(col) if isinstance(col, str) else col
-    return pandas_udf(_simhash_batch, LongType())(c)
-
-
 def _simhash_sha_bands_batch(texts: pd.Series) -> pd.Series:
     """sha256 simhash band values, vectorized per Arrow batch — the
     engine-side twin of the q_dedup_simhash SQL oracle. Per token

@@ -39,10 +39,8 @@ from snapflow_spark.operators.dedup_text import (
     shared_span_pairs,
     exact_dedup,
     mingram_candidates,
-    minhash_candidates,
     minhash_sha_candidates,
     ngram_jaccard_pairs,
-    simhash_candidates,
     simhash_sha_candidates,
 )
 from snapflow_spark.operators.dedupe import dedupe_keep_latest
@@ -71,7 +69,6 @@ from snapflow_spark.operators.similarity import (
     brute_force_topk,
     brute_force_topk_matmul,
     derive_k_cells,
-    embedding_near_dup_pairs,
     embedding_near_dup_pairs_int,
     semantic_dedup,
     ivf_pq_topk,
@@ -105,7 +102,6 @@ __all__ = [
     "brute_force_topk",
     "brute_force_topk_matmul",
     "dedupe_keep_latest",
-    "embedding_near_dup_pairs",
     "derive_k_cells",
     "semantic_dedup",
     "QualityClassifier",
@@ -120,13 +116,11 @@ __all__ = [
     "grouped_topk",
     "merge_streams",
     "mingram_candidates",
-    "minhash_candidates",
     "minhash_sha_candidates",
     "ngram_jaccard_pairs",
     "salted_count_by_key",
     "salted_join",
     "schema_translate",
-    "simhash_candidates",
     "simhash_sha_candidates",
     "sql_snap",
     "topk",

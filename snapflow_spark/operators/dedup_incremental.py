@@ -23,7 +23,7 @@ Two tiers, mirroring the batch cascade:
   band_idx, band_val) — kept separate deliberately: band rows are
   ×bands per doc and must stay sig-free or the store amplifies by
   k longs per band row. New batch: compute sigs/bands once
-  (dedup_text's exact machinery), candidate = new bands ⋈ history
+  (the xxhash64 helpers below), candidate = new bands ⋈ history
   bands on the band key (the LSH bucket join — only colliding docs
   meet), VERIFY by signature agreement (``est_jaccard`` = matching
   minhash fraction — no text needed, the standard unbiased Jaccard
@@ -47,21 +47,49 @@ clustering; an ingest gate wants a deterministic one-pass rule).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from snapflow_spark.catalog import ensure_parallelism
-from snapflow_spark.functions.text import fingerprint_expr, tokens_expr
-from snapflow_spark.operators.dedup_text import (
-    _sig_match_fraction,
-    minhash_signature,
-    shingle_hashes,
-)
+from snapflow_spark.functions.text import fingerprint_expr, ngram_expr, tokens_expr
 
 __all__ = [
     "incremental_exact_dedup",
     "incremental_minhash_dedup",
 ]
+
+
+def shingle_hashes(tokens: Column, shingle_n: int = 3) -> Column:
+    """One 64-bit hash per distinct token shingle (codegen)."""
+    return F.transform(F.array_distinct(ngram_expr(tokens, shingle_n)), lambda s: F.xxhash64(s))
+
+
+def minhash_signature(hashes: Column, k: int) -> Column:
+    """k-element MinHash signature from pre-computed shingle hashes:
+    k salted re-hashes (xxhash64(h, i)) reduced by array_min. Keep the
+    hashes in their own projection so they materialize once, not k
+    times (CollapseProject won't duplicate non-cheap exprs)."""
+    return F.array(
+        *[
+            F.array_min(F.transform(hashes, _salted_hash(i)))
+            for i in range(k)
+        ]
+    )
+
+
+def _salted_hash(i: int):
+    # real closure — a default-arg lambda reads as a 2-arg (element,
+    # index) lambda to Spark's higher-order transform
+    return lambda h: F.xxhash64(h, F.lit(i))
+
+
+def _sig_match_fraction(a: Column, b: Column, k: int) -> Column:
+    matches = F.aggregate(
+        F.zip_with(a, b, lambda x, y: F.when(x == y, 1).otherwise(0)),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    )
+    return matches / F.lit(float(k))
 
 
 def incremental_exact_dedup(

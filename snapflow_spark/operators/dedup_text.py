@@ -2,24 +2,31 @@
 north-star: LLM-training-data pipeline dedup at 100 TB).
 
 Four tiers, cheapest-first — the standard corpus-dedup cascade:
-  1. exact_dedup          — sha256 of normalized text; one shuffle on the hash
-  2. simhash_candidates   — 64-bit SimHash, banded: near-dup candidates
-                            via equality joins on 16-bit bands (4 shuffles
-                            on tiny keys, no pairwise blowup)
-  3. minhash_candidates   — MinHashLSH (pyspark.ml) over token sets:
-                            Jaccard-near candidates via LSH bucket join
-  4. ngram_jaccard_pairs  — exact n-gram Jaccard verification of a
-                            bounded candidate set (array_intersect /
-                            array_union, JVM-side)
+  1. exact_dedup            — sha256 of normalized text; one shuffle on
+                              the hash
+  2. simhash_sha_candidates — 64-bit sha256 SimHash, banded: near-dup
+                              candidates via equality on 16-bit bands
+                              (one shuffle on tiny keys, no pairwise
+                              blowup)
+  3. minhash_sha_candidates — hand-rolled MinHash-LSH over token
+                              shingles (sha256 gram hashes, 16x2 integer
+                              bands); mingram_candidates is its
+                              single-band form
+  4. ngram_jaccard_pairs    — exact n-gram Jaccard verification of a
+                              bounded candidate set (array_intersect /
+                              array_union, JVM-side)
 Every stage is candidates -> verify: the pairwise work only ever runs
 on LSH-bucket collisions, never on the full N² — that is what makes
-near-dedup feasible at 100 TB.
+near-dedup feasible at 100 TB. The tier-2 and tier-3 generators are
+built from sha256 and integer arithmetic only, so a SQL oracle replays
+their exact candidate sets (q_dedup_simhash, q_dedup_minhash,
+q_dedup_ngram).
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from snapflow_spark.catalog import ensure_parallelism
@@ -27,7 +34,6 @@ from snapflow_spark.functions.fragments import memo_fragment
 from snapflow_spark.functions.text import (  # noqa: F401 — ngram_expr re-exported
     fingerprint_expr,
     ngram_expr,
-    simhash_udf,
     tokens_expr,
 )
 
@@ -58,60 +64,6 @@ def exact_dedup(
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
-
-
-def simhash_bands(df: DataFrame, text_col: str = "text", n_bands: int = 4) -> DataFrame:
-    """Attach a 64-bit SimHash and explode it into ``n_bands`` equal bit
-    bands; near-identical docs (small hamming distance) share at least
-    one band value with high probability."""
-    bits = 64 // n_bands
-    sim = df.withColumn("simhash", simhash_udf(text_col))
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band_idx"),
-                F.shiftrightunsigned(F.col("simhash"), i * bits)
-                .bitwiseAND(F.lit((1 << bits) - 1))
-                .alias("band_val"),
-            )
-            for i in range(n_bands)
-        ]
-    )
-    return sim.withColumn("band", F.explode(bands)).select(
-        "*", F.col("band.band_idx").alias("band_idx"), F.col("band.band_val").alias("band_val")
-    ).drop("band")
-
-
-def simhash_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_bands: int = 4,
-    max_hamming: int = 3,
-    max_bucket: int = 64,
-    observation=None,
-) -> DataFrame:
-    """Near-dup candidate pairs via banded SimHash: ONE shuffle on the
-    band key, in-bucket pair generation with higher-order fns, exact
-    hamming verification via bit_count(xor) — all JVM-side after the
-    single simhash UDF pass. (A band self-join would re-run the UDF
-    subtree once per join side and shuffle the full table twice.)"""
-    banded = simhash_bands(
-        ensure_parallelism(df).select(id_col, text_col), text_col, n_bands
-    ).select(F.col(id_col).alias("id"), "simhash", "band_idx", "band_val")
-    pairs = bucketed_pairs(
-        banded,
-        ["band_idx", "band_val"],
-        F.struct("id", "simhash"),
-        lambda x, y: F.struct(
-            x["id"].alias("id_a"),
-            y["id"].alias("id_b"),
-            F.bit_count(x["simhash"].bitwiseXOR(y["simhash"])).alias("hamming"),
-        ),
-        max_bucket=max_bucket,
-        observation=observation,
-    )
-    return pairs.where(F.col("hamming") <= max_hamming).dropDuplicates(["id_a", "id_b"])
 
 
 def simhash_sha_candidates(
@@ -178,106 +130,6 @@ def simhash_sha_candidates(
     return pairs.where(F.col("hamming") <= max_hamming).dropDuplicates(["id_a", "id_b"])
 
 
-def shingle_hashes(tokens: Column, shingle_n: int = 3) -> Column:
-    """One 64-bit hash per distinct token shingle (codegen)."""
-    return F.transform(F.array_distinct(ngram_expr(tokens, shingle_n)), lambda s: F.xxhash64(s))
-
-
-def minhash_signature(hashes: Column, k: int) -> Column:
-    """k-element MinHash signature from pre-computed shingle hashes:
-    k salted re-hashes (xxhash64(h, i)) reduced by array_min. Keep the
-    hashes in their own projection so they materialize once, not k
-    times (CollapseProject won't duplicate non-cheap exprs)."""
-    return F.array(
-        *[
-            F.array_min(F.transform(hashes, _salted_hash(i)))
-            for i in range(k)
-        ]
-    )
-
-
-def _salted_hash(i: int):
-    # real closure — a default-arg lambda reads as a 2-arg (element,
-    # index) lambda to Spark's higher-order transform
-    return lambda h: F.xxhash64(h, F.lit(i))
-
-
-def _sig_match_fraction(a: Column, b: Column, k: int) -> Column:
-    matches = F.aggregate(
-        F.zip_with(a, b, lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    return matches / F.lit(float(k))
-
-
-def minhash_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    jaccard_threshold: float = 0.5,
-    num_hash_tables: int = 8,
-    rows_per_band: int = 2,
-    shingle_n: int = 3,
-    max_bucket: int = 64,
-    observation=None,
-    seed: int = 42,  # noqa: ARG001 — hashing is xxhash64-fixed; kept for API stability
-) -> DataFrame:
-    """MinHash-LSH near-dup candidate pairs, hand-rolled banding
-    (replaces pyspark.ml approxSimilarityJoin, which re-computes exact
-    jaccard on 2^18-dim sparse vectors per bucket collision — measured
-    287s vs <5s on sf0.1's 5k docs; at 100 TB only banding survives).
-
-    shingles -> k=(bands*rows) minhash sig -> per-band bucket key ->
-    ONE shuffle groupBy(band,key) -> in-bucket pair generation with
-    higher-order fns -> dedup pairs. Degenerate buckets (>max_bucket
-    members, e.g. empty-ish docs) are truncated after an id-sort —
-    bounded quadratic work per bucket, never N².
-
-    Returns (id_a < id_b, est_jaccard = signature match fraction);
-    verify exactly afterwards with ngram_jaccard_pairs (the cascade in
-    q_dedup_minhash). jaccard_threshold only tunes nothing here — the
-    banding (b=num_hash_tables, r=rows_per_band) sets the recall curve
-    1-(1-J^r)^b; callers filter on the verified exact jaccard.
-    """
-    k = num_hash_tables * rows_per_band
-    sigged = (
-        ensure_parallelism(df).select(F.col(id_col).alias("id"), F.col(text_col))
-        .select("id", tokens_expr(text_col).alias("tokens"))
-        .where(F.size("tokens") > 0)
-        .select("id", shingle_hashes(F.col("tokens"), shingle_n).alias("h"))
-        .select("id", minhash_signature(F.col("h"), k).alias("sig"))
-    )
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band_idx"),
-                F.xxhash64(
-                    *[F.element_at("sig", j * rows_per_band + r + 1) for r in range(rows_per_band)],
-                    F.lit(j),
-                ).alias("band_val"),
-            )
-            for j in range(num_hash_tables)
-        ]
-    )
-    exploded = sigged.select(
-        "id", "sig", F.explode(bands).alias("band")
-    ).select("id", "sig", "band.band_idx", "band.band_val")
-    pairs = bucketed_pairs(
-        exploded,
-        ["band_idx", "band_val"],
-        F.struct("id", "sig"),
-        lambda x, y: F.struct(
-            x["id"].alias("id_a"),
-            y["id"].alias("id_b"),
-            _sig_match_fraction(x["sig"], y["sig"], k).alias("est_jaccard"),
-        ),
-        max_bucket=max_bucket,
-        observation=observation,
-    )
-    return pairs.dropDuplicates(["id_a", "id_b"])
-
-
 def minhash_sha_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -340,8 +192,8 @@ def mingram_candidates(
     lets the verify stage stay hash-matched (q_dedup_ngram).
 
     Recall is that of a single band (docs sharing their rarest gram);
-    the multi-band generators (minhash_candidates) trade oracle
-    reproducibility for higher recall.
+    minhash_sha_candidates is the 16-band form, equally reproducible,
+    with higher recall.
     """
     blk = memo_fragment(
         ("dedup.minblk", "grams"),

@@ -107,10 +107,13 @@ def pagerank(
     component, 20 rounds ≈ 4% — pick per use; frontier prioritization
     needs the ORDER, which stabilizes much earlier).
 
-    Returns (id, rank). Per-iteration cost: one edges⋈ranks hash join
-    + one groupBy(dst) — both keyed shuffles AQE can skew-split; the
-    dangling total rides a broadcast one-row aggregate, not a driver
-    collect. N itself is a broadcast one-row aggregate too (round 18):
+    Returns (id, rank). An empty graph (no positive-weight edge)
+    returns zero rows with the same schema: ``id`` typed as the edges'
+    src/dst column, ``rank`` double.
+
+    Per-iteration cost: one edges⋈ranks hash join + one groupBy(dst)
+    — both keyed shuffles AQE can skew-split; the dangling total
+    rides a broadcast one-row aggregate, not a driver collect. N itself is a broadcast one-row aggregate too (round 18):
     the old driver-side ``nodes.count()`` launched a full job at
     CONSTRUCTION time; deferring it keeps every scalar in the plan and
     the arithmetic identical (same IEEE double ops, same order).

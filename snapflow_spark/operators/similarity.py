@@ -8,8 +8,9 @@ similarity corpus).
   corpus once, search only the nprobe closest cells. At 100 TB the
   corpus is written partitioned by centroid id, so a probe reads
   nprobe/k of the data (partition pruning does the rest).
-- embedding_near_dup_pairs: cosine-threshold near-dup pairs via
-  random-projection LSH on unit vectors (||a-b||^2 = 2-2cos).
+- embedding_near_dup_pairs_int: cosine-threshold near-dup pairs via
+  signed-random-projection LSH with integer (oracle-replayable) sign
+  bits; semantic_dedup's default blocking.
 """
 
 from __future__ import annotations
@@ -882,90 +883,6 @@ class IVFPQIndex:
         )
 
 
-def embedding_near_dup_pairs(
-    corpus: DataFrame,
-    cos_threshold: float = 0.9,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_bands: int = 24,
-    bits_per_band: int = 12,
-    max_bucket: int = 64,
-    seed: int = 42,
-    observation=None,
-) -> DataFrame:
-    """Cosine-near-duplicate pairs via signed-random-projection LSH:
-    each vector gets n_bands*bits_per_band hyperplane sign bits
-    (P[bit match] = 1 - angle/pi) from one numpy matmul per Arrow
-    batch; bits group into band keys; ONE shuffle on the band key;
-    exact cosine is computed in-bucket (the member struct carries the
-    vector), so candidates are verified with no join-back.
-
-    Band shape tradeoff: detection for cos>=0.9 with 24x12 bands is
-    ~0.98 while a random (near-orthogonal) pair collides in a band
-    w.p. 2^-12 — wider bands flood the verify stage with random
-    collisions (measured 30x the candidate pairs at 12x6).
-
-    Replaces pyspark.ml BucketedRandomProjectionLSH.approxSimilarityJoin
-    (measured 6.8s vs <2s on sf0.1; and ml.Vector conversion costs an
-    extra python<->JVM round per row at scale)."""
-    import numpy as np
-
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
-
-    n_planes = n_bands * bits_per_band
-    powers = (1 << np.arange(bits_per_band - 1, -1, -1)).astype(np.int64)
-    # dim x n_planes projection matrix; the sign bits come from one
-    # numpy matmul per Arrow batch. (A higher-order-fn formulation —
-    # 72 aggregate(zip_with(...)) per row — is interpreted, not
-    # codegen'd, and measured ~4s vs <1s for the matmul.) The matrix
-    # is built lazily INSIDE the UDF from the first batch's width —
-    # a driver-side dim probe would cost one extra Spark job per call;
-    # the seeded generator makes every worker derive identical planes.
-    state: dict = {}
-
-    @pandas_udf(ArrayType(LongType()))
-    def band_keys(vecs: pd.Series) -> pd.Series:
-        m = np.vstack(vecs.to_numpy()).astype(np.float64)  # (n, dim)
-        if "dim" not in state:
-            rng = np.random.default_rng(seed)
-            state["dim"] = m.shape[1]
-            state["planes_t"] = rng.standard_normal((n_planes, m.shape[1])).T.copy()
-        elif state["dim"] != m.shape[1]:
-            # a mixed-width corpus must fail LOUDLY: regenerating
-            # planes per width would hash the widths into disjoint,
-            # incomparable bucket spaces — silent zero recall across
-            # widths (worker state is per-process, so the check is
-            # per-worker; np.vstack above already rejects a mix
-            # WITHIN a batch)
-            raise ValueError(
-                f"embedding dim changed {state['dim']} -> {m.shape[1]}: "
-                "near-dup LSH requires one vector width per corpus"
-            )
-        bits = (m @ state["planes_t"]) > 0  # (n, n_planes)
-        keys = bits.reshape(len(m), n_bands, bits_per_band).astype(np.int64) @ powers
-        return pd.Series(list(keys))
-
-    # No repartition before the signature stage (round 17): the banded
-    # explode feeds bucketed_pairs' groupBy exchange, which
-    # redistributes anyway, and the signature is one vectorized matmul
-    # per Arrow batch — a repartition here only multiplied the python
-    # crossings (32 tiny batches instead of the scan's natural splits;
-    # at 100 TB the scan splits parallelize the stage by themselves).
-    banded = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("__vec")
-    ).select("id", "__vec", F.posexplode(band_keys("__vec")).alias("band_idx", "band_val"))
-    pairs = bucketed_pairs(
-        banded,
-        ["band_idx", "band_val"],
-        _vec_member(),
-        _hoisted_cos_pair("cos"),
-        max_bucket=max_bucket,
-        observation=observation,
-    )
-    return pairs.where(F.col("cos") >= cos_threshold).dropDuplicates(["id_a", "id_b"])
-
-
 def _vec_member() -> Column:
     """Member struct for cosine-verified LSH buckets: (id, vec, norm).
     The L2 norm is hoisted OUT of the quadratic pair loop (round 17):
@@ -1003,14 +920,18 @@ def embedding_near_dup_pairs_int(
     quant: int = 1000,
     observation=None,
 ) -> DataFrame:
-    """embedding_near_dup_pairs in the ORACLE-REPRODUCIBLE form: the
-    SRP hyperplanes are ±1 Rademacher weights derived from a
-    multiply-xorshift mix of (dim, plane), applied to the INTEGER-
-    quantized vector floor(x*quant) — so every sign bit is exact int64
-    arithmetic a SQL oracle replays bit-for-bit (float hyperplane dot
-    products near zero could round differently across engines; integer
-    ones cannot). Exact cosine (on the ORIGINAL float vectors) is
-    verified in-bucket; same one-shuffle bucketed_pairs shape.
+    """Cosine-near-duplicate pairs via signed-random-projection LSH in
+    the ORACLE-REPRODUCIBLE form: the SRP hyperplanes are ±1
+    Rademacher weights derived from a multiply-xorshift mix of
+    (dim, plane), applied to the INTEGER-quantized vector
+    floor(x*quant) — so every sign bit is exact integer arithmetic a
+    SQL oracle replays bit-for-bit (float hyperplane dot products near
+    zero could round differently across engines; integer ones cannot).
+    Each vector's n_bands*bits_per_band sign bits come from one matmul
+    per Arrow batch and group into band keys; ONE shuffle on the band
+    key; exact cosine (on the ORIGINAL float vectors) is verified
+    in-bucket (the member struct carries the vector), so candidates
+    need no join-back.
 
     The mixer MUST be nonlinear in the plane index: an affine LCG
     makes each band's planes shifted copies of one threshold sequence
@@ -1022,7 +943,16 @@ def embedding_near_dup_pairs_int(
 
     P[bit match] = 1 - angle/pi still holds for Rademacher planes, so
     detection at cos>=0.9 with 8x6 bands is ~0.995 while a random
-    pair collides in a band w.p. ~2^-6.
+    pair collides in a band w.p. ~2^-6. Wider keys trade the other
+    way: semantic_dedup's 24x12 bands keep detection ~0.98 at
+    cos>=0.9 while a random pair collides w.p. 2^-12 per band, so a
+    large corpus does not flood the verify stage.
+
+    Every vector of one corpus must have one width: a width change
+    raises ``ValueError`` (np.vstack rejects a mix WITHIN an Arrow
+    batch; the first batch's width is checked against every later
+    batch the same UDF instance sees), since per-width planes would
+    hash the widths into disjoint bucket spaces.
 
     bits_per_band=None AUTO-SIZES band width to the corpus: occupancy
     per band value grows linearly with corpus size under fixed bits,
@@ -1045,12 +975,24 @@ def embedding_near_dup_pairs_int(
         # tiny corpus still gets real bands, <=24 to bound key width
         bits_per_band = min(24, max(4, math.ceil(math.log2(max(2, n / (max_bucket / 4))))))
     n_planes = n_bands * bits_per_band
+    state: dict = {}
 
     @pandas_udf(ArrayType(LongType()))
     def band_keys(vecs: pd.Series) -> pd.Series:
         m = np.vstack(vecs.to_numpy()).astype(np.float64)  # (n, dim)
-        q = np.floor(m * quant).astype(np.int64)
-        dim = q.shape[1]
+        dim = m.shape[1]
+        if state.setdefault("dim", dim) != dim:
+            raise ValueError(
+                f"embedding dim changed {state['dim']} -> {dim}: "
+                "near-dup LSH requires one vector width per corpus"
+            )
+        # floor(x*quant) is the oracle's integer vector; it and every
+        # partial sum of the ±1 products stay integers below 2^53, so
+        # the float64 matmul is exact (in any summation order) and its
+        # signs equal the int64 product's — but it runs on BLAS, where
+        # numpy's int64 matmul has none (10k x 768-dim rows x 288
+        # planes, 4 vCPU: 3.8 s int64 vs 0.37 s float64).
+        q = np.floor(m * quant)
         i = np.arange(dim, dtype=np.int64)[:, None]
         p = np.arange(n_planes, dtype=np.int64)[None, :]
         k = i * n_planes + p
@@ -1058,14 +1000,16 @@ def embedding_near_dup_pairs_int(
         h2 = (h1 ^ (h1 >> 15)) % 2147483648
         h3 = (h2 * 2246822519) % 4294967296
         h4 = h3 ^ (h3 >> 13)
-        w = np.where(h4 % 2 == 0, 1, -1).astype(np.int64)  # (dim, planes)
+        w = np.where(h4 % 2 == 0, 1.0, -1.0)  # (dim, planes)
         bits = (q @ w) >= 0  # (n, planes)
         powers = (1 << np.arange(bits_per_band)).astype(np.int64)  # bit j -> 2^j
         keys = bits.reshape(len(q), n_bands, bits_per_band).astype(np.int64) @ powers
         return pd.Series(list(keys))
 
-    # same round-17 shape as embedding_near_dup_pairs: no repartition
-    # ahead of the groupBy exchange, norms hoisted out of the pair loop
+    # No repartition before the signature stage (round 17): the banded
+    # explode feeds bucketed_pairs' groupBy exchange, which
+    # redistributes anyway, and the signature is one vectorized matmul
+    # per Arrow batch. Norms are hoisted out of the pair loop
     # (_vec_member / _hoisted_cos_pair) — measured 3.12 s -> 1.83 s
     # warm at sf0.1 interleaved, results value-identical.
     banded = corpus.select(
@@ -1101,7 +1045,9 @@ def semantic_dedup(
     representative per cluster (min id).
 
     Candidate blocking, two forms:
-    - default: SRP-LSH bands (embedding_near_dup_pairs — data-
+    - default: SRP-LSH bands (embedding_near_dup_pairs_int, the
+      generator q_embed_near_dup runs, here with 24x12 bands and
+      max_bucket 64 unless ``lsh_kwargs`` override them — data-
       independent, one-shuffle, recall guaranteed by the banding
       pigeonhole even across cluster boundaries);
     - ``index=IVFIndex``: the PAPER's k-means-cell form (round 6) —
@@ -1187,13 +1133,13 @@ def semantic_dedup(
     else:
         if corpus is None:
             raise ValueError("semantic_dedup needs a corpus or an index")
-        pairs = embedding_near_dup_pairs(
+        pairs = embedding_near_dup_pairs_int(
             corpus,
             cos_threshold=cos_threshold,
             vec_col=vec_col,
             id_col=id_col,
             observation=observation,
-            **lsh_kwargs,
+            **{"n_bands": 24, "bits_per_band": 12, "max_bucket": 64, **lsh_kwargs},
         )
     return dedup_cluster_representatives(
         corpus, pairs.select("id_a", "id_b"), id_col=id_col, max_iter=max_iter

@@ -2234,7 +2234,7 @@ def q_embed_near_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LCG weights and floor(x*1000) quantization are bit-identical —
     # pinned against the _cell_bit expression form in
     # tests/test_northstar.py). The repartition ahead of the stage is
-    # gone for the same reason as embedding_near_dup_pairs: the banded
+    # gone for the same reason as embedding_near_dup_pairs_int: the banded
     # explode feeds bucketed_pairs' groupBy exchange, which
     # redistributes anyway. Norms are hoisted out of the pair loop
     # (_vec_member). Interleaved A/B: 1.69 s -> 0.93 s warm at sf0.1,

@@ -68,8 +68,17 @@ def test_pagerank_unweighted_and_ordering(spark):
 
 
 def test_pagerank_empty(spark):
-    df = spark.createDataFrame([], "src string, dst string, weight long")
-    assert pagerank(df).count() == 0
+    from pyspark.sql.types import DoubleType, LongType, StringType
+
+    for id_type in (StringType(), LongType()):
+        df = spark.createDataFrame(
+            [], f"src {id_type.simpleString()}, dst {id_type.simpleString()}, weight long"
+        )
+        out = pagerank(df)
+        assert [(f.name, f.dataType) for f in out.schema] == [
+            ("id", id_type), ("rank", DoubleType())
+        ]
+        assert out.count() == 0
 
 
 def test_link_graph_edges(spark):

@@ -9,13 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from snapflow_spark.multimodal import attach_image_blob, extract_features, sample_frame_offsets
-from snapflow_spark.operators.dedup_text import (
-    exact_dedup,
-    minhash_candidates,
-    ngram_jaccard_pairs,
-    simhash_candidates,
-)
-from snapflow_spark.operators.similarity import IVFIndex, brute_force_topk, embedding_near_dup_pairs
+from snapflow_spark.operators.dedup_text import exact_dedup, ngram_jaccard_pairs
+from snapflow_spark.operators.similarity import IVFIndex, brute_force_topk
 
 WORDS = (
     "spark data table row column filter join group window agg scan hash "
@@ -52,21 +47,12 @@ def test_exact_dedup_removes_exact_copies(planted, spark):
     assert dups == {orig: 2 for orig, _copy in exact_ids}
 
 
-def test_minhash_recall_on_planted_near_dups(planted):
-    df, near_pairs, exact_ids = planted
-    cands = minhash_candidates(df, jaccard_threshold=0.5, num_hash_tables=8)
-    got = {(r.id_a, r.id_b) for r in cands.collect()}
-    found = sum(1 for p in near_pairs if p in got)
-    assert found / len(near_pairs) >= 0.8  # FIXTURES.md recall bound
-    # exact copies are jaccard-1.0 — all must surface
-    assert all(p in got for p in exact_ids)
-
-
 def test_minhash_sha_recall_on_planted_near_dups(planted):
     """Oracle-reproducible MinHash (q_dedup_minhash's generator) meets
-    the same recall bound as the xxhash64 at-scale form, and its
-    signature math matches a from-scratch python replay of the
-    LCG-permutation spec (the contract the SQL oracle relies on)."""
+    the FIXTURES.md recall bound on the planted near-dups and surfaces
+    every exact copy, and its signature math matches a from-scratch
+    python replay of the LCG-permutation spec (the contract the SQL
+    oracle relies on)."""
     import hashlib
 
     from snapflow_spark.functions.text import _minhash_sha_bands_batch
@@ -95,15 +81,6 @@ def test_minhash_sha_recall_on_planted_near_dups(planted):
     import pandas as pd
 
     assert list(_minhash_sha_bands_batch(pd.Series([text]))[0]) == expect
-
-
-def test_simhash_finds_near_dups(planted):
-    df, near_pairs, exact_ids = planted
-    pairs = {(r.id_a, r.id_b): r.hamming for r in simhash_candidates(df, max_hamming=6).collect()}
-    assert all(p in pairs for p in exact_ids)
-    assert all(pairs[p] == 0 for p in exact_ids)
-    found = sum(1 for p in near_pairs if p in pairs)
-    assert found / len(near_pairs) >= 0.8
 
 
 def test_ngram_jaccard_verification(planted, spark):
@@ -152,14 +129,6 @@ def test_ivf_recall_vs_brute_force(embeddings):
         len(exact_sets[p] & approx_sets.get(p, set())) / 5 for p in exact_sets
     ]
     assert sum(recalls) / len(recalls) >= 0.8
-
-
-def test_embedding_near_dup_finds_planted(embeddings):
-    pairs = {(r.id_a, r.id_b) for r in embedding_near_dup_pairs(
-        embeddings, cos_threshold=0.95
-    ).collect()}
-    planted = {(j, 500 + j) for j in range(3)}
-    assert planted <= pairs
 
 
 def test_embedding_near_dup_int_finds_planted(embeddings):
@@ -965,9 +934,9 @@ def test_audio_blob_pipeline_spark(spark, planted):
 
 
 def test_simhash_sha_finds_near_dups(planted):
-    """The oracle-reproducible sha256 simhash keeps the same detection
-    contract as the numpy path: exact copies at hamming 0, planted
-    near-dups recalled."""
+    """The oracle-reproducible sha256 simhash (q_dedup_simhash's
+    generator) meets the near-dup detection contract: exact copies at
+    hamming 0, planted near-dups recalled."""
     from snapflow_spark.operators.dedup_text import simhash_sha_candidates
 
     df, near_pairs, exact_ids = planted
@@ -1570,26 +1539,38 @@ def test_embedding_near_dup_mixed_dim_raises(spark):
     """A corpus mixing vector widths must fail loudly, not silently
     hash the widths into disjoint bucket spaces (zero cross-width
     recall). Two guards cover the two physical cases: np.vstack
-    rejects a mix WITHIN one Arrow batch; the per-worker dim check
-    rejects a width change ACROSS batches (which would otherwise
-    regenerate planes per width). Either way: a loud error, never
-    silently-empty pairs."""
-    from snapflow_spark.operators.similarity import embedding_near_dup_pairs
+    rejects a mix WITHIN one Arrow batch; the UDF's first-batch dim
+    check rejects a width change ACROSS batches — both widths in one
+    partition, split into 10-row batches, where without the check the
+    in-bucket cosine fails late (a divide by zero) or not at all.
+    Either way: a loud error, never silently-empty pairs."""
+    from snapflow_spark.operators.similarity import embedding_near_dup_pairs_int
 
     a = spark.createDataFrame(
         [(i, [float(i % 7), 1.0, 2.0, 3.0]) for i in range(50)],
         "vec_id bigint, embedding array<float>",
-    ).repartition(1)
+    )
     b = spark.createDataFrame(
         [(1000 + i, [float(i % 5)] * 8) for i in range(50)],
         "vec_id bigint, embedding array<float>",
-    ).repartition(1)
-    mixed = a.unionByName(b)
+    )
+    mixed = a.repartition(1).unionByName(b.repartition(1))
     with pytest.raises(
         Exception,
         match="dim changed|one vector width|input array dimensions",
     ):
-        embedding_near_dup_pairs(mixed, cos_threshold=0.9).count()
+        embedding_near_dup_pairs_int(mixed, cos_threshold=0.9).count()
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "10")
+    try:
+        with pytest.raises(Exception, match="dim changed"):
+            embedding_near_dup_pairs_int(
+                a.unionByName(b).coalesce(1), cos_threshold=0.9
+            ).count()
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_jpeg_progressive_codec():
