@@ -16,6 +16,7 @@ incremental tick (readers union only the snapshot dirs they need).
 
 from __future__ import annotations
 
+import shutil
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from pathlib import Path
@@ -24,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from snapflow_spark.incremental.ledger import RunLedger
 from snapflow_spark.incremental.store import SnapshotStore
+from snapflow_spark.scope import owned
 
 CONSUMABLE = "consumable"
 REFERENCE = "reference"
@@ -135,36 +137,19 @@ class Pipeline:
                 return False
             seen["__init__"] = ["done"]
 
-        out = node.fn(spark, **inputs)
-        out_store = self.store(node.name)
-        if out is not None:
-            if node.overwrite:
-                # latest-state node: write the new snapshot, retire old
-                sid = out_store.append(out)
-                for old in out_store.snapshot_ids():
-                    if old != sid:
-                        import shutil
-
-                        shutil.rmtree(out_store.path / old)
-            else:
-                out_store.append(out)
-            # Operators that pin an internal table advertise it on the
-            # result (victims_cache / candidate_cache — the
-            # caller-unpersist convention, dedup_text.py). The append
-            # above materialized the output, so the pin is dead weight
-            # now; release it or a long-lived pipeline accumulates one
-            # stale persist per node run (round 8, VERDICT r7 #1).
-            for handle in (
-                "victims_cache",
-                "candidate_cache",
-                "grams_cache",
-                "pagerank_caches",  # list-valued (linkgraph.pagerank)
-            ):
-                pinned = getattr(out, handle, None)
-                if pinned is None:
-                    continue
-                for p in pinned if isinstance(pinned, (list, tuple)) else (pinned,):
-                    p.unpersist()
+        # the append materializes the output: the node's pins die after it
+        with owned():
+            out = node.fn(spark, **inputs)
+            out_store = self.store(node.name)
+            if out is not None:
+                if node.overwrite:
+                    # latest-state node: write the new snapshot, retire old
+                    sid = out_store.append(out)
+                    for old in out_store.snapshot_ids():
+                        if old != sid:
+                            shutil.rmtree(out_store.path / old)
+                else:
+                    out_store.append(out)
         for input_name, ids in seen.items():
             self.ledger.mark_consumed(node.name, input_name, ids)
         return True

@@ -48,6 +48,7 @@ def _distinct_grams_frag(text_col: str, n: int):
         lambda: F.array_distinct(ngram_expr(tokens_expr(text_col), n)),
     )
 from snapflow_spark.operators.buckets import bucketed_pairs
+from snapflow_spark.scope import pin
 
 
 def exact_dedup(
@@ -342,15 +343,8 @@ def ngram_jaccard_pairs(
     between the stages — same idea. ``wanted`` is one explode over the
     pair set, not a two-select union — one reference instead of two.
 
-    The persisted candidate frame is exposed as ``candidate_cache``
-    on the RETURNED DataFrame (the lsh_observation attribute
-    convention): a driver looping over many corpora should call
-    ``result.candidate_cache.unpersist()`` after materializing each
-    result, or the dead pair caches accumulate until storage-memory
-    eviction (which would also make the Observation counters inexact
-    again). Single-shot queries can ignore it — session teardown
-    releases the cache."""
-    candidate_pairs = candidate_pairs.persist()
+    Both pins belong to the enclosing scope (``scope.pin``)."""
+    candidate_pairs = pin(candidate_pairs)
     wanted = (
         candidate_pairs.select(
             F.explode(F.array(F.col("id_a"), F.col("id_b"))).alias(id_col)
@@ -364,7 +358,7 @@ def ngram_jaccard_pairs(
     # evaluated per row, the dominant CPU here; measured ~2x the
     # verify cost without the pin at sf0.1). Bounded like the
     # candidate pin: one row per doc that appears in a candidate pair.
-    grams = (
+    grams = pin(
         # probe=df: the semi-join preserves df's partitioning (wanted
         # broadcasts), so the widen decision comes from the stable
         # corpus frame — one partition probe per session instead of
@@ -376,7 +370,6 @@ def ngram_jaccard_pairs(
             _distinct_grams_frag(text_col, n).alias("grams"),
         )
         .withColumn("n_grams", F.size("grams"))
-        .persist()
     )
     ga = grams.select(
         F.col(id_col).alias("id_a"),
@@ -393,7 +386,7 @@ def ngram_jaccard_pairs(
     # interpreted expressions; halving the per-pair array work). The
     # integer counts are identical by construction, so the double
     # division is bit-identical to the old size(union) form.
-    out = (
+    return (
         candidate_pairs.join(ga, "id_a")
         .join(gb, "id_b")
         .withColumn("__i", F.size(F.array_intersect("grams_a", "grams_b")))
@@ -405,9 +398,6 @@ def ngram_jaccard_pairs(
             ),
         )
     )
-    out.candidate_cache = candidate_pairs  # release handle (docstring)
-    out.grams_cache = grams  # same caller-unpersist convention
-    return out
 
 
 def dedup_lines_global(
@@ -705,17 +695,11 @@ def excise_shared_spans(
     The contaminated-docs table is persisted (both output branches
     consume it, and Spark does not ReuseExchange across a union's
     branches — without the pin the corpus-scale gram shuffle runs
-    TWICE, verified round 7). Lifecycle (round 8): the pin is exposed
-    as ``victims_cache`` on the returned DataFrame — the same
-    caller-unpersist convention as ``ngram_jaccard_pairs``'s
-    ``candidate_cache``. A driver looping over corpora should call
-    ``result.victims_cache.unpersist()`` after materializing each
-    result; single-shot queries can ignore it (session teardown
-    releases it). Pass ``cache_victims=False`` when only ONE branch
-    of the output will actually execute — e.g. a consumer that
-    filters to ``n_excised_spans > 0``, which constant-folds the
-    clean branch away — so the single-reference plan doesn't leave a
-    stale cache entry behind (the roster query does this)."""
+    TWICE, verified round 7); it belongs to the enclosing scope
+    (``scope.pin``). Pass ``cache_victims=False`` when only ONE branch
+    will execute (a consumer filtering to ``n_excised_spans > 0``
+    constant-folds the clean branch away): there the pin is pure cost
+    (q_fingerprint_winnow, sf0.1, 4 vCPU: 3.8-4.5 s vs 4.6-5.7 s warm)."""
     from snapflow_spark.functions.text import TOKEN_RE
 
     if min_span_tokens is None:
@@ -794,7 +778,7 @@ def excise_shared_spans(
         .agg(*victim_aggs)
     )
     if cache_victims:
-        victims = victims.persist()
+        victims = pin(victims)
 
     gram_n, min_span = int(n), int(min_span_tokens)
 
@@ -878,6 +862,4 @@ def excise_shared_spans(
             *touched_gram_cols,
         )
     )
-    out = clean.unionByName(touched)
-    out.victims_cache = victims  # caller-unpersist convention, see docstring
-    return out
+    return clean.unionByName(touched)

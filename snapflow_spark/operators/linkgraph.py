@@ -15,7 +15,7 @@ Spark-first shapes:
   uniform-dangling-redistribution model. Each iteration is exactly
   two shuffles on the EDGE set (join ranks at src, groupBy dst) —
   the graph analog of connected_components' loop (dedup_text.py:343)
-  and it reuses its discipline: ``localCheckpoint(eager=True)`` per
+  and it reuses its discipline: a (lazy) ``localCheckpoint`` per
   round truncates the lineage (the iterative-DataFrame trap), and
   the dangling mass is folded in as a broadcast ONE-ROW aggregate
   (the DSIR deferred-totals shape) instead of a per-round
@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from snapflow_spark.functions.urls import host_expr, registered_domain_expr
+from snapflow_spark.scope import pin
 
 
 def link_graph_edges(
@@ -94,7 +95,6 @@ def pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str | None = "weight",
-    eager: bool = False,
 ) -> DataFrame:
     """PageRank by power iteration: rank' = (1-d)/N + d·(Σ incoming
     rank/out_weight + dangling_mass/N), dangling nodes (no outlinks)
@@ -118,23 +118,11 @@ def pagerank(
     CONSTRUCTION time; deferring it keeps every scalar in the plan and
     the arithmetic identical (same IEEE double ops, same order).
 
-    ``eager`` (round 18): the per-round ``localCheckpoint`` still
-    truncates the logical plan at construction either way (the
-    iterative-DataFrame trap — ranks is referenced twice per round, so
-    an untruncated plan doubles per iteration), but the default is now
-    LAZY materialization: construction launches zero jobs and the
-    caller's one action materializes the whole cascade (measured ~17%
-    faster end-to-end than the eager form at sf0.1 — the per-round
-    eager jobs paid job-launch + AQE latency serially). The internal
-    ``nodes``/``norm_edges`` persists must then OUTLIVE construction
-    (unpersisting them here is exactly the r17-rejected task-count
-    explosion: every un-pinned reference re-runs the edge groupBy),
-    so they are exposed as ``pagerank_caches`` on the returned
-    DataFrame — the caller-unpersist convention of
-    ``ngram_jaccard_pairs.candidate_cache``; pipeline ``run_node``
-    releases them automatically. ``eager=True`` restores the
-    materialize-at-construction behavior and releases the caches
-    before returning."""
+    The per-round ``localCheckpoint`` is lazy (round 18, ~17% faster
+    than eager at sf0.1): it truncates the plan (ranks is referenced
+    twice per round) but launches no job, so the ``nodes``/``norm_edges``
+    pins must outlive this call (un-pinned, every reference re-runs the
+    edge groupBy) and belong to the enclosing scope (``scope.pin``)."""
     w = F.col(weight_col) if weight_col else F.lit(1).cast("bigint")
     # non-positive weights would poison the out-weight normalization
     # (share = w / Σw, division by zero for an all-zero src); they
@@ -142,19 +130,17 @@ def pagerank(
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
     ).where(F.col("w") > 0)
-    nodes = (
+    nodes = pin(
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))
         .distinct()
-        .persist()
     )
     # per-src total outgoing weight, denormalized onto the edges ONCE
     # (invariant across iterations — pay the join a single time)
     out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
-    norm_edges = (
+    norm_edges = pin(
         e.join(out_w, "src")
         .select("src", "dst", (F.col("w") / F.col("out_w")).alias("share"))
-        .persist()
     )
     has_out = out_w.select(F.col("src").alias("id")).withColumn(
         "has_out", F.lit(True)
@@ -169,7 +155,7 @@ def pagerank(
     base = (
         nodes.join(has_out, "id", "left")
         .crossJoin(F.broadcast(ncount))
-        .localCheckpoint(eager=eager)
+        .localCheckpoint(eager=False)
     )
     ranks = base.withColumn("rank", F.lit(1.0) / F.col("__n"))
 
@@ -200,12 +186,6 @@ def pagerank(
                     )
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=eager)
+            .localCheckpoint(eager=False)
         )
-    out = ranks.select("id", "rank")
-    if eager:
-        nodes.unpersist()
-        norm_edges.unpersist()
-    else:
-        out.pagerank_caches = [nodes, norm_edges]
-    return out
+    return ranks.select("id", "rank")

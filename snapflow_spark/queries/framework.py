@@ -4,8 +4,6 @@ translation, format round-trips, and the incremental run loop.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 from pathlib import Path
 from weakref import WeakKeyDictionary
 
@@ -17,6 +15,7 @@ from snapflow_spark.compat import ts_millis, ts_millis_sql
 from snapflow_spark.incremental import Node, Pipeline
 from snapflow_spark.operators import dedupe_keep_latest, merge_streams, schema_translate
 from snapflow_spark.registry import query
+from snapflow_spark.scope import scratch_dir
 from snapflow_spark.sources import (
     read_csv,
     read_jsonl,
@@ -27,13 +26,6 @@ from snapflow_spark.sources import (
 )
 
 _SCRATCH = Path(__file__).resolve().parent.parent.parent / ".scratch"
-
-#: q_incremental_semantics' deferred-teardown warehouse, one per
-#: session (round 18): the previous invocation's tempdir is removed on
-#: the next invocation, so the returned lazy store read stays valid
-#: until the caller has materialized it (every harness materializes
-#: each query before constructing the next).
-_INCR_WAREHOUSES: "WeakKeyDictionary" = WeakKeyDictionary()
 
 _EVENT_COLS = ["event_id", "user_id", "event_type", "value"]
 
@@ -1124,25 +1116,17 @@ def q_incremental_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedupe over the full table — the core "incremental == batch"
     guarantee snapflow is built around.
 
-    Round 18: the result is returned as a LAZY read of the
-    latest_state store itself instead of a copy-out write to stable
-    scratch — one fewer Spark re-encode job (and its read-back) per
-    invocation. That requires the warehouse to outlive this call, so
-    teardown is DEFERRED: each invocation removes the PREVIOUS
-    invocation's warehouse (whose returned DataFrame the caller has
-    materialized by then — the bench/oracle/driver contract), and at
-    most one ~events-sized tempdir lives until the next call or
-    process end. The pipeline ticks themselves (3 delta appends, 3
-    identity-append hard-links, 3 state recomputes) are the declared
-    semantics and still run end-to-end per invocation.
+    Round 18: the result is a LAZY read of the latest_state store
+    itself (no copy-out write and read-back), so the warehouse outlives
+    this call: a ``scope.scratch_dir`` of the registry query, removed
+    when the next registry query on the session starts (the caller has
+    materialized this one by then — the bench/oracle/driver contract)
+    or at process exit. The pipeline ticks themselves (3 delta
+    appends, 3 identity-append hard-links, 3 state recomputes) are the
+    declared semantics and still run end-to-end per invocation.
     """
     _SCRATCH.mkdir(parents=True, exist_ok=True)
-    prev = _INCR_WAREHOUSES.pop(spark, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    warehouse = tempfile.mkdtemp(prefix="incr_", dir=_SCRATCH)
-    _INCR_WAREHOUSES[spark] = warehouse
-    pipe = Pipeline(warehouse)
+    pipe = Pipeline(scratch_dir("incr_", dir=_SCRATCH))
     src = pipe.add_source("events_src")
     pipe.add_node(
         Node(

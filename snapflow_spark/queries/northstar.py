@@ -1209,8 +1209,8 @@ def q_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged-interval arithmetic all hash-match DuckDB; the surgery
     itself additionally returns byte-exact text, pinned in pytest).
     cache_victims=False: the n>0 filter constant-folds the clean
-    branch away, leaving one reference to the victims table — no pin
-    needed, nothing leaks per bench iteration."""
+    branch away, leaving one reference to the victims table, so a pin
+    is pure cost (sf0.1, 4 vCPU: 4.6-5.7 s pinned vs 3.8-4.5 s warm)."""
     from snapflow_spark.operators.dedup_text import (
         excise_shared_spans,
         shared_span_pairs,

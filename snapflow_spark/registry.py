@@ -7,10 +7,14 @@ driver; ``tools/check_queries.py`` runs the same comparison locally.
 
 from __future__ import annotations
 
+import atexit
 from collections.abc import Callable
 from dataclasses import dataclass
+from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
+
+from snapflow_spark.scope import Scope
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -25,6 +29,16 @@ class QuerySpec:
 
 QUERIES: dict[str, QuerySpec] = {}
 
+#: each session's last registry query's scope, open until the next one
+_QUERY_SCOPES: WeakKeyDictionary[SparkSession, Scope] = WeakKeyDictionary()
+
+
+@atexit.register
+def _remove_query_dirs() -> None:
+    # dirs only: the JVM may already be gone, so nothing is unpersisted
+    for scope in list(_QUERY_SCOPES.values()):
+        scope.remove_dirs()
+
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
@@ -32,7 +46,10 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             tune(spark)
-            return fn(spark, sf_dir)
+            if spark in _QUERY_SCOPES:
+                _QUERY_SCOPES[spark].release()
+            with Scope() as _QUERY_SCOPES[spark]:
+                return fn(spark, sf_dir)
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__

@@ -14,6 +14,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from snapflow_spark.scope import owned, scratch_dir
+
 
 def stream_from_snapshots(
     spark: SparkSession,
@@ -96,16 +98,15 @@ def stream_to_snapshots(
         else:
             os.rename(tmp, target)
 
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
-    writer = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
+    writer = stream.writeStream.foreachBatch(write_batch)
+    if not available_now:  # a running query keeps its checkpoint
+        checkpoint = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
+        return writer.option("checkpointLocation", checkpoint).start()
+    with owned():  # a checkpoint made here dies with the finished run
+        writer = writer.option("checkpointLocation", checkpoint or scratch_dir("ckpt_"))
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
-        return q
-    return writer.start()
+    return q
 
 
 def run_stream_to_batch(
@@ -116,14 +117,14 @@ def run_stream_to_batch(
     """Run a bounded streaming query to completion (availableNow) into
     an in-memory sink and return the final result as a DataFrame."""
     name = f"snapflow_stream_{abs(hash(stream)) % 10**8}"
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with owned():  # the memory sink outlives a checkpoint made here
+        q = (
+            stream.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint or scratch_dir("ckpt_"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     return stream.sparkSession.table(name)

@@ -13,6 +13,7 @@ from snapflow_spark.operators.curation import (
     split_by_hash,
     stratified_sample_by_hash,
 )
+from snapflow_spark.scope import owned
 
 
 @pytest.fixture(scope="module")
@@ -211,14 +212,12 @@ def _excised(spark, rows, n=4, **kw):
     from snapflow_spark.operators.dedup_text import excise_shared_spans
 
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    out = excise_shared_spans(df, n=n, **kw)
-    try:
+    with owned():
+        out = excise_shared_spans(df, n=n, **kw)
         return {
             r.doc_id: (r.text, r.n_excised_spans, r.n_excised_tokens)
             for r in out.collect()
         }
-    finally:
-        out.victims_cache.unpersist()
 
 
 def test_excise_shared_spans_planted_leak(spark):
@@ -271,9 +270,9 @@ def test_excise_min_span_threshold_and_priority(spark):
     df = spark.createDataFrame(
         [r + (9 - r[0],) for r in rows], "doc_id bigint, text string, rank bigint"
     )
-    out = excise_shared_spans(df, n=4, priority_col="rank")
-    got2 = {r.doc_id: (r.text, r.n_excised_spans) for r in out.collect()}
-    out.victims_cache.unpersist()
+    with owned():
+        out = excise_shared_spans(df, n=4, priority_col="rank")
+        got2 = {r.doc_id: (r.text, r.n_excised_spans) for r in out.collect()}
     assert got2[2][0] == rows[1][1]  # keeper now doc 2 (rank 7 < 8)
     assert got2[1] == ("aa bb cc dd", 1)
 
@@ -293,11 +292,11 @@ def test_excise_keeper_is_partial_agg_not_window(spark):
         for i in range(1, 9)
     ]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    out = excise_shared_spans(df, n=4)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    got = {r.doc_id: r for r in out.collect()}
-    out.victims_cache.unpersist()
+    with owned():
+        out = excise_shared_spans(df, n=4)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan
+        got = {r.doc_id: r for r in out.collect()}
     assert got[1].text == rows[0][1]  # keeper (min id) untouched
     for i in range(2, 9):
         assert got[i].text == f"alpha{i} beta{i} gamma{i} delta{i} epsilon{i}"
@@ -345,12 +344,12 @@ def test_excise_sha256_mode_parity_and_min_gram(spark):
         (3, "completely unrelated document with no overlap at all here"),
     ]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    base = excise_shared_spans(df, n=4)
-    got64 = {
-        r.doc_id: (r.text, r.n_excised_spans, r.n_excised_tokens)
-        for r in base.collect()
-    }
-    base.victims_cache.unpersist()
+    with owned():
+        base = excise_shared_spans(df, n=4)
+        got64 = {
+            r.doc_id: (r.text, r.n_excised_spans, r.n_excised_tokens)
+            for r in base.collect()
+        }
     out = excise_shared_spans(df, n=4, hash_fn="sha256", cache_victims=False)
     got256 = {r.doc_id: r for r in out.collect()}
     assert {
@@ -408,35 +407,32 @@ def test_excise_composes_into_curation_pipeline(spark):
     )
     base = d.unionByName(extra)
     keep = exact_dedup(base, text_col="text", id_col="doc_id").select("doc_id")
-    surg = excise_shared_spans(
-        base.join(keep, "doc_id", "left_semi"), n=8
-    )
-    pins = [surg.victims_cache]
-    out = split_by_hash(
-        surg.withColumn("n_toks", token_count_expr("text")), test_frac=0.1
-    )
-    packed = pack_sequences(
-        out.where(F.col("split") == "train"),
-        budget=512,
-        token_col="n_toks",
-        partition_col="lang",
-    )
-    assert packed.count() > 0
-    vict = {r.doc_id: r for r in surg.where(F.col("doc_id") > 900000).collect()}
-    assert vict[900002].text == "victim prefix victim suffix"
-    assert vict[900002].n_excised_tokens == 12
-    assert vict[900001].text.endswith(leak)  # keeper intact
-    # determinism: a second run assigns identical splits + texts
-    surg2 = excise_shared_spans(base.join(keep, "doc_id", "left_semi"), n=8)
-    pins.append(surg2.victims_cache)
-    again = split_by_hash(
-        surg2.withColumn("n_toks", token_count_expr("text")), test_frac=0.1
-    )
-    a = {(r.doc_id, r.split, r.text) for r in out.collect()}
-    b = {(r.doc_id, r.split, r.text) for r in again.collect()}
-    assert a == b
-    for p in pins:
-        p.unpersist()
+    with owned():
+        surg = excise_shared_spans(
+            base.join(keep, "doc_id", "left_semi"), n=8
+        )
+        out = split_by_hash(
+            surg.withColumn("n_toks", token_count_expr("text")), test_frac=0.1
+        )
+        packed = pack_sequences(
+            out.where(F.col("split") == "train"),
+            budget=512,
+            token_col="n_toks",
+            partition_col="lang",
+        )
+        assert packed.count() > 0
+        vict = {r.doc_id: r for r in surg.where(F.col("doc_id") > 900000).collect()}
+        assert vict[900002].text == "victim prefix victim suffix"
+        assert vict[900002].n_excised_tokens == 12
+        assert vict[900001].text.endswith(leak)  # keeper intact
+        # determinism: a second run assigns identical splits + texts
+        surg2 = excise_shared_spans(base.join(keep, "doc_id", "left_semi"), n=8)
+        again = split_by_hash(
+            surg2.withColumn("n_toks", token_count_expr("text")), test_frac=0.1
+        )
+        a = {(r.doc_id, r.split, r.text) for r in out.collect()}
+        b = {(r.doc_id, r.split, r.text) for r in again.collect()}
+        assert a == b
 
 
 def _naive_ffd(items, budget):

@@ -966,21 +966,22 @@ def test_yaml_builtin_tokenize(spark, tmp_path):
         _tokenize(spark, df, artifact=bpe_path, sample_alpha=0.5)
 
 
-def test_pipeline_releases_advertised_cache_handles(spark, tmp_path):
-    """run_node auto-unpersists victims_cache/candidate_cache after
-    materializing a node's output (VERDICT r7 #1 lifecycle): a node
-    function that returns a DataFrame advertising a pinned table must
-    leave it UNPINNED once produce() has written the snapshot."""
+def test_pipeline_releases_node_pins(spark, tmp_path):
+    """run_node runs each node inside a resource scope (VERDICT r7 #1
+    lifecycle): a table the node function pins is in memory while the
+    node runs and must be UNPINNED once produce() has written the
+    snapshot."""
     from snapflow_spark.plans import graph
+    from snapflow_spark.scope import pin
 
-    pinned = spark.createDataFrame([(1, "x")], "id long, v string").persist()
-    pinned.count()
-    assert pinned.storageLevel.useMemory
+    pins, during = [], []
 
     def node_fn(spark, input):  # noqa: A002
-        out = input.withColumn("w", F.lit(1))
-        out.victims_cache = pinned
-        return out
+        pinned = pin(spark.createDataFrame([(7, "x")], "id long, pv string"))
+        pinned.count()
+        pins.append(pinned)
+        during.append(pinned.storageLevel.useMemory)
+        return input.join(pinned, "id", "left")
 
     g = graph(str(tmp_path / "wh_release"))
     g.source("src")
@@ -989,9 +990,10 @@ def test_pipeline_releases_advertised_cache_handles(spark, tmp_path):
         spark.createDataFrame([(7, "a")], "id long, v string")
     )
     assert g.produce(spark) == 1
-    # the write materialized the output; the advertised pin is gone
-    assert not pinned.storageLevel.useMemory
-    assert g.read(spark, "n").count() == 1
+    assert during == [True]
+    # the write materialized the output; the node's pin is gone
+    assert not pins[0].storageLevel.useMemory
+    assert g.read(spark, "n").collect()[0].pv == "x"
 
 
 def test_yaml_builtin_expect(spark, tmp_path):

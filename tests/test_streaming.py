@@ -55,6 +55,29 @@ def test_stream_equals_batch_tumbling(spark, tmp_path):
     assert sum(n for _, n in stream_out) == 5
 
 
+def test_bounded_runs_remove_the_checkpoint_they_create(spark, tmp_path):
+    """Without ``checkpoint=`` a bounded run makes its own ckpt_* dir
+    and removes it once the query has terminated; the results (memory
+    sink, landed snapshot) stay readable."""
+    import tempfile
+    from pathlib import Path
+
+    from snapflow_spark.streaming.runner import stream_to_snapshots
+
+    def ckpts():
+        return set(Path(tempfile.gettempdir()).glob("ckpt_*"))
+
+    store = SnapshotStore(tmp_path / "events")
+    store.append(_mk_events(spark, [(1, 0, 1, 1.0), (2, 30, 1, 2.0)]))
+    before = ckpts()
+    out = run_stream_to_batch(stream_from_snapshots(spark, str(store.path), EV_SCHEMA))
+    landed = SnapshotStore(tmp_path / "landed")
+    stream_to_snapshots(stream_from_snapshots(spark, str(store.path), EV_SCHEMA), landed)
+    assert ckpts() - before == set()
+    assert sorted(r.event_id for r in out.collect()) == [1, 2]
+    assert sorted(r.event_id for r in landed.read(spark).collect()) == [1, 2]
+
+
 def test_streaming_dedupe_is_exactly_once_within_horizon(spark, tmp_path):
     """Streaming dedupe drops duplicate keys across micro-batches while
     their state lives; the watermark bounds the state, not the input
