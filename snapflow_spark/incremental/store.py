@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 from pathlib import Path
+from typing import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -75,22 +76,59 @@ class SnapshotStore:
         n = max(int(s.split("-")[1]) for s in ids) + 1 if ids else 0
         return f"snapshot-{n:06d}"
 
-    def _write_snapshot(self, df: DataFrame, sid: str) -> None:
-        """Commit protocol shared by append/compact: write to a
-        dot-prefixed temp dir (never listed, never claims an id), then
-        os.rename into place. A crashed write leaves only a temp dir —
-        reclaimed by the next writer of the same id — and the rename
-        fails LOUDLY if the target exists (a concurrent writer already
-        committed this id), instead of destroying anyone's output."""
+    def publish(
+        self,
+        sid: str,
+        stage: Callable[[Path], None],
+        schema: StructType | None = None,
+        replay: bool = False,
+    ) -> str:
+        """The one commit step: the only code that turns a staged dir
+        into snapshot ``sid``. ``stage(tmp)`` fills a dot-prefixed temp
+        dir (never listed, never claims an id; a crashed earlier write
+        of the same id left it behind and is reclaimed first). The
+        ``_SCHEMA`` record (when the writer knows the schema) and the
+        ``_SUCCESS`` marker go in, then one rename publishes.
+
+        The rename never replaces a committed dir: when ``sid`` exists
+        (a concurrent writer committed it), the temp dir is reclaimed —
+        the id is never reused, so it would leak — and FileExistsError
+        raised. Only ``replay=True`` (a streaming epoch re-run under its
+        own epoch-stamped id) retires the existing dir instead, via two
+        renames: POSIX has no atomic directory replace, so the id is
+        absent for the instant between them, which ``read`` retries
+        over. The dot-prefixed retired dir is invisible to readers."""
         import shutil
 
         target = self.path / sid
         tmp = self.path / f".{sid}.tmp"
         if tmp.exists():  # crashed earlier write of this id
             shutil.rmtree(tmp)
-        df.write.mode("errorifexists").parquet(str(tmp))
-        (tmp / _SCHEMA).write_text(df.schema.json())
-        os.rename(tmp, target)
+        stage(tmp)
+        if schema is not None:
+            (tmp / _SCHEMA).write_text(schema.json())
+        (tmp / "_SUCCESS").touch()
+        if replay and target.exists():
+            retired = self.path / f".{sid}.retired"
+            if retired.exists():
+                shutil.rmtree(retired)
+            os.rename(target, retired)
+            os.rename(tmp, target)
+            shutil.rmtree(retired)
+            return sid
+        if not target.exists():
+            try:
+                os.rename(tmp, target)
+                return sid
+            except OSError:
+                if not target.exists():
+                    raise
+        shutil.rmtree(tmp)
+        raise FileExistsError(
+            f"snapshot {target} already exists: a concurrent writer "
+            "committed this id (the store is single-writer; only a "
+            "replayed streaming epoch may overwrite its own id)"
+        )
 
     def _recorded_schema(self, ids: list[str]) -> StructType | None:
         """The schema every snapshot in ``ids`` recorded at commit, or
@@ -127,14 +165,16 @@ class SnapshotStore:
             sid = self._copy_snapshot(Path(src))
             if sid is not None:
                 return sid
-        sid = self._next_id()
-        self._write_snapshot(df, sid)
-        return sid
+        return self.publish(
+            self._next_id(),
+            lambda tmp: df.write.mode("errorifexists").parquet(str(tmp)),
+            schema=df.schema,
+        )
 
     def _copy_snapshot(self, src: Path) -> str | None:
         """Hard-link (copy on link failure) a committed snapshot dir's
         data files into the next snapshot id — same tmp-dir + rename
-        commit protocol as ``_write_snapshot``. Returns None (caller
+        commit step as a Spark write (``publish``). Returns None (caller
         falls back to the Spark write) when the source is gone or not
         a committed snapshot. ``_RETIRES`` is deliberately NOT copied:
         it masks ids in the SOURCE store, meaningless here; the
@@ -148,11 +188,8 @@ class SnapshotStore:
             for p in src.iterdir()
             if p.is_file() and not p.name.startswith((".", "_"))
         ]
-        sid = self._next_id()
-        tmp = self.path / f".{sid}.tmp"
-        if tmp.exists():  # crashed earlier write of this id
-            shutil.rmtree(tmp)
-        try:
+
+        def link(tmp: Path) -> None:
             tmp.mkdir()
             for p in files:
                 try:
@@ -161,12 +198,13 @@ class SnapshotStore:
                     shutil.copy2(p, tmp / p.name)
             if (src / _SCHEMA).exists():
                 shutil.copy2(src / _SCHEMA, tmp / _SCHEMA)
-            (tmp / "_SUCCESS").touch()
-            os.rename(tmp, self.path / sid)
+
+        try:
+            return self.publish(self._next_id(), link)
         except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
+            # a half-linked temp dir is reclaimed by the fallback
+            # write, which publishes the same id
             return None
-        return sid
 
     def read(
         self,
@@ -189,8 +227,8 @@ class SnapshotStore:
         blocks through schema.SchemaSpec first (the explicit path).
 
         Retries when a listed dir has vanished under us: a replayed
-        stream epoch swaps its snapshot via two renames (runner.py
-        write_batch), and POSIX has no atomic directory replace, so
+        stream epoch swaps its snapshot via two renames
+        (``publish(replay=True)``), and POSIX has no atomic directory replace, so
         for the instant between the renames the id is listed-but-
         absent. The retry re-lists (default mode) or waits out the
         swap (explicit ids), bounded so a genuinely deleted dir still
@@ -301,14 +339,12 @@ class SnapshotStore:
         # leftovers a previous crashed cleanup left behind
         retires = self._listed()
 
-        target = self.path / sid
-        tmp = self.path / f".{sid}.tmp"
-        if tmp.exists():  # crashed earlier write of this id
-            shutil.rmtree(tmp)
-        merged.write.mode("errorifexists").parquet(str(tmp))
-        (tmp / _SCHEMA).write_text(merged.schema.json())
-        (tmp / "_RETIRES").write_text(json.dumps(retires))
-        os.rename(tmp, target)  # atomic: publishes merged + masks old
+        def stage(tmp: Path) -> None:
+            merged.write.mode("errorifexists").parquet(str(tmp))
+            (tmp / "_RETIRES").write_text(json.dumps(retires))
+
+        # atomic: publishes merged + masks old
+        self.publish(sid, stage, schema=merged.schema)
 
         for o in retires:
             p = self.path / o

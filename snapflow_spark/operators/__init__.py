@@ -67,11 +67,9 @@ from snapflow_spark.operators.similarity import (
     IVFIndex,
     PQCodec,
     brute_force_topk,
-    brute_force_topk_matmul,
     derive_k_cells,
     embedding_near_dup_pairs_int,
     semantic_dedup,
-    ivf_pq_topk,
     prototype_filter,
     d4_select,
 )
@@ -96,11 +94,9 @@ __all__ = [
     "stratified_sample_by_hash",
     "IVFIndex",
     "PQCodec",
-    "ivf_pq_topk",
     "asof_join",
     "banded_range_join",
     "brute_force_topk",
-    "brute_force_topk_matmul",
     "dedupe_keep_latest",
     "derive_k_cells",
     "semantic_dedup",

@@ -4,10 +4,13 @@ similarity corpus).
 - brute_force_topk: exact cosine top-k — the correctness baseline and
   the oracle-hashable path. One scan, per-partition heaps
   (TakeOrderedAndProject), no UDF: fine up to ~10^7 vectors per probe.
-- ivf_topk: IVF (inverted-file) scale path — KMeans-partition the
-  corpus once, search only the nprobe closest cells. At 100 TB the
-  corpus is written partitioned by centroid id, so a probe reads
-  nprobe/k of the data (partition pruning does the rest).
+- IVFIndex: IVF (inverted-file) scale path — partition the corpus
+  by nearest centroid once, search only the nprobe closest cells. At
+  100 TB the corpus is written partitioned by centroid id, so a probe
+  reads nprobe/k of the data (partition pruning does the rest).
+- IVFPQIndex: the standing IVF-PQ index (IVFIndex cells + PQCodec
+  m-byte codes, encoded once): searches ADC-scan the stored codes of
+  the probed cells and exact-re-rank the survivors.
 - embedding_near_dup_pairs_int: cosine-threshold near-dup pairs via
   signed-random-projection LSH with integer (oracle-replayable) sign
   bits; semantic_dedup's default blocking.
@@ -143,69 +146,6 @@ def _cell_assign_udf(centers):
         return pd.Series(scores.argmax(axis=1).astype(np.int32))
 
     return assign
-
-
-def brute_force_topk_matmul(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    probe_id_col: str = "probe_id",
-) -> DataFrame:
-    """Exact cosine top-k for MANY probes: the distributed exact-knn
-    shape. brute_force_topk crossJoins corpus x probes — P probes
-    inflate the scored relation P-fold before the window. Here each
-    Arrow batch scores ALL probes with one (batch x dim) @ (dim x P)
-    matmul and keeps only its local top-k per probe, so the shuffle
-    carries <= partitions * P * k candidate rows instead of N * P;
-    grouped_topk then resolves the global answer. Same result set as
-    brute_force_topk (parity-tested), strictly better shape for P > 1.
-    """
-    import numpy as np
-
-    # id column types come from the INPUT schemas (string doc ids work
-    # the same as bigints — pids stays a python list, Arrow casts the
-    # yielded object columns to the declared types)
-    pid_type = probes.schema[probe_id_col].dataType.simpleString()
-    id_type = corpus.schema[id_col].dataType.simpleString()
-
-    probe_rows = sorted(
-        probes.select(probe_id_col, vec_col).collect(), key=lambda r: r[probe_id_col]
-    )
-    pids = [r[probe_id_col] for r in probe_rows]
-    pmat = np.vstack([np.asarray(r[vec_col], dtype=np.float64) for r in probe_rows])
-    pnorm = np.linalg.norm(pmat, axis=1)
-    pnorm[pnorm == 0] = 1.0
-    pmat_t = (pmat / pnorm[:, None]).T.copy()  # (dim, P), unit probes
-
-    def score_batches(batches):
-        for pdf in batches:
-            m = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(m, axis=1)
-            norms[norms == 0] = 1.0
-            cos = (m / norms[:, None]) @ pmat_t  # (n, P)
-            ids = pdf[id_col].to_numpy()
-            out_pid, out_id, out_cos = [], [], []
-            top = min(k, len(ids))
-            for j in range(cos.shape[1]):
-                col = cos[:, j]
-                # local top-k with (cos desc, id asc) determinism
-                order = np.lexsort((ids, -col))[:top]
-                out_pid.extend([pids[j]] * len(order))
-                out_id.extend(ids[order])
-                out_cos.extend(col[order])
-            yield pd.DataFrame(
-                {probe_id_col: out_pid, id_col: out_id, "cos": out_cos}
-            )
-
-    candidates = ensure_parallelism(corpus).select(id_col, vec_col).mapInPandas(
-        score_batches,
-        schema=f"{probe_id_col} {pid_type}, {id_col} {id_type}, cos double",
-    )
-    return grouped_topk(
-        candidates, [probe_id_col], [F.col("cos").desc(), F.col(id_col).asc()], k
-    )
 
 
 class IVFIndex:
@@ -404,7 +344,7 @@ class PQCodec:
     train() follows the same sampled-Lloyd recipe as IVFIndex.build
     (codebooks need a representative sample, not a converged
     distributed fit); encode() is one Arrow-batched matmul pass per
-    subspace. Compose with IVFIndex via ivf_pq_topk for the full
+    subspace. IVFPQIndex composes it with IVFIndex for the full
     FAISS-shaped IVF-PQ: prune to nprobe cells, ADC-scan the codes,
     re-rank the survivors exactly.
     """
@@ -502,10 +442,9 @@ class PQCodec:
         rerank_factor: int = 4,
         probe_rows=None,
     ) -> DataFrame:
-        """Approximate cosine top-k over the CODE column only. Same
-        bounded-shuffle shape as brute_force_topk_matmul: each Arrow
-        batch keeps a local top per probe, the shuffle carries <=
-        partitions * P * k' rows. With rerank_with (the raw corpus),
+        """Approximate cosine top-k over the CODE column only. Bounded
+        shuffle: each Arrow batch keeps a local top per probe, so the
+        shuffle carries <= partitions * P * k' rows. With rerank_with (the raw corpus),
         the top rerank_factor*k ADC candidates per probe are re-scored
         exactly and the final top-k is exact-over-candidates — the
         standard recall repair that reads only candidate raw vectors.
@@ -587,48 +526,10 @@ class PQCodec:
         )
 
 
-def ivf_pq_topk(
-    index: IVFIndex,
-    pq: PQCodec,
-    probes: DataFrame,
-    k: int = 5,
-    nprobe: int = 4,
-    probe_id_col: str = "probe_id",
-    rerank_factor: int = 4,
-) -> DataFrame:
-    """FAISS-shaped IVF-PQ: prune the corpus to each probe's nprobe
-    nearest cells (partition pruning on a saved index), ADC-scan only
-    those cells' m-byte codes, then exact-re-rank the survivors. At
-    100 TB a probe touches nprobe/k_cells of the codes (themselves
-    ~64x smaller than the raw vectors) and raw floats only for
-    rerank_factor*k candidate rows.
-
-    This is the AD-HOC form: it encodes the pruned cells' raw vectors
-    on the fly (one encode pass per search). A standing index should
-    use IVFPQIndex — codes are encoded once, persisted
-    partitionBy(cell), and searches ADC-scan the STORED m-byte code
-    column without touching raw floats until the re-rank."""
-    probe_rows = probes.select(probe_id_col, index.vec_col).collect()
-    cells = set()
-    for r in probe_rows:
-        cells.update(_nearest_cells(index.centers, r[index.vec_col], nprobe))
-    pruned = index.assigned.where(F.col("cell").isin(sorted(cells)))
-    codes = pq.encode(pruned)
-    return pq.adc_topk(
-        codes,
-        probes,
-        k=k,
-        probe_id_col=probe_id_col,
-        rerank_with=pruned,
-        rerank_factor=rerank_factor,
-    )
-
-
 class IVFPQIndex:
     """The STANDING IVF-PQ index: codes encoded ONCE, persisted next to
     their cell assignment, searches ADC-scan the stored m-byte code
-    column. This is the production shape ``ivf_pq_topk`` (the ad-hoc,
-    encode-per-search form) only approximates.
+    column; no search re-encodes the corpus.
 
     ``coded`` is one table — (id, pq_code, [raw vector,] cell) — laid
     out partitionBy(cell) on save, so at 100 TB:

@@ -16,12 +16,13 @@ commit protocol:
   ``snapshot_ids``), commit message = the part path. Data never
   funnels through the driver.
 - ``commit`` runs once on the driver after ALL tasks succeeded: move
-  the parts into a snapshot temp dir, drop the ``_SUCCESS`` marker,
-  one ``os.rename`` publishes. A replayed streaming epoch (crash
-  after publish, before Spark committed its offset log) finds the
-  target present and swaps via the same two-rename retire dance
-  runner.write_batch uses — at-least-once at the file level, exactly
-  once as observed through ``snapshot_ids``.
+  the parts into the store's snapshot temp dir and commit through
+  ``SnapshotStore.publish`` (``_SUCCESS`` marker, one rename). A
+  replayed streaming epoch (crash after publish, before Spark
+  committed its offset log) finds the target present and publish
+  retire-swaps it, as for runner.write_batch's epochs — at-least-once
+  at the file level, exactly once as observed through
+  ``snapshot_ids``.
 - ``abort`` deletes staged parts; a crashed task leaves only staging
   files that the next writer of the same store reclaims.
 
@@ -38,7 +39,6 @@ pick the same id cannot silently replace each other's snapshot.
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 from pathlib import Path
 from typing import Iterator
@@ -134,13 +134,13 @@ class _SnapshotWriterBase:
         return PartWritten(str(part), len(rows))
 
     def _publish(self, messages, sid: str, *, replayable: bool = False) -> None:
-        """Move staged parts into a temp snapshot dir, mark _SUCCESS,
-        rename to publish. Only a ``replayable`` publish (a streaming
-        epoch whose id is the micro-batch id) may find its target
-        present and retire-swap it (runner.write_batch's shape); a
-        batch publish onto an existing target means two writers raced
-        to the same listed id — fail loudly instead of replacing the
-        first writer's committed snapshot."""
+        """Move staged parts into the store's temp dir for ``sid`` and
+        commit through ``SnapshotStore.publish``. Only a ``replayable``
+        publish (a streaming epoch whose id is the micro-batch id) may
+        retire-swap an existing target; a batch publish onto an
+        existing target means two writers raced to the same listed id,
+        so it fails loudly (FileExistsError, the loser's temp dir
+        reclaimed) instead of replacing the first writer's snapshot."""
         parts = [m for m in messages if m is not None and m.rows > 0]
         if not parts:
             for m in messages:
@@ -148,36 +148,14 @@ class _SnapshotWriterBase:
                     Path(m.path).unlink()
             self._sweep_staging()
             return
-        target = self.root / sid
-        tmp = self.root / f".{sid}.tmp"
-        if tmp.exists():
-            shutil.rmtree(tmp)
-        tmp.mkdir(parents=True)
-        for i, m in enumerate(parts):
-            os.rename(m.path, tmp / f"part-{i:05d}.parquet")
-        (tmp / "_SUCCESS").touch()
-        self._sweep_staging()
-        if target.exists():
-            if not replayable:
-                # reclaim the loser's tmp dir BEFORE raising: its parts
-                # were already moved out of .staging (so _sweep_staging
-                # and abort() can't reach them) and the id is never
-                # reused, so an orphaned .{sid}.tmp would leak forever
-                shutil.rmtree(tmp)
-                raise FileExistsError(
-                    f"snapshot_store batch publish target {target} already "
-                    "exists: a concurrent writer committed this id (the "
-                    "store is single-writer per store for batch appends; "
-                    "only streaming epoch replay may overwrite its own id)"
-                )
-            retired = self.root / f".{sid}.retired"
-            if retired.exists():
-                shutil.rmtree(retired)
-            os.rename(target, retired)
-            os.rename(tmp, target)
-            shutil.rmtree(retired)
-        else:
-            os.rename(tmp, target)
+
+        def stage(tmp: Path) -> None:
+            tmp.mkdir()
+            for i, m in enumerate(parts):
+                os.rename(m.path, tmp / f"part-{i:05d}.parquet")
+            self._sweep_staging()
+
+        SnapshotStore(self.root).publish(sid, stage, replay=replayable)
 
     def _sweep_staging(self) -> None:
         """Reclaim orphaned staged parts. Runs on the DRIVER at commit

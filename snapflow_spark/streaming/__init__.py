@@ -11,7 +11,7 @@ from snapflow_spark.streaming.runner import (
     streaming_dedupe,
 )
 from snapflow_spark.streaming.ingest import web_ingest_gate
-from snapflow_spark.streaming.stateful import running_user_stats, running_user_stats_tws
+from snapflow_spark.streaming.stateful import running_user_stats
 
 __all__ = [
     "enrich_latest",
@@ -24,6 +24,5 @@ __all__ = [
     "run_stream_to_batch",
     "streaming_dedupe",
     "running_user_stats",
-    "running_user_stats_tws",
     "web_ingest_gate",
 ]

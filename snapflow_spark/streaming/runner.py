@@ -66,37 +66,19 @@ def stream_to_snapshots(
     foreachBatch gives exactly-once per epoch via the checkpoint: a
     replayed epoch re-runs the function, and the store append is made
     idempotent by naming the snapshot after the epoch id. Each epoch
-    is written to a dot-prefixed temp dir (invisible to
-    snapshot_ids()) and os.rename()d into place only after the
-    parquet job commits, so concurrent batch Pipeline ticks can never
-    observe a partially written snapshot; snapshot_ids() additionally
-    requires the _SUCCESS marker."""
-    import os
-    import shutil
+    goes through the store's one commit step (``SnapshotStore.publish``):
+    written to an invisible temp dir with its ``_SCHEMA`` record and
+    published by rename only after the parquet job commits, so
+    concurrent batch Pipeline ticks never observe a partially written
+    snapshot; a replayed epoch retire-swaps its own id there."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        sid = f"snapshot-{epoch_id:06d}-stream"
-        target = store.path / sid
-        tmp = store.path / f".{sid}.tmp"
-        if tmp.exists():
-            shutil.rmtree(tmp)
-        batch_df.write.mode("errorifexists").parquet(str(tmp))
-        if target.exists():
-            # Replayed epoch: swap via two renames, not rmtree-then-
-            # rename. POSIX has no atomic directory replace, so the
-            # committed dir IS absent for the instant between the two
-            # renames — but the window shrinks from a full recursive
-            # delete to two rename syscalls, and SnapshotStore.read()
-            # retries a vanished listed dir to cover exactly it. The
-            # dot-prefixed retired dir is invisible to snapshot_ids().
-            retired = store.path / f".{sid}.retired"
-            if retired.exists():
-                shutil.rmtree(retired)
-            os.rename(target, retired)
-            os.rename(tmp, target)
-            shutil.rmtree(retired)
-        else:
-            os.rename(tmp, target)
+        store.publish(
+            f"snapshot-{epoch_id:06d}-stream",
+            lambda tmp: batch_df.write.mode("errorifexists").parquet(str(tmp)),
+            schema=batch_df.schema,
+            replay=True,
+        )
 
     writer = stream.writeStream.foreachBatch(write_batch)
     if not available_now:  # a running query keeps its checkpoint

@@ -59,65 +59,6 @@ def running_user_stats(
     )
 
 
-def running_user_stats_tws(
-    stream: DataFrame,
-    key: str = "user_id",
-    value: str = "value",
-    alpha: float = 0.2,
-) -> DataFrame:
-    """The SAME operator on Spark 4's transformWithStateInPandas — the
-    successor API (typed per-key state handles, state schema evolution,
-    timers). Kept alongside the applyInPandasWithState form so both
-    stateful surfaces are covered; semantics are identical and the
-    parity test runs wherever the runtime supports it.
-
-    RUNTIME REQUIREMENT: Spark's TWS state-server protocol needs
-    ``google.protobuf``, which this sandbox does not ship — the
-    import guard below raises a clear error here and is a no-op on
-    any normal cluster (protobuf is a stock Spark dependency)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas requires google.protobuf (Spark's "
-            "TWS state-server protocol); use running_user_stats "
-            "(applyInPandasWithState) in environments without it"
-        ) from e
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class RunningStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("stats", STATE_SCHEMA)
-
-        def handleInputRows(self, key_tuple, rows, timerValues):
-            (uid,) = key_tuple
-            if self._state.exists():
-                n, total, ewma = self._state.get()
-            else:
-                n, total, ewma = 0, 0.0, None
-            for pdf in rows:
-                for v in pdf[value]:
-                    n += 1
-                    total += float(v)
-                    ewma = (
-                        float(v) if ewma is None else alpha * float(v) + (1 - alpha) * ewma
-                    )
-            self._state.update((n, total, ewma))
-            yield pd.DataFrame(
-                {"user_id": [uid], "n_events": [n], "total": [total], "ewma": [ewma]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(key).transformWithStateInPandas(
-        RunningStats(),
-        outputStructType=RUNNING_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 FREQ_SCHEMA = "grp int, item string, est bigint, err bigint, n bigint"
 FREQ_STATE_SCHEMA = "items array<string>, counts array<bigint>, err bigint, n bigint"
 

@@ -1,15 +1,25 @@
 """Export surface: every name a package lists in ``__all__`` resolves,
 and none repeats — a deletion that leaves a dangling export fails here,
-not at a user's ``from ... import *``."""
+not at a user's ``from ... import *``. The scripts shipped beside the
+engine (tools, perfbench, examples, bench.py) import only names that
+exist."""
 
+import ast
 import importlib
 from collections import Counter
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
 
 PACKAGES = (
     "snapflow_spark.operators",
     "snapflow_spark.functions",
     "snapflow_spark.incremental",
+    "snapflow_spark.streaming",
+    "snapflow_spark.sources",
 )
+
+SCRIPTS = ("tools", "perfbench", "examples", "bench.py")
 
 
 def test_all_exports_resolve_and_are_unique():
@@ -20,3 +30,33 @@ def test_all_exports_resolve_and_are_unique():
         assert not repeated, (name, repeated)
         dangling = [n for n in exported if not hasattr(mod, n)]
         assert not dangling, (name, dangling)
+
+
+def _engine_imports():
+    """(file, module, name) for every ``from snapflow_spark... import
+    name`` in the scripts, function-local imports included."""
+    for entry in SCRIPTS:
+        path = ROOT / entry
+        for f in sorted(path.rglob("*.py")) if path.is_dir() else [path]:
+            for node in ast.walk(ast.parse(f.read_text(), str(f))):
+                if (
+                    isinstance(node, ast.ImportFrom)
+                    and not node.level
+                    and node.module.split(".")[0] == "snapflow_spark"
+                ):
+                    for alias in node.names:
+                        yield f.relative_to(ROOT), node.module, alias.name
+
+
+def test_script_engine_imports_resolve():
+    seen = list(_engine_imports())
+    assert seen
+    missing = []
+    for f, module, name in seen:
+        mod = importlib.import_module(module)
+        if not hasattr(mod, name):
+            try:
+                importlib.import_module(f"{module}.{name}")
+            except ModuleNotFoundError:
+                missing.append(f"{f}: from {module} import {name}")
+    assert not missing, missing

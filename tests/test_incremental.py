@@ -429,7 +429,7 @@ def test_read_merge_schema_evolution(spark, tmp_path):
 
 def test_snapshot_schema_record_skips_inference(spark, tmp_path):
     """Every snapshot the store commits (append, compact, hard-link
-    copy) records its Spark schema, and ``read`` passes it — no
+    copy, stream epoch) records its Spark schema, and ``read`` passes it — no
     footer-inference job.  A dir without the record, or a set mixing
     recorded and unrecorded dirs, still infers and reads the same
     rows."""
@@ -474,6 +474,15 @@ def test_snapshot_schema_record_skips_inference(spark, tmp_path):
     assert not (dst.path / cb / "_SCHEMA").exists()
     assert jobs_and_rows(dst, [ca])[0] == 0
     assert jobs_and_rows(dst)[1:] == jobs_and_rows(store, [a, b])[1:]
+
+    # a stream-landed epoch records its batch schema too
+    from snapflow_spark.streaming import stream_from_snapshots, stream_to_snapshots
+
+    landed = SnapshotStore(tmp_path / "l")
+    stream_to_snapshots(stream_from_snapshots(spark, str(store.path), schema), landed)
+    (sl,) = landed.snapshot_ids()
+    assert (landed.path / sl / "_SCHEMA").exists()
+    assert jobs_and_rows(landed) == (0, schema, rows)
 
     # compaction records the merged schema
     sid, _retired = store.compact(spark)

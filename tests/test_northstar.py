@@ -513,14 +513,30 @@ def test_decode_images_operator(spark, planted):
         assert np.array_equal(np.array(r.pixels).reshape(arr.shape), arr)
 
 
-def test_brute_force_topk_matmul_parity(spark, planted):
-    """The per-partition matmul + partial-top-k scorer returns exactly
-    the crossJoin+window scorer's result set for multiple probes."""
+def _exact_topk_ref(corpus, probes, k):
+    """Numpy exact cosine top-k: (probe_id, vec_id, cos) rows ranked
+    by (cos desc, vec_id asc). The dot and norm sums are sequential
+    (np.cumsum), the same fold order as the engine's array aggregate,
+    so the reference cosines are bit-identical to brute_force_topk's."""
+    import numpy as np
+
+    rows = [(r.vec_id, np.asarray(r.embedding, dtype=np.float64)) for r in corpus.collect()]
+    out = []
+    for p in probes.collect():
+        pv = np.asarray(p.embedding, dtype=np.float64)
+        pnorm = np.sqrt(np.cumsum(pv * pv)[-1])
+        scored = [
+            (-(np.cumsum(v * pv)[-1] / (np.sqrt(np.cumsum(v * v)[-1]) * pnorm)), vid)
+            for vid, v in rows
+        ]
+        out += [(p.probe_id, vid, -neg) for neg, vid in sorted(scored)[:k]]
+    return out
+
+
+def test_brute_force_topk_multi_probe_numpy_parity(spark, planted):
+    """The exact scorer ranks several probes at once (one window per
+    probe) and returns exactly a numpy exact reference's top-k."""
     from snapflow_spark.catalog import load_table
-    from snapflow_spark.operators.similarity import (
-        brute_force_topk,
-        brute_force_topk_matmul,
-    )
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     probes = emb.where(F.col("vec_id").isin(0, 1, 2)).select(
@@ -528,14 +544,11 @@ def test_brute_force_topk_matmul_parity(spark, planted):
     )
     corpus = emb.where(~F.col("vec_id").isin(0, 1, 2))
 
-    def key(df):
-        return sorted(
-            (r.probe_id, r.vec_id, round(r.cos, 9))
-            for r in df.collect()
-        )
+    def key(rows):
+        return sorted((pid, vid, round(cos, 9)) for pid, vid, cos in rows)
 
-    a = key(brute_force_topk(corpus, probes, k=7))
-    b = key(brute_force_topk_matmul(corpus, probes, k=7))
+    a = key(brute_force_topk(corpus, probes, k=7).collect())
+    b = key(_exact_topk_ref(corpus, probes, k=7))
     assert a == b and len(a) == 21
 
 
@@ -659,14 +672,9 @@ def test_ivf_build_small_corpus_and_pgm_resize(spark):
     assert (r.meta.width, r.meta.height) == (4, 3)
 
 
-def test_brute_force_topk_matmul_string_ids(spark):
-    """The matmul scorer's candidate schema derives from the INPUT id
-    column types — string doc ids work identically to bigints."""
-    from snapflow_spark.operators.similarity import (
-        brute_force_topk,
-        brute_force_topk_matmul,
-    )
-
+def test_brute_force_topk_string_ids(spark):
+    """String doc and probe ids rank exactly as bigints do: the
+    scorer's result matches the numpy exact reference."""
     # 0.003*i de-ties cosines: distinct ids with bitwise-equal cos
     # would tie-break on the FLOAT rounding of each path, not the data
     corpus = spark.createDataFrame(
@@ -681,11 +689,11 @@ def test_brute_force_topk_matmul_string_ids(spark):
         "probe_id string, embedding array<float>",
     )
 
-    def key(df):
-        return sorted((r.probe_id, r.vec_id, round(r.cos, 9)) for r in df.collect())
+    def key(rows):
+        return sorted((pid, vid, round(cos, 9)) for pid, vid, cos in rows)
 
-    a = key(brute_force_topk(corpus, probes, k=4))
-    b = key(brute_force_topk_matmul(corpus, probes, k=4))
+    a = key(brute_force_topk(corpus, probes, k=4).collect())
+    b = key(_exact_topk_ref(corpus, probes, k=4))
     assert a == b and len(a) == 8
 
 
@@ -1095,7 +1103,7 @@ def test_ivf_pq_composed_search(embeddings):
     """Full IVF-PQ: cell pruning + ADC over codes + exact re-rank.
     Each in-corpus probe must find itself; recall@5 vs brute force
     stays useful at nprobe=3 of 8 cells."""
-    from snapflow_spark.operators.similarity import IVFIndex, PQCodec, ivf_pq_topk
+    from snapflow_spark.operators.similarity import IVFPQIndex
 
     probes = embeddings.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("probe_id"), "embedding"
@@ -1104,9 +1112,8 @@ def test_ivf_pq_composed_search(embeddings):
         pid: {r.vec_id for r in rows}
         for pid, rows in _group(brute_force_topk(embeddings, probes, k=5).collect(), "probe_id").items()
     }
-    index = IVFIndex.build(embeddings, k_cells=8)
-    pq = PQCodec.train(embeddings, m=4, n_codes=32, seed=7)
-    result = ivf_pq_topk(index, pq, probes, k=5, nprobe=3, rerank_factor=6)
+    index = IVFPQIndex.build(embeddings, k_cells=8, m=4, n_codes=32)
+    result = index.search(probes, k=5, nprobe=3, rerank_factor=6)
     sets = {
         pid: {r.vec_id for r in rows}
         for pid, rows in _group(result.collect(), "probe_id").items()
@@ -1381,13 +1388,8 @@ def test_ivfpq_index_save_load_and_stored_code_scan(embeddings, tmp_path):
     table + centroids + codebooks; a search on the loaded index ADC-
     scans the STORED pq_code column (the scan's ReadSchema carries no
     raw-vector column when rerank is off), prunes to the probed cell
-    partitions, and returns the same neighbors as the in-memory build
-    with recall matching the ad-hoc encode-per-search path."""
-    from snapflow_spark.operators.similarity import (
-        IVFPQIndex,
-        PQCodec,
-        ivf_pq_topk,
-    )
+    partitions, and returns the same neighbors as the in-memory build."""
+    from snapflow_spark.operators.similarity import IVFPQIndex
 
     spark = embeddings.sparkSession
     probes = embeddings.where(F.col("vec_id") < 3).select(
@@ -1398,17 +1400,6 @@ def test_ivfpq_index_save_load_and_stored_code_scan(embeddings, tmp_path):
         (r.probe_id, r.vec_id)
         for r in idx.search(probes, k=5, nprobe=3, rerank_factor=6).collect()
     }
-    # parity with the ad-hoc form at identical parameters: same cells,
-    # same codebooks (shared seed/sample), same re-rank
-    pq_same = PQCodec.train(embeddings, m=4, n_codes=32)
-    adhoc = {
-        (r.probe_id, r.vec_id)
-        for r in ivf_pq_topk(
-            idx.ivf, pq_same, probes, k=5, nprobe=3, rerank_factor=6
-        ).collect()
-    }
-    assert before == adhoc
-
     path = str(tmp_path / "ivfpq")
     idx.save(path)
     loaded = IVFPQIndex.load(spark, path)

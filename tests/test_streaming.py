@@ -209,6 +209,34 @@ def test_stream_to_snapshots_feeds_batch_pipeline(spark, tmp_path):
     assert p.store("sink").read(spark).count() == 3
 
 
+def test_stream_to_snapshots_replays_an_uncommitted_epoch(spark, tmp_path):
+    """A crash after an epoch's snapshot was published but before the
+    checkpoint recorded its commit replays that epoch on restart. The
+    replay retire-swaps its own epoch-stamped id: one snapshot, each
+    row once, no temp or retired dot-dir left behind."""
+    from snapflow_spark.streaming import stream_to_snapshots
+
+    raw = SnapshotStore(tmp_path / "raw")
+    raw.append(_mk_events(spark, [(1, 0, 1, 1.0), (2, 5, 2, 2.0)]))
+    landed = SnapshotStore(tmp_path / "landed")
+    ckpt = tmp_path / "ckpt"
+
+    def land():
+        stream = stream_from_snapshots(spark, str(raw.path), EV_SCHEMA)
+        stream_to_snapshots(stream, landed, checkpoint=str(ckpt))
+        (sid,) = landed.snapshot_ids()
+        return sid, {p.name for p in (landed.path / sid).glob("part-*")}
+
+    sid, parts = land()
+    (ckpt / "commits" / "0").unlink()
+    (ckpt / "commits" / ".0.crc").unlink()
+    replayed_sid, replayed_parts = land()
+    assert replayed_sid == sid == "snapshot-000000-stream"
+    assert replayed_parts.isdisjoint(parts)  # epoch 0 was rewritten
+    assert sorted(r.event_id for r in landed.read(spark).collect()) == [1, 2]
+    assert not [p.name for p in landed.path.iterdir() if p.name.startswith(".")]
+
+
 def test_snapshot_store_ignores_uncommitted_dirs(spark, tmp_path):
     """A snapshot dir without Spark's _SUCCESS commit marker (e.g. an
     epoch still being written by a live stream) must be invisible to
@@ -221,51 +249,6 @@ def test_snapshot_store_ignores_uncommitted_dirs(spark, tmp_path):
     (partial / "part-00000.parquet").write_bytes(b"not yet committed")
     assert store.snapshot_ids() == ["snapshot-000000"]
     assert store.read(spark).count() == 1
-
-
-def test_transform_with_state_matches_apply_in_pandas_with_state(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas form of the running-stats op
-    produces the same final per-key state as the
-    applyInPandasWithState form over the same micro-batches. Skipped
-    where Spark's TWS state-server protocol deps (protobuf) are
-    absent — running_user_stats_tws raises a clear ImportError there
-    (asserted below), and the parity assertion runs everywhere else."""
-    import pytest as _pytest
-
-    from snapflow_spark.streaming.stateful import (
-        running_user_stats,
-        running_user_stats_tws,
-    )
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        with _pytest.raises(ImportError, match="protobuf"):
-            running_user_stats_tws(_mk_events(spark, [(1, 0, 1, 1.0)]))
-        _pytest.skip("google.protobuf not in this environment (TWS state server)")
-
-    store = SnapshotStore(tmp_path / "tws")
-    store.append(_mk_events(spark, [(1, 0, 1, 10.0), (2, 5, 1, 20.0), (3, 7, 2, 5.0)]))
-    store.append(_mk_events(spark, [(4, 10, 1, 30.0), (5, 12, 2, 7.0)]))
-
-    def final_states(op, ckpt):
-        stream = stream_from_snapshots(
-            spark, str(store.path), EV_SCHEMA, max_files_per_trigger=1
-        )
-        out = run_stream_to_batch(
-            op(stream, alpha=0.5),
-            output_mode="update",
-            checkpoint=str(tmp_path / ckpt),
-        )
-        return {
-            r.user_id: (r.n_events, r.total, round(r.ewma, 9))
-            for r in out.orderBy("n_events").collect()
-        }
-
-    a = final_states(running_user_stats, "ck_a")
-    b = final_states(running_user_stats_tws, "ck_b")
-    assert a == b
-    assert a[1] == (3, 60.0, 22.5)
 
 
 def test_live_stream_concurrent_writer_and_batch_ticks(spark, tmp_path):
@@ -354,8 +337,9 @@ def test_live_stream_concurrent_writer_and_batch_ticks(spark, tmp_path):
 def test_snapshot_append_recovers_from_crashed_write(spark, tmp_path):
     """Commit protocol: a crashed append leaves only a dot-temp dir
     (reclaimed by the next writer); a committed-looking target owned
-    by a CONCURRENT writer makes the rename fail loudly instead of
-    destroying their output; compact shares the same protocol."""
+    by a CONCURRENT writer makes the commit fail loudly instead of
+    destroying their output, and the loser's temp dir is reclaimed;
+    compact shares the same protocol."""
     store = SnapshotStore(tmp_path / "crashed")
     store.append(spark.createDataFrame([(1,)], "v int"))
     # crashed earlier write of the next id -> temp leftover, reclaimed
@@ -373,12 +357,17 @@ def test_snapshot_append_recovers_from_crashed_write(spark, tmp_path):
     with pytest.raises(OSError):
         store.append(spark.createDataFrame([(3,)], "v int"))
     assert (squatter / "part-0.parquet").read_bytes() == b"other writer"
-    # the failed rename left its temp dir behind — exactly the crashed
-    # state; compact shares the protocol, reclaims it, and proceeds
+    # the loser's temp dir is reclaimed: the id is never reused, so a
+    # leftover would leak forever
+    assert not (store.path / ".snapshot-000002.tmp").exists()
     import shutil
 
     shutil.rmtree(squatter)
-    assert (store.path / ".snapshot-000002.tmp").exists()
+    # a crashed compact of the next id leaves its temp dir behind;
+    # compact shares the protocol, reclaims it, and proceeds
+    tmp = store.path / ".snapshot-000002.tmp"
+    tmp.mkdir()
+    (tmp / "part-0.parquet").write_bytes(b"partial")
     new_id, retired = store.compact(spark)
     assert new_id == "snapshot-000002" and retired == [
         "snapshot-000000", "snapshot-000001"
