@@ -316,30 +316,12 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "tokenizer-stats":
-        import json as _json
-
         from snapflow_spark.catalog import load_table
+        from snapflow_spark.functions.kn_lm import load_tokenizer
         from snapflow_spark.functions.tokenizer_eval import tokenizer_stats
         from snapflow_spark.session import build_session, tune
 
-        with open(args.artifact, encoding="utf-8") as f:
-            head = _json.load(f)
-        if head.get("model_type") == "unigram":
-            from snapflow_spark.functions.unigram import UnigramTokenizer
-
-            tok = UnigramTokenizer.load(args.artifact)
-        elif head.get("kind") == "wordpiece":
-            from snapflow_spark.functions.wordpiece import WordPieceTokenizer
-
-            tok = WordPieceTokenizer.load(args.artifact)
-        elif head.get("kind") == "byte_bpe":
-            from snapflow_spark.functions.byte_bpe import ByteBPETokenizer
-
-            tok = ByteBPETokenizer.load(args.artifact)
-        else:
-            from snapflow_spark.functions.bpe import BPETokenizer
-
-            tok = BPETokenizer.load(args.artifact)
+        tok = load_tokenizer(args.artifact)
         spark = build_session("cli-tokenizer-stats")
         spark.sparkContext.setLogLevel("ERROR")
         tune(spark)

@@ -23,6 +23,7 @@ from snapflow_spark.functions.kn_lm import (
     KNBigramLM,
     KNGramLM,
     load_lm,
+    load_tokenizer,
     train_kn_bigram,
     train_kn_ngram,
 )
@@ -71,6 +72,7 @@ __all__ = [
     "train_kn_bigram",
     "KNGramLM",
     "load_lm",
+    "load_tokenizer",
     "train_kn_ngram",
     "cosine_similarity",
     "filter_might_contain",

@@ -64,6 +64,7 @@ __all__ = [
     "KNBigramLM",
     "KNGramLM",
     "load_lm",
+    "load_tokenizer",
     "train_kn_bigram",
     "train_kn_ngram",
 ]
@@ -634,6 +635,27 @@ def load_lm(path: str):
     if kind == "kn_ngram":
         return KNGramLM.load(path)
     raise ValueError(f"not a known LM artifact kind ({kind!r}): {path}")
+
+
+def load_tokenizer(path: str):
+    """Artifact-kind dispatch for the trained tokenizers, as written by
+    the `train-unigram` / `train-wordpiece` / `train-byte-bpe` /
+    `train-bpe` CLIs: ``model_type`` unigram -> UnigramTokenizer,
+    ``kind`` wordpiece -> WordPieceTokenizer, ``kind`` byte_bpe ->
+    ByteBPETokenizer, else (``merges``) char BPETokenizer — the one
+    loader YAML (core.tokenize) and the `tokenizer-stats` CLI go
+    through."""
+    with open(path, encoding="utf-8") as f:
+        head = json.load(f)
+    if head.get("model_type") == "unigram":
+        from snapflow_spark.functions.unigram import UnigramTokenizer as cls
+    elif head.get("kind") == "wordpiece":
+        from snapflow_spark.functions.wordpiece import WordPieceTokenizer as cls
+    elif head.get("kind") == "byte_bpe":
+        from snapflow_spark.functions.byte_bpe import ByteBPETokenizer as cls
+    else:
+        from snapflow_spark.functions.bpe import BPETokenizer as cls
+    return cls.load(path)
 
 
 def train_kn_ngram(

@@ -16,7 +16,6 @@ incremental tick (readers union only the snapshot dirs they need).
 
 from __future__ import annotations
 
-import shutil
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from pathlib import Path
@@ -142,14 +141,11 @@ class Pipeline:
             out = node.fn(spark, **inputs)
             out_store = self.store(node.name)
             if out is not None:
-                if node.overwrite:
-                    # latest-state node: write the new snapshot, retire old
-                    sid = out_store.append(out)
-                    for old in out_store.snapshot_ids():
-                        if old != sid:
-                            shutil.rmtree(out_store.path / old)
-                else:
-                    out_store.append(out)
+                # latest-state node: the new snapshot retires every
+                # older one in its own commit
+                out_store.append(
+                    out, retires=out_store._listed() if node.overwrite else ()
+                )
         for input_name, ids in seen.items():
             self.ledger.mark_consumed(node.name, input_name, ids)
         return True

@@ -6,6 +6,14 @@ subset. Parquet dirs written by executors scale to any size — the
 store itself is only naming + listing, so the metadata cost is O(#
 snapshots), never O(rows).
 
+Every snapshot is committed by one step, ``publish``: stage a temp
+dir, then one rename gives it the next free id. A snapshot is never
+modified or replaced after that; a commit may only retire older ids,
+through the ``_RETIRES`` manifest it carries. Batches land through
+``append``; streams land through ``streaming.stream_to_snapshots``,
+whose epochs take ordinary ids and record ``{query id: batch id}`` in a
+``_STREAM`` file so a replayed batch is skipped, not rewritten.
+
 Each snapshot dir written by the store carries a ``_SCHEMA`` record
 (the Spark schema JSON, written into the temp dir before the commit
 rename), so ``read`` hands Spark the schema instead of paying a
@@ -16,15 +24,35 @@ before.
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
+import uuid
+from collections.abc import Callable, Iterable, Iterator, Sequence
 from pathlib import Path
-from typing import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 _SCHEMA = "_SCHEMA"
+_RETIRES = "_RETIRES"
+_STREAM = "_STREAM"
+
+
+def _writer_alive(tmp_name: str) -> bool:
+    """Whether the process that named temp dir ``.<id>.<pid>-<tag>.tmp``
+    still runs on this host (a dir without a pid never does)."""
+    pid = tmp_name.split(".")[2].split("-")[0]
+    if not pid.isdigit():
+        return False
+    try:
+        os.kill(int(pid), 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
 
 
 class SnapshotStore:
@@ -39,7 +67,7 @@ class SnapshotStore:
         without this, a concurrent batch tick could consume a partial
         snapshot and mark it done, silently losing the rest of its
         rows. Includes retired-but-not-yet-deleted dirs (see
-        ``compact``); use ``snapshot_ids`` for the reader view."""
+        ``publish``); use ``snapshot_ids`` for the reader view."""
         return sorted(
             p.name for p in self.path.iterdir()
             if p.is_dir()
@@ -47,20 +75,18 @@ class SnapshotStore:
             and (p / "_SUCCESS").exists()
         )
 
-    def _retired(self, listed: list[str]) -> set[str]:
-        """Ids masked by a committed snapshot's _RETIRES manifest.
-        ``compact`` writes the manifest INSIDE the merged dir before
-        the rename, so one atomic rename both publishes the merged
-        rows and hides the originals — no crash window in which both
-        are visible (double-count) or neither is (data loss)."""
-        import json
+    def _records(self, name: str, ids: Iterable[str]) -> Iterator:
+        """The JSON record ``name`` of each dir in ``ids`` that has one
+        (a dir deleted by a concurrent cleanup is skipped)."""
+        for sid in ids:
+            try:
+                yield json.loads((self.path / sid / name).read_text())
+            except FileNotFoundError:
+                continue
 
-        retired: set[str] = set()
-        for sid in listed:
-            m = self.path / sid / "_RETIRES"
-            if m.exists():
-                retired.update(json.loads(m.read_text()))
-        return retired
+    def _retired(self, listed: list[str]) -> set[str]:
+        """Ids masked by a committed snapshot's _RETIRES manifest."""
+        return {sid for rec in self._records(_RETIRES, listed) for sid in rec}
 
     def snapshot_ids(self) -> list[str]:
         """Reader view: committed snapshots minus retired ones."""
@@ -68,12 +94,22 @@ class SnapshotStore:
         retired = self._retired(listed)
         return [sid for sid in listed if sid not in retired]
 
-    def _next_id(self) -> str:
+    def stream_marks(self) -> dict[str, int]:
+        """Highest micro-batch id landed per streaming query id, over
+        every committed dir (retired leftovers included; ``compact``
+        carries the marks of what it retires forward)."""
+        marks: dict[str, int] = {}
+        for rec in self._records(_STREAM, self._listed()):
+            for query_id, batch_id in rec.items():
+                marks[query_id] = max(batch_id, marks.get(query_id, -1))
+        return marks
+
+    def _next_id(self, floor: int = 0) -> str:
         # max over ALL committed dirs (retired leftovers included) so a
-        # crashed compact's undeleted originals can never cause an id
-        # collision with the next append.
-        ids = self._listed()
-        n = max(int(s.split("-")[1]) for s in ids) + 1 if ids else 0
+        # crashed cleanup's undeleted originals can never cause an id
+        # collision with the next append; ``floor`` skips ids a caller
+        # already lost to another writer
+        n = max([floor, *(int(s.split("-")[1]) + 1 for s in self._listed())])
         return f"snapshot-{n:06d}"
 
     def publish(
@@ -81,61 +117,63 @@ class SnapshotStore:
         sid: str,
         stage: Callable[[Path], None],
         schema: StructType | None = None,
-        replay: bool = False,
+        retires: Sequence[str] = (),
     ) -> str:
         """The one commit step: the only code that turns a staged dir
         into snapshot ``sid``. ``stage(tmp)`` fills a dot-prefixed temp
-        dir (never listed, never claims an id; a crashed earlier write
-        of the same id left it behind and is reclaimed first). The
-        ``_SCHEMA`` record (when the writer knows the schema) and the
-        ``_SUCCESS`` marker go in, then one rename publishes.
+        dir of this writer's own (never listed, never claims an id, and
+        named by writer, so two writers that picked the same id never
+        stage into one dir). The ``_SCHEMA`` record (when the writer
+        knows the schema), the ``_RETIRES`` manifest and the
+        ``_SUCCESS`` marker go in, then one rename publishes. A failed
+        write removes its temp dir; one left by a process that died
+        mid-write is reclaimed by the next write of the same id.
+
+        ``retires`` names the committed ids the new snapshot replaces
+        (``compact``, an overwrite node). The manifest rides in the
+        same rename, so the new rows appear and the old ids disappear
+        from ``snapshot_ids`` at once — no crash window in which both
+        are visible (double-count) or neither is (data loss). The
+        rmtree of the retired dirs after the rename is cleanup only;
+        a crash in it leaves masked dirs the next retiring commit
+        reclaims.
 
         The rename never replaces a committed dir: when ``sid`` exists
-        (a concurrent writer committed it), the temp dir is reclaimed —
-        the id is never reused, so it would leak — and FileExistsError
-        raised. Only ``replay=True`` (a streaming epoch re-run under its
-        own epoch-stamped id) retires the existing dir instead, via two
-        renames: POSIX has no atomic directory replace, so the id is
-        absent for the instant between them, which ``read`` retries
-        over. The dot-prefixed retired dir is invisible to readers."""
-        import shutil
-
+        (a concurrent writer committed it), FileExistsError is
+        raised."""
+        for old in self.path.glob(f".{sid}.*tmp"):
+            if not _writer_alive(old.name):
+                shutil.rmtree(old, ignore_errors=True)
         target = self.path / sid
-        tmp = self.path / f".{sid}.tmp"
-        if tmp.exists():  # crashed earlier write of this id
-            shutil.rmtree(tmp)
-        stage(tmp)
-        if schema is not None:
-            (tmp / _SCHEMA).write_text(schema.json())
-        (tmp / "_SUCCESS").touch()
-        if replay and target.exists():
-            retired = self.path / f".{sid}.retired"
-            if retired.exists():
-                shutil.rmtree(retired)
-            os.rename(target, retired)
-            os.rename(tmp, target)
-            shutil.rmtree(retired)
-            return sid
-        if not target.exists():
-            try:
-                os.rename(tmp, target)
-                return sid
-            except OSError:
-                if not target.exists():
-                    raise
-        shutil.rmtree(tmp)
-        raise FileExistsError(
-            f"snapshot {target} already exists: a concurrent writer "
-            "committed this id (the store is single-writer; only a "
-            "replayed streaming epoch may overwrite its own id)"
-        )
+        tmp = self.path / f".{sid}.{os.getpid()}-{uuid.uuid4().hex[:8]}.tmp"
+        try:
+            stage(tmp)
+            if schema is not None:
+                (tmp / _SCHEMA).write_text(schema.json())
+            if retires:
+                (tmp / _RETIRES).write_text(json.dumps(list(retires)))
+            (tmp / "_SUCCESS").touch()
+            if not target.exists():
+                try:
+                    os.rename(tmp, target)
+                except OSError:
+                    if not target.exists():
+                        raise
+                else:
+                    for old in retires:
+                        shutil.rmtree(self.path / old, ignore_errors=True)
+                    return sid
+            raise FileExistsError(
+                f"snapshot {target} already exists: a concurrent writer "
+                "committed this id"
+            )
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)  # gone once renamed
 
     def _recorded_schema(self, ids: list[str]) -> StructType | None:
         """The schema every snapshot in ``ids`` recorded at commit, or
         None (infer) when any dir lacks the record or two records
         differ — a mixed set keeps Spark's own first-footer choice."""
-        import json
-
         try:
             recs = {(self.path / sid / _SCHEMA).read_text() for sid in ids}
         except OSError:
@@ -144,8 +182,9 @@ class SnapshotStore:
             return None
         return StructType.fromJson(json.loads(recs.pop()))
 
-    def append(self, df: DataFrame) -> str:
-        """Write one immutable snapshot; returns its id.
+    def append(self, df: DataFrame, retires: Sequence[str] = ()) -> str:
+        """Write one immutable snapshot; returns its id. ``retires``:
+        ids the snapshot replaces in the same commit (``publish``).
 
         Identity fast path (round 17): a DataFrame carrying the
         ``_identity_src_dir`` marker (set by ``read`` on a single-dir
@@ -162,25 +201,25 @@ class SnapshotStore:
         source dir vanished (compacted under us) or linking fails."""
         src = getattr(df, "_identity_src_dir", None)
         if src is not None:
-            sid = self._copy_snapshot(Path(src))
+            sid = self._copy_snapshot(Path(src), retires)
             if sid is not None:
                 return sid
         return self.publish(
             self._next_id(),
             lambda tmp: df.write.mode("errorifexists").parquet(str(tmp)),
             schema=df.schema,
+            retires=retires,
         )
 
-    def _copy_snapshot(self, src: Path) -> str | None:
+    def _copy_snapshot(self, src: Path, retires: Sequence[str]) -> str | None:
         """Hard-link (copy on link failure) a committed snapshot dir's
         data files into the next snapshot id — same tmp-dir + rename
         commit step as a Spark write (``publish``). Returns None (caller
         falls back to the Spark write) when the source is gone or not
-        a committed snapshot. ``_RETIRES`` is deliberately NOT copied:
-        it masks ids in the SOURCE store, meaningless here; the
-        ``_SCHEMA`` record is (the rows are the same)."""
-        import shutil
-
+        a committed snapshot. ``_RETIRES`` and ``_STREAM`` are
+        deliberately NOT copied: they describe the SOURCE store,
+        meaningless here; the ``_SCHEMA`` record is (the rows are the
+        same)."""
         if not (src / "_SUCCESS").exists():
             return None
         files = [
@@ -200,10 +239,8 @@ class SnapshotStore:
                 shutil.copy2(src / _SCHEMA, tmp / _SCHEMA)
 
         try:
-            return self.publish(self._next_id(), link)
-        except OSError:
-            # a half-linked temp dir is reclaimed by the fallback
-            # write, which publishes the same id
+            return self.publish(self._next_id(), link, retires=retires)
+        except OSError:  # the fallback write publishes the same id
             return None
 
     def read(
@@ -226,13 +263,13 @@ class SnapshotStore:
         may evolve should either always pass merge_schema or conform
         blocks through schema.SchemaSpec first (the explicit path).
 
-        Retries when a listed dir has vanished under us: a replayed
-        stream epoch swaps its snapshot via two renames
-        (``publish(replay=True)``), and POSIX has no atomic directory replace, so
-        for the instant between the renames the id is listed-but-
-        absent. The retry re-lists (default mode) or waits out the
-        swap (explicit ids), bounded so a genuinely deleted dir still
-        fails loudly."""
+        Retries when a listed dir has vanished under us: the cleanup
+        after a retiring commit (``compact``, an overwrite node's
+        append) deletes the dirs it retired, so an id listed just
+        before that commit can be gone when Spark lists its files.
+        The retry re-lists (default mode) and so reads the new
+        snapshot instead; with explicit ids it retries a few times and
+        then fails loudly, as a genuinely deleted dir must."""
         import time
 
         explicit = ids is not None
@@ -318,36 +355,28 @@ class SnapshotStore:
         inside a pipeline (it marks the new snapshot consumed for every
         node that had consumed ALL retired ones).
 
-        Crash-safe end-to-end: the merged snapshot is written to a temp
-        dir WITH a ``_RETIRES`` manifest naming every dir it replaces
-        (including leftovers from earlier crashed compactions), so the
-        single os.rename that commits it atomically retires the
-        originals too. The rmtree loop after the rename is pure
-        cleanup — a crash anywhere in it leaves dirs that
-        ``snapshot_ids`` already excludes, reclaimed by the next
-        compact."""
-        import json
-        import shutil
-
-        old = self.snapshot_ids()
+        Crash-safe end-to-end: the merged snapshot retires every dir
+        it replaces (including leftovers of an earlier crashed cleanup)
+        in its own commit (``publish(retires=)``). It also carries the
+        highest streaming batch id per query of those dirs in its
+        ``_STREAM`` record, so a replayed epoch is still skipped after
+        its snapshot was merged away."""
+        # one listing: the visible set being merged, plus any
+        # already-masked leftovers, is what the merged dir retires
+        listed = self._listed()
+        retired = self._retired(listed)
+        old = [sid for sid in listed if sid not in retired]
         if len(old) <= 1:
             return None, []
         merged = self.read(spark, old)
-        sid = self._next_id()
-        # every committed dir on disk except the new one is retired:
-        # the visible set being merged, plus any already-masked
-        # leftovers a previous crashed cleanup left behind
-        retires = self._listed()
+        marks = self.stream_marks()  # covers every dir in ``listed``
 
         def stage(tmp: Path) -> None:
             merged.write.mode("errorifexists").parquet(str(tmp))
-            (tmp / "_RETIRES").write_text(json.dumps(retires))
+            if marks:
+                (tmp / _STREAM).write_text(json.dumps(marks))
 
-        # atomic: publishes merged + masks old
-        self.publish(sid, stage, schema=merged.schema)
-
-        for o in retires:
-            p = self.path / o
-            if p.exists():
-                shutil.rmtree(p)
+        sid = self.publish(
+            self._next_id(), stage, schema=merged.schema, retires=listed
+        )
         return sid, old

@@ -321,49 +321,30 @@ def _tokenize(
     artifact (functions.bpe / functions.unigram / functions.wordpiece
     JSON, as written by the `train-bpe` / `train-unigram` /
     `train-wordpiece` CLIs) — the pipeline hand-off that turns
-    curation output into model-ready tokens. The artifact kind is
-    sniffed from its `model_type` field (unigram) vs `kind` field
-    (wordpiece / byte_bpe) vs `merges` (char BPE), so one builtin
-    serves all four trainers. ``counts_only``
+    curation output into model-ready tokens. ``kn_lm.load_tokenizer``
+    tells the artifact kinds apart, so one builtin serves all four
+    trainers. ``counts_only``
     emits an int token count instead of the array (the packing
     budget column); ``sample_alpha`` switches a unigram artifact to
     the subword-regularization sampler at that temperature
     (deterministic via sha256(sample_salt, word) — vary the salt per
     epoch). The artifact loads DRIVER-side; only the broadcast piece
     table ships to executors."""
-    import json as _json
+    from snapflow_spark.functions.kn_lm import load_tokenizer
+    from snapflow_spark.functions.unigram import UnigramTokenizer
 
-    with open(artifact, encoding="utf-8") as f:
-        head = _json.load(f)
-    if head.get("model_type") == "unigram":
-        from snapflow_spark.functions.unigram import UnigramTokenizer
-
-        tok = UnigramTokenizer.load(artifact)
-        if sample_alpha is not None:
-            col = tok.sample_udf(
-                spark, alpha=float(sample_alpha), salt=str(sample_salt)
-            )(F.col(text_col))
-        else:
-            col = tok.encode_col(spark, text_col)
-    else:
-        if sample_alpha is not None:
-            raise ValueError(
-                "sample_alpha is a unigram-artifact feature (BPE/WordPiece "
-                "encoding is deterministic, nothing to sample)"
-            )
-        if head.get("kind") == "wordpiece":
-            from snapflow_spark.functions.wordpiece import WordPieceTokenizer
-
-            tok = WordPieceTokenizer.load(artifact)
-        elif head.get("kind") == "byte_bpe":
-            from snapflow_spark.functions.byte_bpe import ByteBPETokenizer
-
-            tok = ByteBPETokenizer.load(artifact)
-        else:
-            from snapflow_spark.functions.bpe import BPETokenizer
-
-            tok = BPETokenizer.load(artifact)
+    tok = load_tokenizer(artifact)
+    if sample_alpha is None:
         col = tok.encode_col(spark, text_col)
+    elif isinstance(tok, UnigramTokenizer):
+        col = tok.sample_udf(
+            spark, alpha=float(sample_alpha), salt=str(sample_salt)
+        )(F.col(text_col))
+    else:
+        raise ValueError(
+            "sample_alpha is a unigram-artifact feature (BPE/WordPiece "
+            "encoding is deterministic, nothing to sample)"
+        )
     if counts_only:
         col = F.size(col)
     return input.withColumn(out_col, col)

@@ -707,8 +707,8 @@ def write_warc_shards(
     ``out_dir`` must be a filesystem every executor can write
     (local[n], NFS, a fuse-mounted object store); a pure object-store
     deployment would lift this into a DataSource writer with a commit
-    protocol — the snapshot_store sink (sources/snapshot_sink.py) is
-    the in-repo template for that shape."""
+    protocol (executors stage parts, the driver's ``commit`` publishes
+    them in one step, as ``SnapshotStore.publish`` does)."""
     import os
 
     from pyspark import TaskContext

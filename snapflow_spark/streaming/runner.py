@@ -9,12 +9,18 @@ final table against batch SQL (SURVEY §5.2).
 
 from __future__ import annotations
 
+import json
 import tempfile
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from snapflow_spark.incremental.store import _STREAM
 from snapflow_spark.scope import owned, scratch_dir
+
+# snapshot ids one epoch may lose to other writers before it fails
+_ID_RETRIES = 100
 
 
 def stream_from_snapshots(
@@ -63,21 +69,46 @@ def stream_to_snapshots(
     live stream through the same ledgered incremental path as any
     other source — snapflow's stream/batch unification on Spark.
 
-    foreachBatch gives exactly-once per epoch via the checkpoint: a
-    replayed epoch re-runs the function, and the store append is made
-    idempotent by naming the snapshot after the epoch id. Each epoch
-    goes through the store's one commit step (``SnapshotStore.publish``):
-    written to an invisible temp dir with its ``_SCHEMA`` record and
-    published by rename only after the parquet job commits, so
-    concurrent batch Pipeline ticks never observe a partially written
-    snapshot; a replayed epoch retire-swaps its own id there."""
+    Each epoch is published through the store's one commit step
+    (``SnapshotStore.publish``) under the next ordinary snapshot id:
+    written to an invisible temp dir with its ``_SCHEMA`` record and a
+    ``_STREAM`` record ``{query id: batch id}``, and published by one
+    rename after the parquet job commits, so concurrent batch Pipeline
+    ticks never observe a partial snapshot. A batch id at or below the
+    mark the store already holds for the query is a replay (a crash
+    after the publish, before Spark committed the batch) and is
+    skipped — the ``delta_stream_sink`` / ``iceberg_stream_sink``
+    rule. An epoch that loses its id to another writer of the store
+    (a Pipeline compacting it, say) publishes under the next one.
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        store.publish(
-            f"snapshot-{epoch_id:06d}-stream",
-            lambda tmp: batch_df.write.mode("errorifexists").parquet(str(tmp)),
-            schema=batch_df.schema,
-            replay=True,
+    With ``checkpoint=`` the landing is exactly-once: a restart keeps
+    the checkpoint's query id. Without it every call makes a fresh
+    checkpoint and so a fresh query id: it re-reads the whole source
+    and lands it again beside the earlier landing (at-least-once)."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # the checkpoint's query id: stable across restarts on it
+        query_id = batch_df.sparkSession.sparkContext.getLocalProperty(
+            "sql.streaming.queryId"
+        )
+
+        def stage(tmp: Path) -> None:
+            batch_df.write.mode("errorifexists").parquet(str(tmp))
+            (tmp / _STREAM).write_text(json.dumps({query_id: batch_id}))
+
+        floor = 0
+        for _ in range(_ID_RETRIES):
+            if store.stream_marks().get(query_id, -1) >= batch_id:
+                return  # replayed batch: already landed
+            sid = store._next_id(floor)
+            try:
+                store.publish(sid, stage, schema=batch_df.schema)
+                return
+            except FileExistsError:
+                floor = int(sid.split("-")[1]) + 1
+        raise RuntimeError(
+            f"stream epoch {batch_id} lost {_ID_RETRIES} consecutive "
+            f"snapshot ids in {store.path}"
         )
 
     writer = stream.writeStream.foreachBatch(write_batch)

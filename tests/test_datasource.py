@@ -106,128 +106,30 @@ def test_import_path_pager_resolution():
         _resolve_pager({"pager": "no-colon"})
 
 
-# ---- snapshot_store sink ----
-
-
-@pytest.fixture(scope="module", autouse=True)
-def _register_sink(spark):
-    from snapflow_spark.sources import SnapshotStoreDataSource
-
-    spark.dataSource.register(SnapshotStoreDataSource)
-
-
-def test_snapshot_sink_batch_write(spark, tmp_path):
-    """df.write.format('snapshot_store') appends one committed
-    snapshot (parts staged on executors, driver publish) that the
-    SnapshotStore reads back exactly; a second write appends a second
-    snapshot; overwrite mode is rejected (immutability)."""
-    from snapflow_spark.incremental.store import SnapshotStore
-
-    root = str(tmp_path / "store")
-    df = spark.range(0, 100).select(
-        F.col("id"), F.concat(F.lit("v"), F.col("id")).alias("v")
-    )
-    df.write.format("snapshot_store").option("path", root).mode("append").save()
-    store = SnapshotStore(root)
-    assert len(store.snapshot_ids()) == 1
-    got = store.read(spark).collect()
-    assert sorted(r.id for r in got) == list(range(100))
-    assert dict(store.read(spark).dtypes)["id"] == "bigint"  # no pandas float promotion
-
-    df.where("id < 10").write.format("snapshot_store").option("path", root).mode(
-        "append"
-    ).save()
-    assert len(store.snapshot_ids()) == 2
-    assert store.read(spark).count() == 110
-
-    with pytest.raises(Exception, match="append-only"):
-        df.write.format("snapshot_store").option("path", root).mode(
-            "overwrite"
-        ).save()
-
-
 def test_paged_api_to_snapshot_sink_stream(spark, tmp_path):
-    """The composed idiomatic pipeline: paged_api stream source (offset
-    log = cursor) -> snapshot_store stream sink (micro-batch = one
-    committed snapshot). All records land exactly once; snapshot ids
-    are epoch-stamped so a replay would overwrite itself, not
-    double-append."""
+    """The composed pipeline: paged_api stream source (offset log =
+    cursor) -> ``stream_to_snapshots`` (micro-batch = one committed
+    snapshot). A bounded (availableNow) run lands what the source
+    reports at its start, one page here, so the run restarts on the
+    same checkpoint until caught up: all records land exactly once,
+    under one query id whose mark is the last batch id."""
     from snapflow_spark.incremental.store import SnapshotStore
+    from snapflow_spark.streaming import stream_to_snapshots
 
-    root, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    store, ckpt = SnapshotStore(tmp_path / "sink"), str(tmp_path / "ckpt")
     stream = (
         spark.readStream.format("paged_api")
         .schema(SCHEMA)
         .options(pager="synthetic", pages="3", page_size="5")
         .load()
     )
-    q = (
-        stream.writeStream.format("snapshot_store")
-        .option("path", root)
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="200 milliseconds")
-        .start()
-    )
-    store = SnapshotStore(root)
-    try:
-        deadline = time.time() + 30
-        while time.time() < deadline:
-            ids = store.snapshot_ids()
-            if ids and store.read(spark).count() >= 15:
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-        q.awaitTermination()
+    for _ in range(4):  # 3 pages, then a caught-up run
+        stream_to_snapshots(stream, store, checkpoint=ckpt)
     rows = store.read(spark).collect()
     assert sorted(r.id for r in rows) == list(range(15))  # exactly once
-    assert all(i.endswith("-sink") for i in store.snapshot_ids())
-    # empty caught-up batches did not append empty snapshots
+    # the caught-up run did not append an empty snapshot
     assert len(store.snapshot_ids()) <= 3
-
-
-def test_snapshot_sink_timestamp_and_struct_contract(spark, tmp_path):
-    """Timestamps written through the sink read back as TimestampType
-    with the same instants as SnapshotStore.append (UTC-pinned session
-    -> isAdjustedToUTC annotation, matching Spark's writer); nested
-    columns are rejected with a clear message, not an opaque
-    ArrowInvalid from pyarrow's tuple inference."""
-    from snapflow_spark.incremental.store import SnapshotStore
-
-    root = str(tmp_path / "ts_store")
-    df = spark.sql(
-        "SELECT timestamp'2024-01-02 03:04:05.123456' AS ts, 7 AS id"
-    )
-    df.write.format("snapshot_store").option("path", root).mode("append").save()
-    store = SnapshotStore(root)
-    store.append(df)  # Spark-writer snapshot in the SAME store
-    back = store.read(spark)  # union of both — types must agree
-    assert dict(back.dtypes)["ts"] == "timestamp"
-    vals = {str(r.ts) for r in back.collect()}
-    assert vals == {"2024-01-02 03:04:05.123456"}
-
-    nested = spark.sql("SELECT named_struct('a', 1) AS s, 1 AS id")
-    with pytest.raises(Exception, match="primitive columns only"):
-        nested.write.format("snapshot_store").option("path", root).mode(
-            "append"
-        ).save()
-
-
-def test_snapshot_sink_sweeps_orphaned_staging(spark, tmp_path):
-    """A staged part from a crashed earlier attempt is reclaimed by the
-    next successful commit (single-writer contract)."""
-    from pathlib import Path
-
-    root = tmp_path / "sweep_store"
-    staging = root / ".staging"
-    staging.mkdir(parents=True)
-    orphan = staging / "part-deadbeef.parquet"
-    orphan.write_bytes(b"crashed-task-debris")
-
-    spark.range(5).write.format("snapshot_store").option("path", str(root)).mode(
-        "append"
-    ).save()
-    assert not orphan.exists()
+    assert list(store.stream_marks().values()) == [2]
 
 
 def test_paged_api_max_pages_truncation_raises(spark):
@@ -248,71 +150,6 @@ def test_paged_api_max_pages_truncation_raises(spark):
         .load()
     )
     assert ok.count() == 20
-
-
-def test_snapshot_sink_decimal_and_ntz(spark, tmp_path):
-    """Primitive-but-unmapped types (decimal, timestamp_ntz) write
-    with explicit arrow types and read back type-faithful — only
-    genuinely nested types are rejected."""
-    from snapflow_spark.incremental.store import SnapshotStore
-
-    root = str(tmp_path / "dec_store")
-    df = spark.sql(
-        "SELECT CAST(12.34 AS DECIMAL(12,2)) AS price, "
-        "timestamp_ntz'2024-03-04 05:06:07' AS tntz, 1 AS id"
-    )
-    df.write.format("snapshot_store").option("path", root).mode("append").save()
-    back = SnapshotStore(root).read(spark)
-    assert dict(back.dtypes)["price"] == "decimal(12,2)"
-    assert dict(back.dtypes)["tntz"] == "timestamp_ntz"
-    r = back.first()
-    assert str(r.price) == "12.34" and str(r.tntz) == "2024-03-04 05:06:07"
-
-
-def test_snapshot_sink_batch_publish_collision_raises(tmp_path):
-    """Two batch writers racing to the same listed id must not replace
-    each other's committed snapshot: a batch publish onto an existing
-    target fails loudly, while a STREAMING replay of its own epoch id
-    (the only legitimate present-target case) retire-swaps."""
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq_
-
-    from snapflow_spark.sources.snapshot_sink import (
-        PartWritten,
-        SnapshotBatchWriter,
-    )
-
-    root = str(tmp_path / "race_store")
-    w = SnapshotBatchWriter(None, {"path": root})
-
-    def staged(val):
-        w.staging.mkdir(parents=True, exist_ok=True)
-        p = w.staging / f"part-{uuid.uuid4().hex}.parquet"
-        pq_.write_table(pa.table({"id": [val]}), p)
-        return PartWritten(str(p), 1)
-
-    w._publish([staged(1)], "snapshot-000000")
-    assert (tmp_path / "race_store" / "snapshot-000000" / "_SUCCESS").exists()
-
-    with pytest.raises(FileExistsError, match="already"):
-        w._publish([staged(2)], "snapshot-000000")
-    # the first writer's snapshot is untouched
-    tab = pq_.read_table(
-        sorted((tmp_path / "race_store" / "snapshot-000000").glob("part-*"))[0]
-    )
-    assert tab.column("id").to_pylist() == [1]
-    # the loser's tmp dir is reclaimed (the id is never reused, so an
-    # orphan would leak forever)
-    assert not list((tmp_path / "race_store").glob(".*.tmp"))
-
-    # streaming epoch replay on its own id swaps idempotently
-    w._publish([staged(3)], "snapshot-000000", replayable=True)
-    tab = pq_.read_table(
-        sorted((tmp_path / "race_store" / "snapshot-000000").glob("part-*"))[0]
-    )
-    assert tab.column("id").to_pylist() == [3]
 
 
 def test_paged_api_replay_respects_committed_end():

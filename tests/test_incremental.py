@@ -345,6 +345,82 @@ def test_compact_crash_before_cleanup_never_double_counts(spark, tmp_path):
     assert on_disk == [sid]
 
 
+def test_overwrite_node_crash_in_cleanup_leaves_one_live_snapshot(
+    spark, pipe, monkeypatch
+):
+    """An overwrite (latest-state) node's new snapshot retires the old
+    ones in its own commit (the ``_RETIRES`` manifest), so a crash in
+    the cleanup after the publish leaves readers one live snapshot, not
+    the union of old and new; the node's re-run reclaims the
+    leftover."""
+    import shutil
+    from pathlib import Path
+
+    src = pipe.add_source("tx")
+    _build(pipe)
+    chunks = _chunks(spark)
+    src.append(chunks[0])
+    pipe.produce(spark)
+    state = pipe.store("state")
+    (first,) = state.snapshot_ids()
+
+    real_rmtree = shutil.rmtree
+
+    def crashing_rmtree(path, *a, **kw):
+        p = Path(path)
+        if p.parent == state.path and p.name.startswith("snapshot-"):
+            raise RuntimeError("simulated crash during cleanup")
+        return real_rmtree(path, *a, **kw)
+
+    monkeypatch.setattr(shutil, "rmtree", crashing_rmtree)
+    src.append(chunks[1])
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        pipe.produce(spark)
+    monkeypatch.setattr(shutil, "rmtree", real_rmtree)
+
+    ids = state.snapshot_ids()
+    assert len(ids) == 1 and ids != [first]
+    assert (state.path / first).exists()  # masked, not yet deleted
+    rows = {r.id: r.amount for r in state.read(spark).collect()}
+    assert rows == {1: 10.0, 2: 25.0, 4: 40.0}
+
+    src.append(chunks[2])
+    pipe.produce(spark)
+    ids = state.snapshot_ids()
+    on_disk = sorted(
+        p.name for p in state.path.iterdir() if p.name.startswith("snapshot-")
+    )
+    assert len(ids) == 1 and on_disk == ids
+    rows = {r.id: r.amount for r in state.read(spark).collect()}
+    assert rows == {1: 15.0, 2: 25.0, 4: 40.0}
+
+
+def test_publish_stages_per_writer_and_reclaims_only_dead_writers(
+    spark, tmp_path
+):
+    """Two writers that picked the same id stage into separate temp
+    dirs: a publish leaves a live writer's temp dir alone and reclaims
+    one whose process is gone."""
+    import os
+    import subprocess
+    import sys
+
+    from snapflow_spark.incremental.store import SnapshotStore
+
+    store = SnapshotStore(tmp_path / "w")
+    dead = subprocess.run([sys.executable, "-c", "import os; print(os.getpid())"],
+                          capture_output=True, text=True, check=True).stdout.strip()
+    live = store.path / f".snapshot-000000.{os.getpid()}-0000live.tmp"
+    gone = store.path / f".snapshot-000000.{dead}-0000gone.tmp"
+    for d in (live, gone):
+        d.mkdir()
+        (d / "part-0.parquet").write_bytes(b"staging")
+    assert store.append(spark.createDataFrame([(1,)], "v int")) == "snapshot-000000"
+    assert (live / "part-0.parquet").read_bytes() == b"staging"
+    assert not gone.exists()
+    assert store.read(spark).count() == 1
+
+
 def test_produce_auto_compact_policy(spark, tmp_path):
     """produce(auto_compact_after=N) bounds every store's snapshot
     count at the fixed point without changing any data or causing

@@ -212,8 +212,10 @@ def test_stream_to_snapshots_feeds_batch_pipeline(spark, tmp_path):
 def test_stream_to_snapshots_replays_an_uncommitted_epoch(spark, tmp_path):
     """A crash after an epoch's snapshot was published but before the
     checkpoint recorded its commit replays that epoch on restart. The
-    replay retire-swaps its own epoch-stamped id: one snapshot, each
-    row once, no temp or retired dot-dir left behind."""
+    snapshot's ``_STREAM`` record already holds the batch id for the
+    checkpoint's query id, so the replay is skipped: the same one
+    snapshot with the same part files, each row once, no temp dot-dir
+    left behind."""
     from snapflow_spark.streaming import stream_to_snapshots
 
     raw = SnapshotStore(tmp_path / "raw")
@@ -231,9 +233,99 @@ def test_stream_to_snapshots_replays_an_uncommitted_epoch(spark, tmp_path):
     (ckpt / "commits" / "0").unlink()
     (ckpt / "commits" / ".0.crc").unlink()
     replayed_sid, replayed_parts = land()
-    assert replayed_sid == sid == "snapshot-000000-stream"
-    assert replayed_parts.isdisjoint(parts)  # epoch 0 was rewritten
+    assert replayed_sid == sid == "snapshot-000000"
+    assert replayed_parts == parts  # epoch 0 was skipped, not rewritten
+    assert (ckpt / "commits" / "0").exists()  # the replay did run
     assert sorted(r.event_id for r in landed.read(spark).collect()) == [1, 2]
+    assert not [p.name for p in landed.path.iterdir() if p.name.startswith(".")]
+
+
+def test_unchecked_landing_never_rewrites_a_consumed_snapshot(spark, tmp_path):
+    """Stream epochs take ordinary ids, so a store mixing ``append``
+    and stream epochs lists them in commit order and ``read_latest``
+    is the last commit. Two bounded landings without ``checkpoint=``
+    run under two fresh query ids: the second lands the whole source
+    again under a new id (at-least-once) instead of replacing the
+    first landing's snapshot, so a Pipeline node that consumed the
+    first one still sees the new row."""
+    from snapflow_spark.incremental import Node, Pipeline
+    from snapflow_spark.streaming import stream_to_snapshots
+
+    raw = SnapshotStore(tmp_path / "raw")
+    raw.append(_mk_events(spark, [(1, 0, 1, 1.0), (2, 5, 2, 2.0)]))
+    landed = SnapshotStore(tmp_path / "landed")
+    p = Pipeline(str(tmp_path / "wh"))
+    p.sources["landed"] = landed
+    p.add_node(
+        Node("sink", lambda spark, input: input.select("event_id"),
+             {"input": ("landed", "consumable")})
+    )
+
+    def land():
+        stream_to_snapshots(
+            stream_from_snapshots(spark, str(raw.path), EV_SCHEMA), landed
+        )
+
+    def latest():
+        return sorted(r.event_id for r in landed.read_latest(spark).collect())
+
+    landed.append(_mk_events(spark, [(10, 0, 1, 1.0)]))
+    landed.append(_mk_events(spark, [(11, 0, 1, 1.0)]))
+    land()
+    assert latest() == [1, 2]
+    assert p.produce(spark) == 1
+    raw.append(_mk_events(spark, [(3, 10, 1, 5.0)]))
+    land()
+    assert latest() == [1, 2, 3]
+    assert p.produce(spark) == 1
+    got = sorted(r.event_id for r in p.store("sink").read(spark).collect())
+    assert got == [1, 1, 2, 2, 3, 10, 11]
+    assert landed.snapshot_ids() == [f"snapshot-{i:06d}" for i in range(4)]
+
+
+def test_stream_replay_after_compact_is_skipped(spark, tmp_path):
+    """``compact`` carries the per-query batch marks of the dirs it
+    retires: an epoch replayed after its snapshot was merged away is
+    still skipped."""
+    from snapflow_spark.streaming import stream_to_snapshots
+
+    raw = SnapshotStore(tmp_path / "raw")
+    raw.append(_mk_events(spark, [(1, 0, 1, 1.0), (2, 5, 2, 2.0)]))
+    landed = SnapshotStore(tmp_path / "landed")
+    ckpt = tmp_path / "ckpt"
+
+    def land():
+        stream = stream_from_snapshots(spark, str(raw.path), EV_SCHEMA)
+        stream_to_snapshots(stream, landed, checkpoint=str(ckpt))
+
+    land()
+    landed.append(_mk_events(spark, [(7, 0, 1, 1.0)]))
+    sid, retired = landed.compact(spark)
+    (ckpt / "commits" / "0").unlink()
+    (ckpt / "commits" / ".0.crc").unlink()
+    land()
+    assert sorted(r.event_id for r in landed.read(spark).collect()) == [1, 2, 7]
+    assert landed.snapshot_ids() == [sid]
+    assert retired == ["snapshot-000000", "snapshot-000001"]
+    assert list(landed.stream_marks().values()) == [0]
+
+
+def test_stream_epoch_that_loses_its_id_publishes_under_the_next(spark, tmp_path):
+    """An epoch whose id another writer holds (here a squatter dir the
+    listing does not count) re-publishes under the next id instead of
+    failing the query; the squatter is left as it was."""
+    from snapflow_spark.streaming import stream_to_snapshots
+
+    raw = SnapshotStore(tmp_path / "raw")
+    raw.append(_mk_events(spark, [(1, 0, 1, 1.0), (2, 5, 2, 2.0)]))
+    landed = SnapshotStore(tmp_path / "landed")
+    squatter = landed.path / "snapshot-000000"
+    squatter.mkdir()
+    (squatter / "part-0.parquet").write_bytes(b"other writer")
+    stream_to_snapshots(stream_from_snapshots(spark, str(raw.path), EV_SCHEMA), landed)
+    assert landed.snapshot_ids() == ["snapshot-000001"]
+    assert sorted(r.event_id for r in landed.read(spark).collect()) == [1, 2]
+    assert (squatter / "part-0.parquet").read_bytes() == b"other writer"
     assert not [p.name for p in landed.path.iterdir() if p.name.startswith(".")]
 
 
