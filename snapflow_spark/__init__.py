@@ -12,11 +12,28 @@ on Spark primitives:
 - stream ops        -> operators.merge_streams / incremental snapshots
 - reactive run loop -> incremental.Pipeline with a run-ledger
 - north-star ops    -> dedup / similarity / text analysis / multimodal
+
+The exports below load on first use: importing the package itself
+imports nothing, so ``python -m snapflow_spark.worker_daemon`` can
+filter a Python worker's path before anything imports pyspark.
 """
 
-from snapflow_spark.session import build_session, tune
-from snapflow_spark.catalog import TABLES, load_table, register_views
+import importlib
 
-__all__ = ["build_session", "tune", "TABLES", "load_table", "register_views"]
+_EXPORTS = {
+    "build_session": "session",
+    "tune": "session",
+    "TABLES": "catalog",
+    "load_table": "catalog",
+    "register_views": "catalog",
+}
+
+__all__ = list(_EXPORTS)
 
 __version__ = "0.1.0"
+
+
+def __getattr__(name):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    return getattr(importlib.import_module(f"{__name__}.{_EXPORTS[name]}"), name)

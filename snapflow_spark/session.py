@@ -4,16 +4,26 @@ Snapflow's Environment (SURVEY.md §1.1 [P snapflow/core/environment.py])
 is replaced by a SparkSession plus the runtime confs below. ``tune`` is
 idempotent and safe to call on a session we did not create (the driver
 passes its own session to ``__spark_entry__.entry``): it only touches
-runtime-settable confs.
+runtime-settable confs. ``build_session`` also owns the Python workers'
+import path (``python_worker_confs``), which only a launch can set.
 """
 
 from __future__ import annotations
 
 import os
+import re
+import zipfile
+from glob import glob
+from pathlib import Path
 
+import pyspark
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+
+#: The directory holding the ``snapflow_spark`` package.
+ENGINE_ROOT = str(Path(__file__).resolve().parent.parent)
 
 
 def tune(spark: SparkSession) -> SparkSession:
@@ -24,6 +34,13 @@ def tune(spark: SparkSession) -> SparkSession:
     - AQE on: runtime re-planning (partition coalescing, skew-join
       splitting) is the 100 TB story for every shuffle in this engine.
     - Arrow on: all pandas-UDF operators cross JVM->python in batches.
+
+    A session built elsewhere (the driver's, passed to
+    ``__spark_entry__.entry``) gets only these runtime confs: its Python
+    workers keep Spark's default path (pyspark.zip, re-scanned on every
+    task) and find the engine only if their launch directory or
+    ``PYTHONPATH`` holds it, since ``python_worker_confs`` are
+    launch-time confs.
     """
     conf = spark.conf
     conf.set("spark.sql.session.timeZone", "UTC")
@@ -191,8 +208,44 @@ def tune_cluster(
     return {"applied": applied, "launch_required": dict(CLUSTER_LAUNCH_CONFS)}
 
 
+def spark_pyspark_version(spark_home: str) -> str | None:
+    """The pyspark version Spark hands its Python workers: the one in
+    ``python/lib/pyspark.zip`` under ``spark_home``, else the JVM's (from
+    the spark-core jar's name); None when neither is there."""
+    try:
+        with zipfile.ZipFile(os.path.join(spark_home, "python", "lib", "pyspark.zip")) as z:
+            m = re.search(r"__version__\b.*?=\s*['\"]([^'\"]+)", z.read("pyspark/version.py").decode())
+    except (OSError, KeyError):
+        jars = glob(os.path.join(spark_home, "jars", "spark-core_*.jar"))
+        m = jars and re.fullmatch(r"spark-core_[\d.]+-(.+)\.jar", os.path.basename(jars[0]))
+    return m.group(1) if m else None
+
+
+def python_worker_confs(installed: str, spark_version: str | None) -> dict[str, str]:
+    """Launch confs for the session's Python workers.
+
+    - Workers import the engine from ``ENGINE_ROOT`` whatever the
+      driver's launch directory.
+    - When the installed pyspark is the version Spark would hand the
+      workers, they run it through ``snapflow_spark.worker_daemon``,
+      which drops Spark's pyspark/py4j zips and spark-core jar from
+      their path, so no task pays a zip-importer rescan. On a version
+      mismatch (or an unknown Spark version) Spark's default daemon and
+      its pyspark.zip stay.
+    """
+    confs = {"spark.executorEnv.PYTHONPATH": ENGINE_ROOT}
+    if installed == spark_version:
+        confs["spark.python.daemon.module"] = "snapflow_spark.worker_daemon"
+    return confs
+
+
 def build_session(app_name: str = "snapflow-spark", master: str | None = None) -> SparkSession:
-    """Build the engine's own session (tests, bench, CLI runs)."""
+    """Build the engine's own session (tests, bench, CLI runs).
+
+    Besides ``tune``'s runtime confs it sets ``python_worker_confs``,
+    which Spark reads only at launch: a driver-owned session that only
+    gets ``tune`` keeps Spark's default Python worker path.
+    """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -203,5 +256,8 @@ def build_session(app_name: str = "snapflow-spark", master: str | None = None) -
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config(map=python_worker_confs(
+            pyspark.__version__, spark_pyspark_version(_find_spark_home())
+        ))
     )
     return tune(builder.getOrCreate())
