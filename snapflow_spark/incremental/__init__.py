@@ -3,8 +3,9 @@
 Snapflow's functional-reactive core: nodes consume only upstream
 DataBlocks they have not yet processed, tracked in a metadata store
 [P snapflow/core/execution/execution.py, metadata/orm.py]. Here a
-DataBlock is a parquet *snapshot directory*, the metadata store is a
-JSON run-ledger, and the reactive loop is ``Pipeline.produce``.
+DataBlock is a parquet *snapshot directory*, the metadata store is an
+append-only commit-log run ledger (one commit per node run), and the
+reactive loop is ``Pipeline.produce``.
 """
 
 from snapflow_spark.incremental.store import SnapshotStore

@@ -1,55 +1,7 @@
-"""RunLedger — which snapshots each node has consumed.
+"""``RunLedger``: the run ledger's older name, kept for importers of
+this path. It is ``TableLedger`` (incremental/table_ledger.py), the one
+ledger the engine has."""
 
-The Spark re-expression of snapflow's DataBlockLog (SURVEY §1.1
-[P snapflow/core/metadata/orm.py]): a JSON file mapping
-node -> input -> consumed snapshot ids. Consumption is logged only
-after the node's output snapshot is durably written, so a crashed run
-re-processes its delta (at-least-once, idempotent because outputs are
-immutable snapshots and downstream consumption is also ledgered).
-"""
+from snapflow_spark.incremental.table_ledger import TableLedger as RunLedger
 
-from __future__ import annotations
-
-import json
-from pathlib import Path
-
-
-class RunLedger:
-    def __init__(self, path: str):
-        self.path = Path(path)
-        self._data: dict[str, dict[str, list[str]]] = {}
-        if self.path.exists():
-            self._data = json.loads(self.path.read_text())
-
-    def consumed(self, node: str, input_name: str) -> list[str]:
-        return self._data.get(node, {}).get(input_name, [])
-
-    def unconsumed(self, node: str, input_name: str, available: list[str]) -> list[str]:
-        seen = set(self.consumed(node, input_name))
-        return [sid for sid in available if sid not in seen]
-
-    def mark_consumed(self, node: str, input_name: str, ids: list[str]) -> None:
-        if not ids:
-            return
-        self._data.setdefault(node, {}).setdefault(input_name, []).extend(ids)
-        self._flush()
-
-    def replace_consumed(
-        self, node: str, input_name: str, retired: list[str], replacement: str
-    ) -> None:
-        """Compaction fix-up for one (node, input): swap the retired ids
-        for the replacement compacted id so it is not re-processed."""
-        ids = self._data.get(node, {}).get(input_name)
-        if not ids:
-            return
-        retired_set = set(retired)
-        self._data[node][input_name] = [i for i in ids if i not in retired_set] + [
-            replacement
-        ]
-        self._flush()
-
-    def _flush(self) -> None:
-        self.path.parent.mkdir(parents=True, exist_ok=True)
-        tmp = self.path.with_suffix(".tmp")
-        tmp.write_text(json.dumps(self._data, indent=1, sort_keys=True))
-        tmp.replace(self.path)
+__all__ = ["RunLedger"]

@@ -12,18 +12,24 @@ nodes until no node has unconsumed input — the reactive fixed point.
 Each node run is one Spark job over the delta only; state lives in
 parquet snapshot stores, so a 100 TB history is never rescanned for an
 incremental tick (readers union only the snapshot dirs they need).
+
+Exactly-once: a node run is one ledger commit, and its output snapshot
+carries the run's record inside its own rename, so the next ``produce``
+rolls a lost ledger commit forward instead of re-running the node. A
+compaction is one ledger commit and rolls forward the same way.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from contextvars import ContextVar
 from dataclasses import dataclass, field
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from snapflow_spark.incremental.ledger import RunLedger
-from snapflow_spark.incremental.store import SnapshotStore
+from snapflow_spark.incremental.store import _LEDGER, _RETIRES, SnapshotStore
+from snapflow_spark.incremental.table_ledger import TableLedger
 from snapflow_spark.scope import owned
 
 CONSUMABLE = "consumable"
@@ -40,6 +46,18 @@ class Node:
     overwrite: bool = False  # True: node output is latest-state, not append log
 
 
+_RUN: ContextVar[tuple | None] = ContextVar("snapflow_run", default=None)
+
+
+def current_run() -> tuple[str, dict[str, tuple[SnapshotStore, list[str]]]] | None:
+    """``(app id, {consumable input: (store, ids it consumes)})`` of the
+    node run whose function is executing, or None outside one. A table
+    sink keys its txn to the highest snapshot number it consumes (ids
+    commit in increasing order), so a re-run after a crash that lost
+    the ledger commit applies only the snapshots the table lacks."""
+    return _RUN.get()
+
+
 class Pipeline:
     """A DAG of Nodes over a warehouse directory.
 
@@ -47,20 +65,11 @@ class Pipeline:
     each node gets its own output store under ``<warehouse>/<name>``.
     """
 
-    def __init__(self, warehouse: str, ledger=None):
+    def __init__(self, warehouse: str):
         self.warehouse = Path(warehouse)
         self.nodes: dict[str, Node] = {}
         self.sources: dict[str, SnapshotStore] = {}
-        # Ledger backend is pluggable: default is the single-JSON
-        # RunLedger (right size for a pipeline's node count); pass a
-        # TableLedger (incremental/table_ledger.py) for the
-        # commit-log/metastore shape — O(delta) commits, concurrent
-        # producers, checkpointed recovery, auditable as a DataFrame.
-        self.ledger = (
-            ledger
-            if ledger is not None
-            else RunLedger(str(self.warehouse / "ledger.json"))
-        )
+        self.ledger = TableLedger(self.warehouse / "_ledger")
 
     def add_source(self, name: str) -> SnapshotStore:
         store = SnapshotStore(self.warehouse / name)
@@ -75,6 +84,46 @@ class Pipeline:
         if name in self.sources:
             return self.sources[name]
         return SnapshotStore(self.warehouse / name)
+
+    def _consumers(self) -> dict[str, list[tuple[str, str]]]:
+        """Store name -> the (node, input) pairs that read it."""
+        out: dict[str, list[tuple[str, str]]] = {}
+        for node in self.nodes.values():
+            for input_name, (src, _mode) in node.upstream.items():
+                out.setdefault(src, []).append((node.name, input_name))
+        return out
+
+    def _roll_forward(self) -> None:
+        """Fold into the ledger the store commits a dead process made
+        without their ledger commit: a node's newest output whose run
+        record names ids still unconsumed, and a merged snapshot that a
+        consumer of every merged id has not consumed (a compaction's
+        fix-up; this covers source stores, compacted outside the
+        ledger, too)."""
+        for node in self.nodes.values():
+            store = self.store(node.name)
+            newest = store._listed()[-1:]
+            rec = next(store._records(_LEDGER, newest), {})
+            lost = {}
+            for name, ids in rec.get("consumed", {}).items():
+                lost[name] = self.ledger.unconsumed(node.name, name, ids)
+                if lost[name] and name in node.upstream:
+                    # or replaced since by a compaction's merged id
+                    live = self.store(node.upstream[name][0]).snapshot_ids()
+                    lost[name] = [sid for sid in lost[name] if sid in live]
+            if any(lost.values()):
+                self.ledger.mark_consumed(
+                    node.name, None, lost, produced=newest[0],
+                    retired=next(store._records(_RETIRES, newest), []),
+                )
+        for name, pairs in self._consumers().items():
+            store = self.store(name)
+            available = store.snapshot_ids()
+            for n, i in pairs:
+                for sid in self.ledger.unconsumed(n, i, available):
+                    merged = next(store._records(_LEDGER, [sid]), {}).get("merged")
+                    if merged and set(merged) <= set(self.ledger.consumed(n, i)):
+                        self.ledger.replace_consumed(n, i, merged, sid)
 
     def _topo(self) -> list[Node]:
         order: list[str] = []
@@ -102,71 +151,73 @@ class Pipeline:
         they saw — a reference node re-fires when upstream changes, and
         only then.
         """
-        inputs: dict[str, DataFrame | None] = {}
-        seen: dict[str, list[str]] = {}
-        any_delta = False
-        stores: dict[str, tuple] = {}
-        for input_name, (src, mode) in node.upstream.items():
-            store = self.store(src)
-            available = store.snapshot_ids()
-            delta = self.ledger.unconsumed(node.name, input_name, available)
-            seen[input_name] = delta
-            any_delta = any_delta or bool(delta)
-            stores[input_name] = (store, mode, delta)
-        if node.upstream:
-            # Decide BEFORE building any input DataFrame: the reactive
-            # fixed-point pass visits every node once more after the
-            # last productive run, and constructing a REFERENCE node's
-            # full-store read (schema inference + file listing per
-            # snapshot dir) only to discard it charged one wasted
-            # driver-side read per produce() (round 17, guide §1.2).
-            if not any_delta:
-                return False
-            for input_name, (store, mode, delta) in stores.items():
-                if mode == CONSUMABLE:
-                    inputs[input_name] = store.read(spark, delta)
-                elif mode == LATEST:
-                    inputs[input_name] = store.read_latest(spark)
-                else:  # REFERENCE
-                    inputs[input_name] = store.read(spark)
-        else:
+        stores = {
+            name: (self.store(src), mode)
+            for name, (src, mode) in node.upstream.items()
+        }
+        seen = {
+            name: self.ledger.unconsumed(node.name, name, store.snapshot_ids())
+            for name, (store, _mode) in stores.items()
+        }
+        if not node.upstream:
             # Importer node (no upstream): runs once, like snapflow's
             # import_* source snaps (SURVEY §2.A A5).
             if self.ledger.consumed(node.name, "__init__"):
                 return False
             seen["__init__"] = ["done"]
-
+        elif not any(seen.values()):
+            # decided BEFORE building any input DataFrame: the fixed
+            # point's last pass visits every node, and a REFERENCE
+            # input's full-store read would be built only to be dropped
+            return False
+        inputs: dict[str, DataFrame | None] = {}
+        for name, (store, mode) in stores.items():
+            if mode == CONSUMABLE:
+                inputs[name] = store.read(spark, seen[name])
+            elif mode == LATEST:
+                inputs[name] = store.read_latest(spark)
+            else:  # REFERENCE
+                inputs[name] = store.read(spark)
+        consumed = {
+            name: (store, seen[name])
+            for name, (store, mode) in stores.items()
+            if mode == CONSUMABLE
+        }
+        sid, retires = None, []
         # the append materializes the output: the node's pins die after it
         with owned():
-            out = node.fn(spark, **inputs)
+            token = _RUN.set((str(self.warehouse.resolve() / node.name), consumed))
+            try:
+                out = node.fn(spark, **inputs)
+            finally:
+                _RUN.reset(token)
             out_store = self.store(node.name)
             if out is not None:
                 # latest-state node: the new snapshot retires every
                 # older one in its own commit
-                out_store.append(
-                    out, retires=out_store._listed() if node.overwrite else ()
+                retires = out_store._listed() if node.overwrite else []
+                sid = out_store.append(
+                    out, retires=retires, record={"consumed": seen}
                 )
-        for input_name, ids in seen.items():
-            self.ledger.mark_consumed(node.name, input_name, ids)
+        self.ledger.mark_consumed(
+            node.name, None, seen, produced=sid, retired=retires
+        )
         return True
 
     def compact_store(self, spark: SparkSession, name: str) -> str | None:
         """Compact a store's snapshots into one (small-files control for
         long-lived accumulator state) and fix up every consumer's ledger
-        so the compacted snapshot is not re-processed.
+        in one ledger commit, so the compacted snapshot is not
+        re-processed. A crash between the store's commit and the
+        ledger's is rolled forward by the next ``produce``.
 
         Refuses (ValueError) if any consumer has NOT fully consumed the
         store — compacting under a lagging consumer would force it to
-        re-read rows it already saw (at-least-once); run produce() to
-        the fixed point first."""
+        re-read rows it already saw; run produce() to the fixed point
+        first."""
         store = self.store(name)
         available = store.snapshot_ids()
-        consumers = [
-            (node.name, input_name)
-            for node in self.nodes.values()
-            for input_name, (src, _mode) in node.upstream.items()
-            if src == name
-        ]
+        consumers = self._consumers().get(name, [])
         for node_name, input_name in consumers:
             lagging = self.ledger.unconsumed(node_name, input_name, available)
             if lagging:
@@ -177,8 +228,7 @@ class Pipeline:
         sid, retired = store.compact(spark)
         if sid is None:
             return None
-        for node_name, input_name in consumers:
-            self.ledger.replace_consumed(node_name, input_name, retired, sid)
+        self.ledger.replace_consumed(consumers, None, retired, sid)
         return sid
 
     def produce(
@@ -196,6 +246,7 @@ class Pipeline:
         never force a lagging consumer to re-read. A daily-tick
         accumulator otherwise grows one dir per tick forever, and
         readers pay per-snapshot listing + many small files."""
+        self._roll_forward()
         runs = 0
         while True:
             progressed = False

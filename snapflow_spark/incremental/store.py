@@ -12,7 +12,10 @@ modified or replaced after that; a commit may only retire older ids,
 through the ``_RETIRES`` manifest it carries. Batches land through
 ``append``; streams land through ``streaming.stream_to_snapshots``,
 whose epochs take ordinary ids and record ``{query id: batch id}`` in a
-``_STREAM`` file so a replayed batch is skipped, not rewritten.
+``_STREAM`` file so a replayed batch is skipped, not rewritten. A
+``_LEDGER`` record carries what a pipeline's run ledger notes about the
+commit (a node run's consumed ids, a compaction's merged ids), for the
+ledger to roll forward when the process dies before its own commit.
 
 Each snapshot dir written by the store carries a ``_SCHEMA`` record
 (the Spark schema JSON, written into the temp dir before the commit
@@ -38,6 +41,7 @@ from pyspark.sql.types import StructType
 _SCHEMA = "_SCHEMA"
 _RETIRES = "_RETIRES"
 _STREAM = "_STREAM"
+_LEDGER = "_LEDGER"
 
 
 def _writer_alive(tmp_name: str) -> bool:
@@ -118,14 +122,16 @@ class SnapshotStore:
         stage: Callable[[Path], None],
         schema: StructType | None = None,
         retires: Sequence[str] = (),
+        record: dict | None = None,
     ) -> str:
         """The one commit step: the only code that turns a staged dir
         into snapshot ``sid``. ``stage(tmp)`` fills a dot-prefixed temp
         dir of this writer's own (never listed, never claims an id, and
         named by writer, so two writers that picked the same id never
         stage into one dir). The ``_SCHEMA`` record (when the writer
-        knows the schema), the ``_RETIRES`` manifest and the
-        ``_SUCCESS`` marker go in, then one rename publishes. A failed
+        knows the schema), the ``_RETIRES`` manifest, the ``_LEDGER``
+        ``record`` and the ``_SUCCESS`` marker go in, then one rename
+        publishes. A failed
         write removes its temp dir; one left by a process that died
         mid-write is reclaimed by the next write of the same id.
 
@@ -152,6 +158,8 @@ class SnapshotStore:
                 (tmp / _SCHEMA).write_text(schema.json())
             if retires:
                 (tmp / _RETIRES).write_text(json.dumps(list(retires)))
+            if record is not None:
+                (tmp / _LEDGER).write_text(json.dumps(record))
             (tmp / "_SUCCESS").touch()
             if not target.exists():
                 try:
@@ -182,9 +190,15 @@ class SnapshotStore:
             return None
         return StructType.fromJson(json.loads(recs.pop()))
 
-    def append(self, df: DataFrame, retires: Sequence[str] = ()) -> str:
+    def append(
+        self,
+        df: DataFrame,
+        retires: Sequence[str] = (),
+        record: dict | None = None,
+    ) -> str:
         """Write one immutable snapshot; returns its id. ``retires``:
-        ids the snapshot replaces in the same commit (``publish``).
+        ids the snapshot replaces in the same commit; ``record``: its
+        ``_LEDGER`` record (``publish``).
 
         Identity fast path (round 17): a DataFrame carrying the
         ``_identity_src_dir`` marker (set by ``read`` on a single-dir
@@ -201,7 +215,7 @@ class SnapshotStore:
         source dir vanished (compacted under us) or linking fails."""
         src = getattr(df, "_identity_src_dir", None)
         if src is not None:
-            sid = self._copy_snapshot(Path(src), retires)
+            sid = self._copy_snapshot(Path(src), retires, record)
             if sid is not None:
                 return sid
         return self.publish(
@@ -209,15 +223,18 @@ class SnapshotStore:
             lambda tmp: df.write.mode("errorifexists").parquet(str(tmp)),
             schema=df.schema,
             retires=retires,
+            record=record,
         )
 
-    def _copy_snapshot(self, src: Path, retires: Sequence[str]) -> str | None:
+    def _copy_snapshot(
+        self, src: Path, retires: Sequence[str], record: dict | None
+    ) -> str | None:
         """Hard-link (copy on link failure) a committed snapshot dir's
         data files into the next snapshot id — same tmp-dir + rename
         commit step as a Spark write (``publish``). Returns None (caller
         falls back to the Spark write) when the source is gone or not
-        a committed snapshot. ``_RETIRES`` and ``_STREAM`` are
-        deliberately NOT copied: they describe the SOURCE store,
+        a committed snapshot. ``_RETIRES``, ``_STREAM`` and ``_LEDGER``
+        are deliberately NOT copied: they describe the SOURCE store,
         meaningless here; the ``_SCHEMA`` record is (the rows are the
         same)."""
         if not (src / "_SUCCESS").exists():
@@ -239,7 +256,9 @@ class SnapshotStore:
                 shutil.copy2(src / _SCHEMA, tmp / _SCHEMA)
 
         try:
-            return self.publish(self._next_id(), link, retires=retires)
+            return self.publish(
+                self._next_id(), link, retires=retires, record=record
+            )
         except OSError:  # the fallback write publishes the same id
             return None
 
@@ -350,10 +369,12 @@ class SnapshotStore:
         A long-lived accumulator store grows one dir per tick; readers
         then pay per-snapshot listing + many small files — the classic
         small-files problem. Compaction rewrites history, so consumers'
-        ledgers must be fixed up atomically with it: use
-        ``Pipeline.compact_store`` rather than calling this directly
-        inside a pipeline (it marks the new snapshot consumed for every
-        node that had consumed ALL retired ones).
+        ledgers must be fixed up with it: use ``Pipeline.compact_store``
+        rather than calling this directly inside a pipeline (it marks
+        the new snapshot consumed for every node that had consumed ALL
+        merged ones). The merged snapshot's ``_LEDGER`` record
+        ``{"merged": ids}`` lets a pipeline make that fix-up after a
+        crash that lost it.
 
         Crash-safe end-to-end: the merged snapshot retires every dir
         it replaces (including leftovers of an earlier crashed cleanup)
@@ -377,6 +398,7 @@ class SnapshotStore:
                 (tmp / _STREAM).write_text(json.dumps(marks))
 
         sid = self.publish(
-            self._next_id(), stage, schema=merged.schema, retires=listed
+            self._next_id(), stage, schema=merged.schema, retires=listed,
+            record={"merged": old},
         )
         return sid, old

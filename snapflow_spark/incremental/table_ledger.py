@@ -1,19 +1,21 @@
-"""TableLedger — the metastore-scale run ledger (append-only commit log).
+"""TableLedger — the run ledger (append-only commit log).
 
-``RunLedger`` (ledger.py) rewrites ONE JSON blob per mark: correct and
-simple at a pipeline's node count, but every commit costs O(total
-history) bytes and the single file is a global write lock — the
-documented at-scale gap (SCALE.md §incremental). This module is the
-swap: the ledger becomes an append-only LOG of commits, the way
-table formats (Delta/Iceberg) version their metadata:
+The Spark re-expression of snapflow's DataBlockLog (SURVEY §1.1
+[P snapflow/core/metadata/orm.py]): which snapshots each node has
+consumed and produced. It is kept the way table formats (Delta/Iceberg)
+version their metadata, as an append-only LOG of commits:
 
 - ``<dir>/commit-<version 10d>.json`` — one JSON-LINES file per
   commit, each line one action record::
 
       {"v": 1, "op": "consume", "node": n, "input": i, "ids": [...]}
+      {"v": 1, "op": "produce", "node": n, "produced": sid,
+       "retired": [...]}
       {"v": 1, "op": "replace", "node": n, "input": i,
        "retired": [...], "replacement": sid}
 
+  One commit is one node run (a consume record per input plus its
+  produce record) or one compaction (a replace record per consumer).
   State is the left fold of all commits in version order. A commit
   costs O(its own delta), never O(history) — a million-tick pipeline
   pays the same per tick as a ten-tick one.
@@ -41,19 +43,17 @@ table formats (Delta/Iceberg) version their metadata:
 
 - ``as_dataframe(spark)`` exposes the raw action log as a Spark
   DataFrame — the audit/"metastore table" view (who consumed what,
-  in which commit), which the single-blob JSON ledger structurally
-  cannot offer.
+  in which commit).
 
-Interface-compatible with ``RunLedger`` (consumed / unconsumed /
-mark_consumed / replace_consumed), so ``Pipeline(..., ledger=...)``
-takes either backend unchanged; parity is pinned by test against a
-shared op sequence (tests/test_table_ledger.py).
+``RunLedger`` (``incremental/ledger.py``) is this class under its
+older name.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from collections.abc import Sequence
 from pathlib import Path
 
 _COMMIT_PREFIX = "commit-"
@@ -114,6 +114,8 @@ class TableLedger:
         node = self._data.setdefault(rec["node"], {})
         if rec["op"] == "consume":
             node.setdefault(rec["input"], []).extend(rec["ids"])
+        elif rec["op"] == "produce":
+            pass  # the run's output, for the audit log only
         elif rec["op"] == "replace":
             ids = node.get(rec["input"])
             if ids:
@@ -160,7 +162,7 @@ class TableLedger:
             f"ledger refresh lost 100 consecutive vacuum races in {self.path}"
         )
 
-    # ---------------------------------------------------- RunLedger API
+    # ---------------------------------------------------------- ledger API
     def consumed(self, node: str, input_name: str) -> list[str]:
         return self._data.get(node, {}).get(input_name, [])
 
@@ -170,29 +172,55 @@ class TableLedger:
         seen = set(self.consumed(node, input_name))
         return [sid for sid in available if sid not in seen]
 
-    def mark_consumed(self, node: str, input_name: str, ids: list[str]) -> None:
-        if not ids:
-            return
-        self._commit(
-            [{"op": "consume", "node": node, "input": input_name, "ids": ids}]
-        )
+    def mark_consumed(
+        self,
+        node: str,
+        input_name: str | None,
+        ids: list[str] | dict[str, list[str]],
+        produced: str | None = None,
+        retired: Sequence[str] = (),
+    ) -> None:
+        """Commit one run of ``node``: the ``ids`` it consumed of
+        ``input_name`` — or, with ``input_name`` None, ``ids`` maps
+        every input to its consumed ids — plus the snapshot it
+        ``produced`` and the ids that snapshot ``retired``. One commit,
+        whatever the input count; a run that consumed and produced
+        nothing commits nothing."""
+        consumed = ids if input_name is None else {input_name: ids}
+        records = [
+            {"op": "consume", "node": node, "input": name, "ids": list(got)}
+            for name, got in consumed.items()
+            if got
+        ]
+        if produced is not None:
+            records.append(
+                {"op": "produce", "node": node, "produced": produced,
+                 "retired": list(retired)}
+            )
+        if records:
+            self._commit(records)
 
     def replace_consumed(
-        self, node: str, input_name: str, retired: list[str], replacement: str
+        self,
+        node: str | list[tuple[str, str]],
+        input_name: str | None,
+        retired: list[str],
+        replacement: str,
     ) -> None:
-        if not self.consumed(node, input_name):
-            return
-        self._commit(
-            [
-                {
-                    "op": "replace",
-                    "node": node,
-                    "input": input_name,
-                    "retired": retired,
-                    "replacement": replacement,
-                }
-            ]
-        )
+        """Compaction fix-up, one commit: swap the ``retired`` ids for
+        their merged ``replacement`` in what ``node`` consumed of
+        ``input_name`` — or, with ``input_name`` None, for every
+        ``(node, input)`` pair listed in ``node``. A pair that has
+        consumed nothing is left alone."""
+        pairs = node if input_name is None else [(node, input_name)]
+        records = [
+            {"op": "replace", "node": n, "input": i, "retired": list(retired),
+             "replacement": replacement}
+            for n, i in pairs
+            if self.consumed(n, i)
+        ]
+        if records:
+            self._commit(records)
 
     # ------------------------------------------------------------ write
     def _commit(self, records: list[dict]) -> int:
@@ -277,6 +305,7 @@ class TableLedger:
                 T.StructField("node", T.StringType()),
                 T.StructField("input", T.StringType()),
                 T.StructField("ids", T.ArrayType(T.StringType())),
+                T.StructField("produced", T.StringType()),
                 T.StructField("retired", T.ArrayType(T.StringType())),
                 T.StructField("replacement", T.StringType()),
             ]

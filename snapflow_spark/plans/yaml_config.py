@@ -1434,16 +1434,35 @@ def _merge_delta_node(
     bounds).  A table SINK: returns None, so the node's own store
     stays empty — the Delta table at ``path`` is the output; read it
     with ``sources.delta.read_delta`` (or a ``core.scan_delta``
-    node)."""
+    node).
+
+    Run by a Pipeline on a consumable input, the merge is exactly-once:
+    its commit carries ``txn=(node, highest input snapshot number)``,
+    and a re-run after a crash that lost the ledger commit merges only
+    the input snapshots the table does not record yet
+    (``incremental.pipeline.current_run``)."""
+    from snapflow_spark.incremental.pipeline import current_run
     from snapflow_spark.sources.delta import merge_delta
+
+    source, txn = input, None
+    app_id, consumed = current_run() or (None, {})
+    if "input" in consumed:
+        store, ids = consumed["input"]
+        number = {sid: int(sid.split("-")[1]) for sid in ids}
+        txn = (app_id, max(number.values()))
+
+        def source(recorded: int) -> DataFrame:
+            keep = [sid for sid in ids if number[sid] > recorded]
+            return input if keep == ids else store.read(spark, keep)
 
     merge_delta(
         spark,
         path,
-        input,
+        source,
         on=list(keys),
         when_matched=when_matched,
         when_not_matched=when_not_matched,
+        txn=txn,
     )
 
 

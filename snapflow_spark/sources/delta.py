@@ -2524,7 +2524,10 @@ def merge_delta(
 
     ``txn=(app_id, version)`` makes the merge IDEMPOTENT exactly like
     ``write_delta(txn=)``: already-recorded versions skip and return
-    None — the upsert stream sink's exactly-once contract.
+    None — the upsert stream sink's exactly-once contract.  With a
+    ``txn``, ``source`` may instead be a function of the highest
+    version the table records for ``app_id`` (-1: none) that returns
+    the rows still to merge — a replay whose earlier part committed.
 
     Scale shape: the source keys' min/max bounds PRUNE the target
     file list from log stats before any scan (delta-spark's MERGE
@@ -2555,8 +2558,11 @@ def merge_delta(
     snap = delta_snapshot(spark, table)
     if txn is not None:
         app_id, txn_v = str(txn[0]), int(txn[1])
-        if snap.txns.get(app_id, -1) >= txn_v:
+        recorded = snap.txns.get(app_id, -1)
+        if recorded >= txn_v:
             return None  # already committed: idempotent replay
+        if callable(source):
+            source = source(recorded)
     if (
         when_matched is None
         and when_not_matched is None

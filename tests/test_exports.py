@@ -60,3 +60,18 @@ def test_script_engine_imports_resolve():
             except ModuleNotFoundError:
                 missing.append(f"{f}: from {module} import {name}")
     assert not missing, missing
+
+
+def test_perfbench_trace_instruments():
+    """perfbench's ``--trace 1`` wraps engine functions and methods by
+    name (the ledger's four verbs among them). Instrumenting needs no
+    Spark session, so a rename it depends on fails here, in tier-1."""
+    import subprocess
+    import sys
+
+    code = "import perfbench.run as r; r.instrument()"
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd=ROOT, capture_output=True,
+        text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]

@@ -194,36 +194,34 @@ def test_compaction_preserves_incremental_semantics(spark, tmp_path):
         p.compact_store(spark, "raw")
 
 
-def test_crash_between_write_and_ledger_is_at_least_once(spark, tmp_path):
-    """The documented recovery contract: output snapshot written but
-    consumption NOT yet ledgered (crash window) -> the re-run processes
-    the same delta again, appending a duplicate snapshot. Downstream
-    keep-latest state nodes absorb the duplicates; append-log consumers
-    see at-least-once."""
-    from snapflow_spark.incremental import Node, Pipeline
+def test_crash_between_write_and_ledger_is_exactly_once(spark, tmp_path, monkeypatch):
+    """The recovery contract: output snapshot written but its ledger
+    commit lost (crash window) -> the next produce() folds the run
+    record the snapshot carries into the ledger instead of re-running
+    the node, so the append-log output holds the row exactly once."""
+    from snapflow_spark.incremental import Node, Pipeline, TableLedger
 
     p = Pipeline(str(tmp_path / "wh"))
     src = p.add_source("raw")
     p.add_node(Node("copy", lambda spark, input: input, {"input": ("raw", "consumable")}))
     src.append(spark.createDataFrame([(1,)], "id long"))
-    p.produce(spark)
-    assert p.store("copy").read(spark).count() == 1
 
-    # simulate the crash window: forget the consumption record only
-    del p.ledger._data["copy"]
-    p.ledger._flush()
+    # simulate the crash window: the ledger commit never happens
+    def crash(self, records):
+        raise RuntimeError("process died before the ledger commit")
+
+    monkeypatch.setattr(TableLedger, "_commit", crash)
+    with pytest.raises(RuntimeError, match="ledger commit"):
+        p.produce(spark)
+    monkeypatch.undo()
+    assert p.store("copy").read(spark).count() == 1
 
     p2 = Pipeline(str(tmp_path / "wh"))
     p2.sources["raw"] = src
     p2.add_node(Node("copy", lambda spark, input: input, {"input": ("raw", "consumable")}))
-    assert p2.produce(spark) == 1  # re-processes the unledgered delta
-    # append-log output now holds the duplicate: at-least-once, as documented
-    assert p2.store("copy").read(spark).count() == 2
-    # dedupe-keep-latest over the log restores exactly-once state
-    from snapflow_spark.operators import dedupe_keep_latest
-    import pyspark.sql.functions as F
-    log = p2.store("copy").read(spark).withColumn("one", F.lit(1))
-    assert dedupe_keep_latest(log, ["id"], ["one"]).count() == 1
+    assert p2.produce(spark) == 0  # rolled forward, not re-run
+    assert p2.store("copy").read(spark).count() == 1
+    assert p2.ledger.consumed("copy", "input") == src.snapshot_ids()
 
 
 def test_api_connector_loop_resumes_from_cursor(spark, tmp_path):

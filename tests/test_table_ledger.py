@@ -1,5 +1,5 @@
-"""TableLedger (commit-log run ledger) tests: fold parity with the
-JSON RunLedger on a shared op sequence, O(delta) append-only commits,
+"""TableLedger (commit-log run ledger) tests: fold parity with a
+reference fold on a shared op sequence, O(delta) append-only commits,
 checkpointed recovery that never re-reads vacuumed history, the
 create-exclusive version race, crash leftovers, and the Pipeline
 running end-to-end on the log backend.
@@ -9,38 +9,66 @@ import json
 import os
 from datetime import datetime
 
-from snapflow_spark.incremental import Node, Pipeline, RunLedger, TableLedger
+from snapflow_spark.incremental import Node, Pipeline, TableLedger
 from snapflow_spark.incremental.table_ledger import _fname, _COMMIT_PREFIX
+
+_KEYS = [("n1", "in"), ("n1", "other"), ("n2", "in"), ("n3", "a"),
+         ("n3", "b"), ("ghost", "in")]
 
 
 def _ops(ledger):
-    """A shared op sequence exercising every ledger verb."""
+    """A shared op sequence exercising every ledger verb, in both the
+    one-input and the run/compaction (several pairs) forms."""
     ledger.mark_consumed("n1", "in", ["s-0", "s-1"])
     ledger.mark_consumed("n1", "in", ["s-2"])
     ledger.mark_consumed("n2", "in", ["s-0"])
     ledger.mark_consumed("n1", "other", ["x-0"])
     ledger.mark_consumed("n1", "in", [])  # no-op
+    # one run of a two-input node that produced a snapshot
+    ledger.mark_consumed("n3", None, {"a": ["s-0"], "b": ["x-0", "x-1"]},
+                         produced="y-0", retired=[])
     ledger.replace_consumed("n1", "in", ["s-0", "s-1", "s-2"], "s-3")
     ledger.replace_consumed("ghost", "in", ["s-0"], "s-3")  # no state: no-op
+    # one compaction with two consumers
+    ledger.replace_consumed([("n2", "in"), ("n3", "a")], None, ["s-0"], "s-9")
+
+
+class _ReferenceFold:
+    """The fold, spelled out: a dict of lists per (node, input)."""
+
+    def __init__(self):
+        self.lists = {}
+
+    def mark_consumed(self, node, input_name, ids, produced=None, retired=()):
+        consumed = ids if input_name is None else {input_name: ids}
+        for name, got in consumed.items():
+            self.lists.setdefault((node, name), []).extend(got)
+
+    def replace_consumed(self, node, input_name, retired, replacement):
+        pairs = node if input_name is None else [(node, input_name)]
+        for key in pairs:
+            if self.lists.get(key):
+                kept = [i for i in self.lists[key] if i not in retired]
+                self.lists[key] = kept + [replacement]
+
+    def consumed(self, node, input_name):
+        return self.lists.get((node, input_name), [])
 
 
 def _state(ledger):
-    return {
-        (n, i): ledger.consumed(n, i)
-        for n, i in [("n1", "in"), ("n1", "other"), ("n2", "in"), ("ghost", "in")]
-    }
+    return {(n, i): ledger.consumed(n, i) for n, i in _KEYS}
 
 
-def test_fold_parity_with_json_ledger(tmp_path):
-    jl = RunLedger(str(tmp_path / "ledger.json"))
+def test_fold_parity_with_reference_fold(tmp_path):
+    ref = _ReferenceFold()
     tl = TableLedger(tmp_path / "log")
-    _ops(jl)
+    _ops(ref)
     _ops(tl)
-    assert _state(jl) == _state(tl)
-    avail = ["s-3", "s-4", "s-5"]
-    assert jl.unconsumed("n1", "in", avail) == tl.unconsumed("n1", "in", avail)
+    assert _state(tl) == _state(ref)
+    assert tl.consumed("n3", "a") == ["s-9"]
+    assert tl.unconsumed("n1", "in", ["s-3", "s-4", "s-5"]) == ["s-4", "s-5"]
     # a fresh reader of the same log folds to the same state
-    assert _state(TableLedger(tmp_path / "log")) == _state(jl)
+    assert _state(TableLedger(tmp_path / "log")) == _state(ref)
 
 
 def test_commits_are_append_only_and_o_delta(tmp_path):
@@ -160,7 +188,7 @@ def test_audit_dataframe(spark, tmp_path):
 
 def test_pipeline_runs_on_table_ledger(spark, tmp_path):
     wh = tmp_path / "warehouse"
-    pipe = Pipeline(str(wh), ledger=TableLedger(wh / "_ledger_log"))
+    pipe = Pipeline(str(wh))
     src = pipe.add_source("events")
     pipe.add_node(Node(
         name="doubled",
@@ -175,7 +203,7 @@ def test_pipeline_runs_on_table_ledger(spark, tmp_path):
     out = pipe.store("doubled").read(spark)
     assert sorted((r.id, r.v2) for r in out.collect()) == [(1, 20), (2, 40), (3, 60)]
     # restart: a new Pipeline over the same log resumes, not re-runs
-    pipe2 = Pipeline(str(wh), ledger=TableLedger(wh / "_ledger_log"))
+    pipe2 = Pipeline(str(wh))
     pipe2.add_source("events")
     pipe2.add_node(Node(
         name="doubled",
@@ -187,7 +215,7 @@ def test_pipeline_runs_on_table_ledger(spark, tmp_path):
 
 def test_pipeline_compact_fixes_table_ledger(spark, tmp_path):
     wh = tmp_path / "warehouse"
-    pipe = Pipeline(str(wh), ledger=TableLedger(wh / "_ledger_log"))
+    pipe = Pipeline(str(wh))
     src = pipe.add_source("events")
     pipe.add_node(Node(
         name="sink",

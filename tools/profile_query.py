@@ -34,10 +34,12 @@ def main() -> None:
     import tempfile
 
     evdir = tempfile.mkdtemp(prefix="spark_events_")
+    import pyspark
+    from pyspark.find_spark_home import _find_spark_home
     from pyspark.sql import SparkSession
 
     from snapflow_spark.registry import all_queries
-    from snapflow_spark.session import tune
+    from snapflow_spark.session import python_worker_confs, spark_pyspark_version, tune
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
@@ -52,6 +54,10 @@ def main() -> None:
         .config("spark.eventLog.dir", f"file://{evdir}")
         .config("spark.eventLog.compress", "false")
         .config("spark.eventLog.rolling.enabled", "false")
+        # the Python worker path build_session gives: no zip rescans
+        .config(map=python_worker_confs(
+            pyspark.__version__, spark_pyspark_version(_find_spark_home())
+        ))
         .getOrCreate()
     )
     tune(spark)
