@@ -39,9 +39,13 @@ version their metadata, as an append-only LOG of commits:
   plus only the commits after it: recovery is O(delta since last
   checkpoint), not O(all commits ever). Commits at or before a
   checkpoint are garbage (``vacuum()`` deletes them); correctness
-  never depends on them once the checkpoint exists.
+  never depends on them once the checkpoint exists. Each automatic
+  checkpoint also removes what the checkpoint BEFORE it covers, so
+  the directory holds at most two checkpoints and the commits since
+  the older one, and the listing every commit's ``refresh()`` makes
+  stays O(``checkpoint_interval``) however old the pipeline is.
 
-- ``as_dataframe(spark)`` exposes the raw action log as a Spark
+- ``as_dataframe(spark)`` exposes the retained action log as a Spark
   DataFrame — the audit/"metastore table" view (who consumed what,
   in which commit).
 
@@ -251,6 +255,7 @@ class TableLedger:
                 and (version + 1) % self.checkpoint_interval == 0
             ):
                 self.checkpoint()
+                self._vacuum(keep=2)
             return version
         raise RuntimeError(
             f"ledger commit lost {1000} consecutive version races in {self.path}"
@@ -280,10 +285,17 @@ class TableLedger:
         """Delete commits covered by the latest checkpoint (and older
         checkpoints). Returns deleted filenames. Never touches the
         tail after the checkpoint — those are still the only record."""
+        return self._vacuum(keep=1)
+
+    def _vacuum(self, keep: int) -> list[str]:
+        """Vacuum up to the ``keep``-th newest checkpoint. The
+        automatic vacuum keeps the previous checkpoint and the commits
+        after it: a reader that listed the directory just before the
+        newest checkpoint still finds every file it then reads."""
         commits, ckpts = self._scan()
-        if not ckpts:
+        if len(ckpts) < keep:
             return []
-        horizon = ckpts[-1]
+        horizon = ckpts[-keep]
         doomed = [_fname(_COMMIT_PREFIX, v) for v in commits if v <= horizon]
         doomed += [_fname(_CKPT_PREFIX, v) for v in ckpts if v < horizon]
         for name in doomed:
@@ -292,8 +304,9 @@ class TableLedger:
 
     # ------------------------------------------------------------ audit
     def as_dataframe(self, spark):
-        """The raw action log as a DataFrame — the audit table view:
-        one row per action record with its commit version. Reads the
+        """The retained action log as a DataFrame — the audit table
+        view: one row per action record with its commit version (the
+        commits since the checkpoint before the latest one). Reads the
         commit files as JSON-lines; an empty log returns an empty
         DataFrame with the stable audit schema."""
         from pyspark.sql import types as T

@@ -86,14 +86,22 @@ from pathlib import Path
 from urllib.parse import quote, unquote
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     InputPartition,
 )
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    ByteType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from snapflow_spark.sources.occ import ConcurrentModificationError
 
@@ -938,11 +946,15 @@ def _scan_live(
     spark: SparkSession,
     snap: DeltaSnapshot,
     kept: list,
+    positions: bool = False,
 ) -> DataFrame:
     """ONE parquet relation over the given live files ([(rel, abs
     path, partitionValues)]) with deletion vectors applied and
     partition columns re-attached — read_delta's body, reusable for
     subsets (optimize_delta compacts exactly the files it names).
+    ``positions`` also keeps each live row's file URI and row index
+    (``__df_file``, ``__df_pos``) — merge_delta's match pass marks
+    DV positions from them.
     See read_delta's docstring for the plan-shape contract."""
     phys = snap.physical_names
     fields = {f.name: f for f in snap.schema.fields}
@@ -993,6 +1005,8 @@ def _scan_live(
     out_cols = [f.name for f in snap.schema.fields]
     if not kept:
         return spark.createDataFrame([], snap.schema)
+    if positions:
+        out_cols += ["__df_file", "__df_pos"]
 
     _uri = hadoop_file_uri
 
@@ -1009,7 +1023,7 @@ def _scan_live(
                 f"deletion vector storageType {st_!r} (i/u/p are the "
                 "spec)"
             )
-    need_key = bool(snap.partition_columns) or bool(dv_entries)
+    need_key = positions or bool(snap.partition_columns) or bool(dv_entries)
 
     df = spark.read.schema(data_schema).parquet(*[p for _r, p, _pv in kept])
     if snap.field_ids:  # mode=id reads come out logical already
@@ -1027,7 +1041,7 @@ def _scan_live(
         sel = [F.col(P(f.name)).alias(f.name) for f in data_fields]
     if need_key:
         sel.append(F.col("_metadata.file_path").alias("__df_file"))
-    if dv_entries:
+    if positions or dv_entries:
         sel.append(F.col("_metadata.row_index").alias("__df_pos"))
     df = df.select(*sel)
 
@@ -1629,19 +1643,7 @@ def write_delta(
                     }
                 }
             )
-    for rel, pv, sz, mtime_ms, st in added:
-        add: dict = {
-            "path": rel,
-            "partitionValues": pv,
-            "size": sz,
-            # required by the Delta protocol's add action; real
-            # delta-spark readers reject commits without it
-            "modificationTime": mtime_ms,
-            "dataChange": True,
-        }
-        if st is not None:
-            add["stats"] = json.dumps(st, separators=(",", ":"))
-        actions.append({"add": add})
+    actions += _add_actions(added)
     try:
         # append = blind append (tolerates concurrent adds/removes);
         # overwrite READS the table it replaces, so any concurrent
@@ -1701,7 +1703,7 @@ def delete_from_delta(
     responsibility as any manual partition predicate)."""
     table = Path(path)
     snap = delta_snapshot(spark, table)
-    actions, n_deleted, _nm = _dv_delete_plan(
+    actions, n_deleted = _dv_delete_plan(
         spark, table, snap, condition, partition_filter,
         min_max_filter, what="delete_from_delta",
     )
@@ -1745,38 +1747,14 @@ def _dv_delete_plan(
     partition_filter: dict | None,
     min_max_filter: dict | None,
     what: str,
-    match_keys: DataFrame | None = None,
-    delete_matched: bool = True,
-    delete_not_matched: bool = False,
-) -> tuple[list[dict], int, int]:
-    """The shared DV row-marking plan: scan the (pruned) live files,
-    find matching row indexes per file, and return the remove +
-    re-add-with-merged-DV actions plus (newly-deleted total,
-    newly-deleted MATCHED) counts — delete_from_delta commits them
-    as-is; update_delta / merge_delta append their rewritten-row adds
-    first.  ``match_keys`` (used by merge) selects rows by key
-    EQUALITY against a DataFrame of key values instead of a
-    predicate — the scan left-joins the deduplicated keys and
-    matches where the marker is non-null, so a huge key set degrades
-    to a shuffle join instead of a driver IN-list.
-    ``delete_matched`` / ``delete_not_matched`` pick which side(s)
-    of the key join die (merge's when_matched vs
-    when_not_matched_by_source), in ONE pass with ONE DV per file —
-    two separate plans would publish conflicting re-adds for a file
-    holding both kinds of rows.
-
-    Scale shape (round 15 — distributed, the delete_from_iceberg
-    discipline): ONE job — the matched (file, pos) pairs shuffle by
-    file, so only TOUCHED files get a task, and each file's new DV
-    sidecar is merged with its old one and WRITTEN entirely
-    executor-side inside ``applyInPandas`` — the driver only ever
-    holds one descriptor row per touched file, never a row-index
-    list, at any delete breadth.  A task learns its file's physical
-    row count (the whole-file-drop test) from the add's
-    ``numRecords`` stat, or from the file's footer when the add
-    carries no stats.  Per-task memory is O(deleted rows in ONE
-    file), the same bound a delta-spark scan task's bitmap build
-    has."""
+) -> tuple[list[dict], int]:
+    """The predicate DV row-marking plan: scan the (pruned) files,
+    mark the rows ``condition`` selects, and return the remove +
+    re-add-with-merged-DV actions plus the number of rows newly
+    deleted — delete_from_delta commits them as-is; update_delta
+    appends its rewritten-row adds first.  The scan reads the raw
+    files (rows an old DV already deleted are subtracted per file in
+    ``_dv_pass``), so no DV anti-join runs before the marking."""
     cond = (
         F.expr(condition) if isinstance(condition, str) else condition
     )
@@ -1849,23 +1827,7 @@ def _dv_delete_plan(
         if _keep(pv) and _stats_keep(st)
     ]
     if not kept:
-        return [], 0, 0
-    # per-kept-file metadata the DV tasks need: old descriptors, stat
-    # row counts, footer paths for stat-less adds
-    uri_to_rel: dict[str, str] = {}
-    old_descs: dict[str, dict] = {}
-    file_totals: dict[str, int] = {}
-    footer_paths: dict[str, str] = {}
-    for rel, p, _pv, st in kept:
-        uri = hadoop_file_uri(p)
-        uri_to_rel[uri] = rel
-        if snap.dvs.get(rel):
-            old_descs[uri] = snap.dvs[rel]
-        n = (st or {}).get("numRecords")
-        if n is None:
-            footer_paths[uri] = p
-        else:
-            file_totals[uri] = int(n)
+        return [], 0
     df = spark.read.schema(data_schema).parquet(
         *[p for _r, p, _pv, _st in kept]
     )
@@ -1907,32 +1869,68 @@ def _dv_delete_plan(
             df = df.withColumn(
                 c, F.col(f"__pv_{i}").cast(fields[c].dataType)
             )
-    matched_flag = F.lit(True)  # predicate deletes count as "matched"
-    if match_keys is not None:
-        key_cols = list(match_keys.columns)
-        missing = [c for c in key_cols if c not in df.columns]
-        if missing:
-            raise ValueError(
-                f"{what}: match keys {missing} not in the table "
-                f"columns {sorted(fields)}"
-            )
-        marker = match_keys.dropDuplicates().withColumn(
-            "__dv_mm", F.lit(1)
-        )
-        df = df.join(marker, on=key_cols, how="left")
-        matched_flag = F.col("__dv_mm").isNotNull()
-        if delete_matched and delete_not_matched:
-            cond = F.lit(True)
-        elif delete_not_matched:
-            cond = F.col("__dv_mm").isNull()
+    rows = df.where(cond).select(
+        "__df_file",
+        "__df_pos",
+        F.lit(True).alias("__dv_kill"),
+        F.lit(True).alias("__dv_m"),
+    )
+    actions, n_deleted, _m, _src, _max = _dv_pass(
+        table, snap, kept, rows, what
+    )
+    return actions, n_deleted
+
+
+def _dv_pass(
+    table: Path,
+    snap: DeltaSnapshot,
+    kept: list,
+    rows: DataFrame,
+    what: str,
+) -> tuple[list[dict], int, int, int, int]:
+    """Turn marked rows into DV commit actions in ONE distributed
+    pass.  ``kept`` lists the scanned files ([(rel, abs path,
+    partitionValues, stats)]); ``rows`` carries ``__df_file`` /
+    ``__df_pos`` (the row's file URI and row index), ``__dv_kill``
+    (the row dies) and ``__dv_m`` (the row counts as matched), and
+    optionally merge's per-key source counts: ``__src_n`` (source
+    rows with the row's key) and ``__src_first`` (the key's one
+    counted row).  Returns (actions, rows newly deleted, of them
+    matched, summed ``__src_n`` over counted rows, largest
+    ``__src_n``).
+
+    Scale shape (round 15 — distributed, the delete_from_iceberg
+    discipline): the rows shuffle by file, so only files with marked
+    rows get a task, and each file's new DV sidecar is merged with
+    its old one and WRITTEN entirely executor-side inside
+    ``applyInPandas`` — the driver only ever holds one descriptor
+    row per touched file, never a row-index list, at any delete
+    breadth.  A task learns its file's physical row count (the
+    whole-file-drop test) from the add's ``numRecords`` stat, or
+    from the file's footer when the add carries no stats.  Per-task
+    memory is O(marked rows in ONE file), the same bound a
+    delta-spark scan task's bitmap build has."""
+    # per-kept-file metadata the DV tasks need: old descriptors, stat
+    # row counts, footer paths for stat-less adds
+    uri_to_rel: dict[str, str] = {}
+    old_descs: dict[str, dict] = {}
+    file_totals: dict[str, int] = {}
+    footer_paths: dict[str, str] = {}
+    for rel, p, _pv, st in kept:
+        uri = hadoop_file_uri(p)
+        uri_to_rel[uri] = rel
+        if snap.dvs.get(rel):
+            old_descs[uri] = snap.dvs[rel]
+        n = (st or {}).get("numRecords")
+        if n is None:
+            footer_paths[uri] = p
         else:
-            cond = F.col("__dv_mm").isNotNull()
-    # matched (file, pos) pairs shuffle by file; each touched file's
-    # task merges the old DV and writes the new sidecar EXECUTOR-side,
-    # returning ONE descriptor row.  The closure carries the
-    # per-kept-file metadata above — O(#kept files), which PySpark
-    # ships as one broadcast once it outgrows the UDF compression
-    # threshold.
+            file_totals[uri] = int(n)
+    # each file's task merges the old DV and writes the new sidecar
+    # EXECUTOR-side, returning ONE descriptor row.  The closure
+    # carries the per-kept-file metadata above — O(#kept files), which
+    # PySpark ships as one broadcast once it outgrows the UDF
+    # compression threshold.
     table_root = str(table)
 
     def _build_dv(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -1942,64 +1940,57 @@ def _dv_delete_plan(
         )
 
         uri = pdf["__df_file"].iloc[0]
+        src_rows = src_max = 0
+        if "__src_n" in pdf:
+            n_src = pdf["__src_n"].fillna(0).astype("int64")
+            src_rows = int(n_src[pdf["__src_first"]].sum())
+            src_max = int(n_src.max())
         old_desc = old_descs.get(uri)
         old = (
             set(deleted_row_indexes(table_root, old_desc))
             if old_desc
             else set()
         )
+        kill = pdf[pdf["__dv_kill"]]
         pairs = {
-            int(i): bool(m)
-            for i, m in zip(pdf["__df_pos"], pdf["__dv_m"])
+            int(i): bool(m) for i, m in zip(kill["__df_pos"], kill["__dv_m"])
         }
         matched = set(pairs) - old
-        if not matched:  # every hit already dead in the old DV
-            return pd.DataFrame(
-                {
-                    "file": pd.Series([], dtype="object"),
-                    "n_new": pd.Series([], dtype="int64"),
-                    "n_new_m": pd.Series([], dtype="int64"),
-                    "descriptor": pd.Series([], dtype="object"),
-                }
-            )
-        new_set = old | matched
-        total = file_totals.get(uri)
-        if total is None:  # add without stats: the footer knows
-            import pyarrow.parquet as pq
+        desc_json = None
+        if matched:
+            new_set = old | matched
+            total = file_totals.get(uri)
+            if total is None:  # add without stats: the footer knows
+                import pyarrow.parquet as pq
 
-            total = pq.ParquetFile(footer_paths[uri]).metadata.num_rows
-        desc_json = (
-            None  # every physical row dead: drop the file outright
-            if len(new_set) >= total
-            else json.dumps(
-                write_dv_file(table_root, sorted(new_set)),
-                separators=(",", ":"),
-            )
-        )
+                total = pq.ParquetFile(footer_paths[uri]).metadata.num_rows
+            if len(new_set) < total:  # else every row dead: drop the file
+                desc_json = json.dumps(
+                    write_dv_file(table_root, sorted(new_set)),
+                    separators=(",", ":"),
+                )
         return pd.DataFrame(
             {
                 "file": [uri],
                 "n_new": [len(matched)],
                 "n_new_m": [sum(1 for i in matched if pairs[i])],
+                "src_rows": [src_rows],
+                "src_max": [src_max],
                 "descriptor": [desc_json],
             }
         )
 
     desc_rows = (
-        df.where(cond)
-        .select(
-            "__df_file", "__df_pos", matched_flag.alias("__dv_m")
-        )
-        .groupBy("__df_file")
+        rows.groupBy("__df_file")
         .applyInPandas(
             _build_dv,
-            "file string, n_new long, n_new_m long, descriptor string",
+            "file string, n_new long, n_new_m long, src_rows long, "
+            "src_max long, descriptor string",
         )
         .collect()  # O(#touched files): one descriptor row each
     )
     actions: list[dict] = []
-    n_deleted = 0
-    n_deleted_matched = 0
+    n_deleted = n_deleted_matched = src_rows = src_max = 0
     by_rel = {rel: (pv, st) for rel, _p, pv, st in kept}
     sizes = {rel: sz for rel, _pv, sz, _st in snap.files}
     for row in sorted(desc_rows, key=lambda r: r["file"]):
@@ -2007,6 +1998,10 @@ def _dv_delete_plan(
             raise RuntimeError(
                 f"{what}: scan reported unknown file {row['file']!r}"
             )
+        src_rows += int(row["src_rows"])
+        src_max = max(src_max, int(row["src_max"]))
+        if not row["n_new"]:
+            continue  # nothing newly dead in this file
         rel = uri_to_rel[row["file"]]
         n_deleted += int(row["n_new"])
         n_deleted_matched += int(row["n_new_m"])
@@ -2028,7 +2023,7 @@ def _dv_delete_plan(
         if st is not None:
             add["stats"] = json.dumps(st, separators=(",", ":"))
         actions.append({"add": add})
-    return actions, n_deleted, n_deleted_matched
+    return actions, n_deleted, n_deleted_matched, src_rows, src_max
 
 
 def _cdf_enabled(snap: DeltaSnapshot) -> bool:
@@ -2421,7 +2416,7 @@ def update_delta(
         )
     if not set_:
         raise ValueError("update_delta: empty set_ — nothing to update")
-    actions, n, _nm = _dv_delete_plan(
+    actions, n = _dv_delete_plan(
         spark, table, snap, condition, partition_filter,
         min_max_filter, what="update_delta",
     )
@@ -2452,18 +2447,7 @@ def update_delta(
         ]
     )
     _check_constraints(updated, snap.metadata, "update_delta")
-    added = _stage_logical(updated, table, snap)
-    for rel, pv, sz, mtime_ms, st in added:
-        add: dict = {
-            "path": rel,
-            "partitionValues": pv,
-            "size": sz,
-            "modificationTime": mtime_ms,
-            "dataChange": True,
-        }
-        if st is not None:
-            add["stats"] = json.dumps(st, separators=(",", ":"))
-        actions.append({"add": add})
+    actions += _add_actions(_stage_logical(updated, table, snap))
     if _cdf_enabled(snap):
         # the CDF write side: pre/post images as authoritative change
         # rows (delta's update_preimage/update_postimage pair)
@@ -2529,22 +2513,30 @@ def merge_delta(
     version the table records for ``app_id`` (-1: none) that returns
     the rows still to merge — a replay whose earlier part committed.
 
-    Scale shape: the source keys' min/max bounds PRUNE the target
-    file list from log stats before any scan (delta-spark's MERGE
-    touched-file discovery) — a narrow changelog against a 100 TB
-    table scans only the files whose key ranges can match; the
-    matched-row marking rides ``_dv_delete_plan``'s distributed
-    key-equality matcher (source keys join the scan, AQE broadcasts
-    small changelogs; DV sidecars are written executor-side), the
-    new rows stage through the distributed hive-layout writer, and
-    the driver holds only O(#touched files) descriptors +
-    O(#staged files) stats — a billion-row changelog never
-    materializes rows driver-side.
-    One source aggregate yields the key bounds, the row count and the
-    largest number of rows per key; the multiple-match check runs
-    only when some key repeats, and the new rows (replacements and
-    inserts) stage in ONE write — for ``update`` + ``insert`` that is
-    the projected source itself, no join.
+    Scale shape: the source keys' bounds PRUNE the target file list
+    from log stats and partition values before any scan
+    (delta-spark's MERGE touched-file discovery) — a narrow changelog
+    against a 100 TB table scans only the files whose key ranges can
+    match; the matched rows are marked in ONE distributed match pass
+    (DV sidecars are written executor-side), the new rows stage
+    through the distributed hive-layout writer, and the driver holds
+    only O(#touched files) descriptors + O(#staged files) stats — a
+    billion-row changelog never materializes rows driver-side.
+    A merge is at most three steps.  For ``update`` + ``insert`` the
+    new rows are the projected source whatever the match finds, so
+    they stage FIRST, and the staged files' stats give the source row
+    count and the key bounds with no Spark job.  Then one match pass
+    joins the live target rows (file, row index, keys) with per-key
+    source counts; its one collect returns the DV descriptors, the
+    matched and by-source deletes, the source rows that matched (each
+    key counted once, on its first live row) and the largest per-key
+    count for the multiple-match rule.  Other clause shapes take the
+    bounds and row count from one flat source aggregate and stage
+    their new rows (which depend on the match) after the pass, in
+    ONE write.  Only integral and string keys the source carries with
+    the table's own type get a bound (float keys match NaN = NaN,
+    which stats may leave out); by-source deletes prune nothing.  A
+    merge that does not commit removes every file it staged.
     CDF-enabled tables emit authoritative change rows
     (update_preimage/postimage pairs, insert, delete).  Returns
     ``{"rows_matched": n, "rows_inserted": m}``: ``n`` target rows
@@ -2628,99 +2620,94 @@ def merge_delta(
         )
 
     source = source.cache()
+    actions: list[dict] = []
+    committed = False
     try:
-        # ONE source aggregate: the key bounds, the row count and the
-        # largest number of rows per key.
-        # touched-file discovery (delta-spark's MERGE file pruning):
-        # the source keys' min/max bounds prune the TARGET file list
-        # from log stats before any scan — a narrow changelog against
-        # a huge table scans only the files whose key ranges can
-        # match.  Safe: a target key outside the source's bounds can
-        # never match a source row (plain equality), so dropping its
-        # files changes neither the matched set nor the anti-join.
-        bounds = (
-            source.groupBy(*on)
-            .count()
-            .agg(
-                *[F.min(c).alias(f"__lo_{i}") for i, c in enumerate(on)],
-                *[F.max(c).alias(f"__hi_{i}") for i, c in enumerate(on)],
-                F.sum("count").alias("__rows"),
-                F.max("count").alias("__per_key"),
-            )
-            .first()
+        by_source = when_not_matched_by_source == "delete"
+        new_first = when_matched == "update" and when_not_matched == "insert"
+        phys = snap.physical_names
+
+        def P(c: str) -> str:
+            return phys.get(c, c) if phys else c
+
+        # a bound may only widen the range a join match can lie in:
+        # a key gets one only when the source carries the table's own
+        # (integral or binary-string) type
+        src_types = {f.name: f.dataType for f in source.schema.fields}
+        boundable = [
+            c for c in on
+            if not by_source
+            and fields[c].dataType in _BOUNDED_KEY_TYPES
+            and src_types.get(c) == fields[c].dataType
+        ]
+        bounds: dict = {}
+        if new_first:
+            new_rows = _project(source, "when_matched='update'")
+            _check_constraints(new_rows, snap.metadata, "merge_delta")
+            staged = _stage_logical(new_rows, table, snap)
+            actions += _add_actions(staged)
+            n_source = _staged_rows(staged, source)
+            stats = [st for *_f, st in staged]
+            for c in boundable:
+                if c in snap.partition_columns:
+                    # null keys match nothing; an unparsed value
+                    # leaves the column unbounded
+                    mins = maxs = [
+                        _pv_value(pv[P(c)], fields[c].dataType)
+                        for _r, pv, *_x in staged
+                        if pv.get(P(c)) is not None
+                    ]
+                else:
+                    mins = [(st or {}).get("minValues", {}).get(P(c))
+                            for st in stats]
+                    maxs = [(st or {}).get("maxValues", {}).get(P(c))
+                            for st in stats]
+                if mins and None not in mins and None not in maxs:
+                    bounds[c] = (min(mins), max(maxs))
+        else:
+            # one flat aggregate: the row count and the key bounds
+            agg = source.agg(
+                F.count(F.lit(1)).alias("__rows"),
+                *[F.min(c).alias(f"__lo_{c}") for c in boundable],
+                *[F.max(c).alias(f"__hi_{c}") for c in boundable],
+            ).first()
+            n_source = int(agg["__rows"])
+            for c in boundable:
+                lo, hi = agg[f"__lo_{c}"], agg[f"__hi_{c}"]
+                if lo is not None and hi is not None:
+                    bounds[c] = (lo, hi)
+
+        def in_bounds(pv: dict, st: dict | None) -> bool:
+            for c, (lo, hi) in bounds.items():
+                if c in snap.partition_columns:
+                    mn = mx = _pv_value(pv.get(P(c)), fields[c].dataType)
+                else:
+                    mn = ((st or {}).get("minValues") or {}).get(P(c))
+                    mx = ((st or {}).get("maxValues") or {}).get(P(c))
+                if mx is not None and mx < lo or mn is not None and mn > hi:
+                    return False
+            return True
+
+        kept = [
+            (rel, str(table / rel), pv, st)
+            for rel, pv, _sz, st in snap.files
+            if in_bounds(pv, st)
+        ]
+        live = _scan_live(
+            spark, snap, [(r, p, pv) for r, p, pv, _st in kept],
+            positions=True,
         )
-        n_source = int(bounds["__rows"] or 0)
-        keys_unique = int(bounds["__per_key"] or 0) <= 1
-        mmf: dict | None = {}
-        for i, c in enumerate(on):
-            lo, hi = bounds[f"__lo_{i}"], bounds[f"__hi_{i}"]
-            if (
-                isinstance(lo, (int, float, str))
-                and isinstance(hi, (int, float, str))
-                and not isinstance(lo, bool)
-                and not isinstance(hi, bool)
-            ):
-                mmf[c] = (lo, hi)
-        mmf = mmf or None
-        if when_not_matched_by_source is not None:
-            # by-source deletes target rows OUTSIDE the source's key
-            # bounds — the touched-file prune would skip them
-            mmf = None
-        target = read_delta(spark, table, min_max_filter=mmf)
-        tgt_keys = target.select(*on).dropDuplicates()
-        matched_src = source.join(tgt_keys, on, "left_semi")
-        # source rows matching a target row: a key can match more
-        # than once only when it repeats in the source, so the
-        # multiple-match check runs only then — and the same pass
-        # over source ⋉ target keys yields the matched-row count
-        n_src_matched = 0
-        if when_matched is not None and not keys_unique:
-            # delta's multiple-source-rows-matched rule: ambiguous
-            # update/delete refuses loudly
-            dup = (
-                matched_src.groupBy(*on)
-                .count()
-                .agg(
-                    F.sum("count").alias("__rows"),
-                    F.max_by(F.struct(*on), "count").alias("__key"),
-                    F.max("count").alias("__per_key"),
-                )
-                .first()
-            )
-            if int(dup["__per_key"] or 0) > 1:
-                key = {c: dup["__key"][c] for c in on}
-                raise ValueError(
-                    "merge_delta: multiple source rows match one "
-                    f"target row (e.g. key {key}) — deduplicate the "
-                    "changelog first (dedupe_keep_latest)"
-                )
-            n_src_matched = int(dup["__rows"] or 0)
-        elif when_not_matched == "insert" and n_source:
-            n_src_matched = matched_src.count()
-        n_inserted = (
-            n_source - n_src_matched if when_not_matched == "insert" else 0
-        )
-        actions: list[dict] = []
-        n_matched = 0
-        n_by_source = 0
-        del_matched = when_matched is not None
-        del_unmatched = when_not_matched_by_source == "delete"
-        if del_matched or del_unmatched:
-            actions, n_total, n_matched = _dv_delete_plan(
-                spark, table, snap, None, None, mmf,
-                what="merge_delta",
-                match_keys=source.select(*on),
-                delete_matched=del_matched,
-                delete_not_matched=del_unmatched,
-            )
-            n_by_source = n_total - n_matched
-        # the new rows — replacements and inserts — stage in ONE write
+        target = live.drop("__df_file", "__df_pos")
+        tgt_keys = target.select(*on)
         updated = inserted = None
         if when_matched == "update":
-            updated = _project(matched_src, "when_matched='update'")
+            updated = _project(
+                source.join(tgt_keys, on, "left_semi"),
+                "when_matched='update'",
+            )
         elif isinstance(when_matched, dict):
-            # plain (null-UNSAFE) equality, matching the delete
-            # plan's key-marker join: a null-keyed row never matches
+            # plain (null-UNSAFE) equality, matching the match pass's
+            # key join: a null-keyed row never matches
             joined = target.alias("target").join(
                 source.alias("source"),
                 [
@@ -2750,34 +2737,70 @@ def merge_delta(
                 source.join(tgt_keys, on, "left_anti"),
                 "when_not_matched='insert'",
             )
-        if when_matched == "update" and inserted is not None:
-            # matched ∪ unmatched source rows is the whole source
-            new_rows = _project(source, "when_matched='update'")
-        elif updated is not None and inserted is not None:
-            new_rows = updated.unionByName(inserted)
-        else:
-            new_rows = updated if updated is not None else inserted
-        if new_rows is not None and n_source:
-            _check_constraints(new_rows, snap.metadata, "merge_delta")
-            for rel, pv, sz, mtime_ms, st in _stage_logical(
-                new_rows, table, snap
-            ):
-                add: dict = {
-                    "path": rel,
-                    "partitionValues": pv,
-                    "size": sz,
-                    "modificationTime": mtime_ms,
-                    "dataChange": True,
-                }
-                if st is not None:
-                    add["stats"] = json.dumps(st, separators=(",", ":"))
-                actions.append({"add": add})
+        if not new_first:
+            # the new rows depend on the match: they stage after it,
+            # in ONE write
+            if updated is not None and inserted is not None:
+                new_rows = updated.unionByName(inserted)
+            else:
+                new_rows = updated if updated is not None else inserted
+            if new_rows is not None and n_source:
+                _check_constraints(new_rows, snap.metadata, "merge_delta")
+
+        # the one match pass; a key can sit in several live target
+        # rows, so its source count is summed on the first one only
+        n_matched = n_by_source = src_matched = src_max = 0
+        if kept and (by_source or (when_matched is not None and n_source)):
+            counts = source.groupBy(*on).agg(
+                F.count(F.lit(1)).alias("__src_n")
+            )
+            hit = F.col("__src_n").isNotNull()
+            first = (
+                F.row_number().over(
+                    Window.partitionBy(*on).orderBy("__df_file", "__df_pos")
+                )
+                == 1
+            )
+            rows = live.select(*on, "__df_file", "__df_pos").join(
+                counts, on, "left" if by_source else "inner"
+            ).select(
+                "__df_file",
+                "__df_pos",
+                (F.lit(True) if when_matched is not None else ~hit).alias(
+                    "__dv_kill"
+                ),
+                hit.alias("__dv_m"),
+                "__src_n",
+                first.alias("__src_first"),
+            )
+            dv_actions, n_total, n_matched, src_matched, src_max = _dv_pass(
+                table, snap, kept, rows, "merge_delta"
+            )
+            actions += dv_actions
+            n_by_source = n_total - n_matched
+        if when_matched is not None and src_max > 1:
+            # delta's multiple-source-rows-matched rule: ambiguous
+            # update/delete refuses loudly (what was staged is removed)
+            raise ValueError(
+                "merge_delta: multiple source rows match one target "
+                f"row ({src_max} rows share a matched key) — "
+                "deduplicate the changelog first (dedupe_keep_latest)"
+            )
+        if not new_first and new_rows is not None and n_source:
+            staged = _stage_logical(new_rows, table, snap)
+            actions += _add_actions(staged)
+        n_inserted = 0
+        if when_not_matched == "insert":
+            if when_matched is None and not by_source:
+                # insert-only: the staged rows are exactly the inserts
+                n_inserted = _staged_rows(staged, inserted) if n_source else 0
+            else:
+                n_inserted = n_source - src_matched
         if not actions:
             # nothing changed; a txn-stamped no-op still records the
             # high-water mark so replays stay cheap
             if txn is None:
                 return {"rows_matched": 0, "rows_inserted": 0}
-            actions = []
         if _cdf_enabled(snap) and (
             n_matched or n_inserted or n_by_source
         ):
@@ -2803,7 +2826,7 @@ def merge_delta(
                 changes = (
                     ins if changes is None else changes.unionByName(ins)
                 )
-            if del_unmatched and n_by_source:
+            if by_source and n_by_source:
                 gone = _tag(
                     target.join(source.select(*on), on, "left_anti"),
                     "delete",
@@ -2816,14 +2839,18 @@ def merge_delta(
             if changes is not None:
                 actions += _stage_cdc_actions(changes, table, snap)
         if txn is not None:
-            actions.append(
+            # first of the file actions, as write_delta places it: a
+            # concurrent writer's conflict check meets the txn before
+            # any add or remove and returns None below
+            actions.insert(
+                0,
                 {
                     "txn": {
                         "appId": app_id,
                         "version": txn_v,
                         "lastUpdated": int(time.time() * 1000),
                     }
-                }
+                },
             )
         try:
             _commit_dv_actions(
@@ -2835,12 +2862,78 @@ def merge_delta(
             )
         except DeltaConcurrentTransactionError:
             return None  # applied by a concurrent writer instance
+        committed = True
         out = {"rows_matched": n_matched, "rows_inserted": n_inserted}
         if when_not_matched_by_source is not None:
             out["rows_deleted_by_source"] = n_by_source
         return out
     finally:
         source.unpersist()
+        if not committed:
+            _discard_staged(table, actions)
+
+
+_BOUNDED_KEY_TYPES = (
+    ByteType(), ShortType(), IntegerType(), LongType(), StringType(),
+)
+
+
+def _pv_value(raw: str | None, dt):
+    """A partition value as the key type merge bounds compare
+    (integral or string); None when it is null or does not parse."""
+    if raw is None or isinstance(dt, StringType):
+        return raw
+    try:
+        return int(raw)
+    except ValueError:
+        return None
+
+
+def _staged_rows(staged: list, df: DataFrame) -> int:
+    """Rows in the files ``_stage_logical`` staged from ``df``: their
+    ``numRecords`` stats, or a count of ``df`` when one is missing."""
+    stats = [st for *_f, st in staged]
+    if all(st is not None for st in stats):
+        return sum(int(st["numRecords"]) for st in stats)
+    return df.count()
+
+
+def _add_actions(staged: list) -> list[dict]:
+    """``add`` actions for files ``_stage_and_move`` staged."""
+    out = []
+    for rel, pv, sz, mtime_ms, st in staged:
+        add: dict = {
+            "path": rel,
+            "partitionValues": pv,
+            "size": sz,
+            # required by the Delta protocol's add action; real
+            # delta-spark readers reject commits without it
+            "modificationTime": mtime_ms,
+            "dataChange": True,
+        }
+        if st is not None:
+            add["stats"] = json.dumps(st, separators=(",", ":"))
+        out.append({"add": add})
+    return out
+
+
+def _discard_staged(table: Path, actions: list[dict]) -> None:
+    """Remove what an uncommitted operation staged: its new data and
+    change files and its new DV sidecars (a re-add of a live file
+    with a new DV keeps the data file)."""
+    from snapflow_spark.sources.deletion_vectors import _dv_sidecar_path
+
+    for a in actions:
+        rec = a.get("add") or a.get("cdc")
+        if rec is None:
+            continue
+        dv = rec.get("deletionVector")
+        if dv is None:
+            (table / unquote(rec["path"])).unlink(missing_ok=True)
+        elif dv.get("storageType") == "u":
+            _dv_sidecar_path(table, dv["pathOrInlineDv"]).unlink(
+                missing_ok=True
+            )
 
 
 def _check_constraints(

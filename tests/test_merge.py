@@ -492,10 +492,11 @@ def test_dv_plan_without_add_stats(spark, tmp_path):
 
 
 # Jobs one merge_delta launched when this guard was written: the
-# source aggregate (bounds, row count, rows per key), the matched
-# count over source ⋉ target keys, the DV plan's one applyInPandas
-# pass and the one staged write, each with its AQE stage jobs.
-MERGE_JOBS_UNIQUE_KEYS = 13
+# staged write of the projected source, then the one match pass
+# (per-key source counts, the live target scan joined with them, the
+# per-key first-row flag and the per-file DV task), each with its AQE
+# stage jobs.
+MERGE_JOBS_UNIQUE_KEYS = 6
 
 
 def test_merge_job_count_guard(spark, tmp_path):
@@ -518,3 +519,185 @@ def test_merge_job_count_guard(spark, tmp_path):
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert res == {"rows_matched": 10, "rows_inserted": 10}
     assert 0 < jobs <= MERGE_JOBS_UNIQUE_KEYS, jobs
+
+
+def test_merge_steady_state_job_count_and_counts(spark, tmp_path):
+    """Three overlapping unique-key merges into one table: by the
+    third, the target carries DVs and a dead copy of every key the
+    earlier merges replaced.  Each merge's counts match a python
+    oracle, and the third stays within the unique-key job guard."""
+    path = tmp_path / "t"
+    oracle = {i: (i, "ab"[i % 2]) for i in range(40)}
+    write_delta(
+        _tbl(spark, [(i, *oracle[i]) for i in range(40)]).coalesce(2),
+        path,
+    )
+    sc = spark.sparkContext
+    for k in range(3):
+        keys = range(30 + 10 * k, 50 + 10 * k)
+        rows = [(i, 1000 * (k + 1) + i, "ab"[i % 2]) for i in keys]
+        want = {
+            "rows_matched": sum(1 for i in keys if i in oracle),
+            "rows_inserted": sum(1 for i in keys if i not in oracle),
+        }
+        group = f"merge-steady-{k}-{tmp_path.name}"
+        sc.setJobGroup(group, "merge_delta steady-state guard")
+        try:
+            res = merge_delta(spark, path, _tbl(spark, rows), on=["id"])
+        finally:
+            sc.setJobGroup(None, None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert res == want, (k, res, want)
+        oracle.update({i: (v, g) for i, v, g in rows})
+    assert len(delta_snapshot(spark, path).dvs) > 0
+    assert 0 < jobs <= MERGE_JOBS_UNIQUE_KEYS, jobs
+    assert _state(spark, path) == {(i, v, g) for i, (v, g) in oracle.items()}
+
+
+def test_merge_keyed_on_partition_column(spark, tmp_path):
+    """A key column that partitions the table prunes by partition
+    values (it has no data stats): rows and counts match a python
+    oracle, including a source row whose id exists only under the
+    other partition value (an insert, not a match)."""
+    path = tmp_path / "t"
+    target = [(i, i, "ab"[i % 2]) for i in range(10)]
+    write_delta(_tbl(spark, target), path, partition_by=["grp"])
+    oracle = {(i, g): v for i, v, g in target}
+    for source in (
+        [(2, 200, "a"), (3, 300, "b"), (4, 400, "b"), (11, 110, "b")],
+        [(6, 600, "a"), (8, 800, "a"), (20, 2000, "a")],
+    ):
+        want = {
+            "rows_matched": sum(1 for i, _v, g in source if (i, g) in oracle),
+            "rows_inserted": sum(
+                1 for i, _v, g in source if (i, g) not in oracle
+            ),
+        }
+        res = merge_delta(
+            spark, path, _tbl(spark, source), on=["id", "grp"]
+        )
+        assert res == want
+        oracle.update({(i, g): v for i, v, g in source})
+        assert _state(spark, path) == {
+            (i, v, g) for (i, g), v in oracle.items()
+        }
+
+
+def test_merge_float_keys_match_nan_in_any_file(spark, tmp_path):
+    """Spark matches NaN = NaN, and a writer's stats may leave NaN
+    out, so a float key gets no stats bound: the file holding the
+    target's NaN key is scanned and its row replaced, not inserted a
+    second time."""
+    path = tmp_path / "t"
+    schema = "k double, val long"
+    write_delta(
+        spark.createDataFrame(
+            [(1.0, 1), (2.0, 2), (float("nan"), 3)], schema
+        ).coalesce(1),
+        path,
+    )
+    # the first file's stats as a writer that skips NaN records them
+    log0 = path / "_delta_log" / f"{0:020d}.json"
+    acts = [json.loads(ln) for ln in log0.read_text().splitlines()]
+    for a in acts:
+        if "add" in a:
+            a["add"]["stats"] = json.dumps(
+                {"numRecords": 3, "minValues": {"k": 1.0},
+                 "maxValues": {"k": 2.0}, "nullCount": {"k": 0}}
+            )
+    log0.write_text("".join(json.dumps(a) + "\n" for a in acts))
+    write_delta(
+        spark.createDataFrame([(100.0, 4), (101.0, 5)], schema).coalesce(1),
+        path,
+    )
+    res = merge_delta(
+        spark,
+        path,
+        spark.createDataFrame([(float("nan"), 30), (100.0, 40)], schema),
+        on=["k"],
+    )
+    assert res == {"rows_matched": 2, "rows_inserted": 0}
+    got = sorted(
+        (str(r.k), r.val) for r in read_delta(spark, path).collect()
+    )
+    assert got == [("1.0", 1), ("100.0", 40), ("101.0", 5), ("2.0", 2), ("nan", 30)]
+
+
+def _files_match_log(path: Path) -> None:
+    """Every parquet file and DV sidecar under the table is one the
+    log references (an add, a remove or a cdc action), and vice
+    versa: a merge that does not commit leaves nothing behind."""
+    from urllib.parse import unquote
+
+    from snapflow_spark.sources.deletion_vectors import _dv_sidecar_path
+
+    refs: set[str] = set()
+    sidecars: set[str] = set()
+    for f in (path / "_delta_log").glob("*.json"):
+        for ln in f.read_text().splitlines():
+            a = json.loads(ln)
+            for kind in ("add", "remove", "cdc"):
+                if kind in a:
+                    refs.add(unquote(a[kind]["path"]))
+            dv = (a.get("add") or {}).get("deletionVector")
+            if dv and dv["storageType"] == "u":
+                p = _dv_sidecar_path(path, dv["pathOrInlineDv"])
+                sidecars.add(str(p.relative_to(path)))
+    parquet = {
+        str(p.relative_to(path))
+        for p in path.rglob("*.parquet")
+        if "_delta_log" not in p.parts
+    }
+    bins = {str(p.relative_to(path)) for p in path.rglob("*.bin")}
+    assert parquet == refs
+    assert bins == sidecars
+
+
+def test_merge_multiple_match_raise_leaves_no_staged_files(spark, tmp_path):
+    """update + insert stages the projected source before the match
+    pass finds a repeated matched key; the raise removes what was
+    staged (data files and DV sidecars)."""
+    path = tmp_path / "t"
+    write_delta(_tbl(spark, [(i, i, "a") for i in range(6)]), path)
+    merge_delta(spark, path, _tbl(spark, [(1, 10, "a")]), on=["id"])
+    _files_match_log(path)  # one DV'd file already on disk
+    before = _state(spark, path)
+    with pytest.raises(ValueError, match="multiple source rows"):
+        merge_delta(
+            spark,
+            path,
+            _tbl(spark, [(2, 20, "a"), (2, 21, "a"), (3, 30, "a"), (9, 9, "b")]),
+            on=["id"],
+        )
+    _files_match_log(path)
+    assert _state(spark, path) == before
+
+
+def test_merge_txn_conflict_leaves_no_staged_files(spark, tmp_path):
+    """A concurrent writer that commits the same txn first makes the
+    merge return None without committing; its staged files and DV
+    sidecars are removed."""
+    import snapflow_spark.sources.delta as deltamod
+
+    path = tmp_path / "t"
+    write_delta(_tbl(spark, [(i, i, "a") for i in range(6)]), path)
+    # a first merge upgrades the protocol to DVs, which any later
+    # commit would otherwise conflict with first
+    merge_delta(spark, path, _tbl(spark, [(0, 0, "a")]), on=["id"])
+    src = _tbl(spark, [(2, 20, "a"), (3, 30, "a"), (9, 9, "b")])
+
+    def competing(table, v):
+        assert merge_delta(
+            spark, path, src, on=["id"], txn=("cdc", 0)
+        ) == {"rows_matched": 2, "rows_inserted": 1}
+
+    deltamod._pre_commit_hook = competing
+    try:
+        assert merge_delta(spark, path, src, on=["id"], txn=("cdc", 0)) is None
+    finally:
+        deltamod._pre_commit_hook = None
+    _files_match_log(path)
+    assert _state(spark, path) == {
+        (0, 0, "a"), (1, 1, "a"), (2, 20, "a"), (3, 30, "a"),
+        (4, 4, "a"), (5, 5, "a"), (9, 9, "b"),
+    }

@@ -108,6 +108,30 @@ def test_auto_checkpoint_interval(tmp_path):
     assert ckpts == [_fname("checkpoint-", 4), _fname("checkpoint-", 9)]
 
 
+def test_auto_checkpoint_bounds_the_log_dir(tmp_path):
+    """Each automatic checkpoint removes what the previous one covers:
+    over 3 x checkpoint_interval commits the directory never holds
+    more than two checkpoints and the commits since the older one,
+    and a fresh reader still folds every commit."""
+    interval = 5
+    tl = TableLedger(tmp_path / "log", checkpoint_interval=interval)
+    most = 0
+    for i in range(3 * interval):
+        tl.mark_consumed("n", "in", [f"s-{i}"])
+        most = max(most, len(os.listdir(tmp_path / "log")))
+    assert most <= 2 * interval + 2, most
+    names = sorted(os.listdir(tmp_path / "log"))
+    assert [n for n in names if n.startswith("checkpoint-")] == [
+        _fname("checkpoint-", 9), _fname("checkpoint-", 14)
+    ]
+    assert [n for n in names if n.startswith(_COMMIT_PREFIX)] == [
+        _fname(_COMMIT_PREFIX, v) for v in range(10, 15)
+    ]
+    want = [f"s-{i}" for i in range(3 * interval)]
+    assert tl.consumed("n", "in") == want
+    assert TableLedger(tmp_path / "log").consumed("n", "in") == want
+
+
 def test_version_race_retries_and_loses_nothing(tmp_path):
     a = TableLedger(tmp_path / "log", checkpoint_interval=0)
     b = TableLedger(tmp_path / "log", checkpoint_interval=0)

@@ -235,9 +235,10 @@ HEAVY = {
         "documents as a STANDING Delta table (cold absorbs the "
         "export, round 15): warm = merge_delta of a FRESH 500-key "
         "changelog per call (updates over one doc_id range) — the "
-        "source keys' min/max bounds prune the target file list from "
-        "log stats (touched-file discovery), the matched rows die "
-        "via the distributed DV plan, replacements land in the same "
+        "projected changelog stages first and its files' stats bound "
+        "the keys, which prune the target file list from log stats "
+        "(touched-file discovery); one match pass marks the matched "
+        "rows dead via DVs and returns every count, in the same "
         "commit; warm should stay ~flat as the corpus grows 10x"
     ),
     "op_iceberg_upsert": (
@@ -840,8 +841,9 @@ def _op_delta_merge(spark, sf_dir: str):
     """Standing Delta table + MERGE of a fresh 500-key changelog
     (round 15): the corpus exports once per sf_dir (cold absorbs
     it), then every call upserts updates over the NEXT doc_id range
-    — the source-bounds stats prune keeps the scan on the touched
-    file(s), so the warm cost tracks the changelog, not the corpus."""
+    — the key bounds from the staged changelog's stats keep the scan
+    on the touched file(s), so the warm cost tracks the changelog,
+    not the corpus."""
     import tempfile
 
     from pyspark.sql import functions as F
